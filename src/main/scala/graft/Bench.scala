@@ -1,14 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
 
-  private def mkSession(cpus: String): SparkSession = {
+  /** Cores of the local master: `SPARK_GRAFT_CPUS`, else every core
+    * the JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session of the bench, `Verify`, the soak mains, `Profile`
+    * and the test suite, so every dev number is taken under the conf
+    * the bench runs. `conf` pairs are applied last: static confs a
+    * caller needs (a warehouse dir, a join threshold) or an override
+    * of a default here (the suite's smaller `spark.master`). */
+  def mkSession(conf: (String, String)*): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet carries TIMESTAMP(NANOS); read as long nanos.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
@@ -21,9 +32,34 @@ object Bench {
       // collapses a 50 MB shuffle to one task.)
       .config("spark.hadoop.mapreduce.fileoutputcommitter" +
         ".marksuccessfuljobs", "false")
-      .getOrCreate()
+    conf.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Wall seconds of `body` — the one clock of the bench, `Profile`
+    * and the soak mains. */
+  def secs(body: => Any): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** A pass's outcome: seconds for every query that ran to the end,
+    * and the queries that threw — a failure never reads as a time. */
+  final case class Pass(times: Seq[(String, Double)], failed: Seq[String])
+
+  /** Callbacks of [[pass]], for a profiler riding on the bench's loop:
+    * `warmed` once the untimed warmup is done, `built` with each
+    * query's frame inside its timing, `done` once the query's blocks
+    * are released, outside it (`sec` is None for a failed query). */
+  trait Hooks {
+    def warmed(): Unit = ()
+    def built(name: String, df: DataFrame): Unit = ()
+    def done(name: String, sec: Option[Double]): Unit = ()
   }
 
   /** One timing pass over `names` in `spark`: untimed warmup first
@@ -32,24 +68,62 @@ object Bench {
     * query pinned — an async unpersist storm racing the next query's
     * jobs was the r03 bench's one measured pathology (q_fingerprints
     * 28-54s in-context vs 2-4s isolated), so each query starts from a
-    * settled block manager and a fresh GC. */
-  private def pass(spark: SparkSession, sfDir: String,
-                   names: Seq[String], gcBetween: Boolean)
-      : Seq[(String, Double)] = {
-    try { SparkEntry.queries("q_cdc_bronze")(spark, sfDir).count() }
-    catch { case _: Throwable => () }
+    * settled block manager and a fresh GC. A query that throws is
+    * reported on stderr and returned in `failed`. */
+  def pass(spark: SparkSession, sfDir: String, names: Seq[String],
+           gcBetween: Boolean,
+           queries: Map[String, Query] = SparkEntry.queries,
+           hooks: Hooks = new Hooks {})
+      : Pass = {
+    queries.get("q_cdc_bronze").foreach { q =>
+      try q(spark, sfDir).count()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
+    }
+    hooks.warmed()
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
-    names.map { n =>
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(n)(spark, sfDir).count() }
-      catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
+    val times = Seq.newBuilder[(String, Double)]
+    val failed = Seq.newBuilder[String]
+    names.foreach { n =>
+      val sec =
+        try Some(secs {
+          val df = queries(n)(spark, sfDir)
+          hooks.built(n, df)
+          df.count()
+        })
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $n failed: ${e.getMessage}")
+          None
+        }
       spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!baseline.contains(id)) rdd.unpersist(blocking = true)
       }
       if (gcBetween) System.gc()
-      n -> dt
+      sec match {
+        case Some(t) => times += n -> t
+        case None => failed += n
+      }
+      hooks.done(n, sec)
     }
+    Pass(times.result(), failed.result())
+  }
+
+  /** An UNTIMED warm pass of the queries themselves, then min-of-two
+    * per query; a query that failed in either timed pass is failed.
+    * The audit's JVM is deliberately fresh (no inherited aging), but a
+    * fixture-heavy query must not bill full Spark init + cold codegen
+    * + cold FS caches as plan cost — r15's audit read q_snapshot_refs
+    * 19.99 s isolated vs 5.99 s in-context through exactly that, and
+    * min-of-two inside one cold process doesn't absorb it (the first
+    * timed pass IS the cold one). */
+  private def minOfTwo(spark: SparkSession, sfDir: String,
+                       names: Seq[String], gcBetween: Boolean): Pass = {
+    pass(spark, sfDir, names, gcBetween)
+    val once = pass(spark, sfDir, names, gcBetween)
+    val twice = pass(spark, sfDir, names, gcBetween).times.toMap
+    Pass(once.times.collect {
+      case (n, t) if twice.contains(n) => n -> math.min(t, twice(n))
+    }, (once.failed ++ names.filterNot(twice.contains)).distinct)
   }
 
   /** Min-of-two re-measurement of `names` in a FORKED fresh JVM — the
@@ -96,7 +170,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val gcBetween = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "1") == "1"
     // audit mode (the forked child): min-of-two over the named
     // queries in this genuinely fresh JVM, no recursive audit
@@ -110,23 +183,10 @@ object Bench {
     val names =
       if (args.isEmpty) names0 else names0.filter(args.toSet.contains)
 
-    val spark0 = mkSession(cpus)
-    val results =
+    val spark0 = mkSession()
+    val Pass(results, failed) =
       if (!auditMode) pass(spark0, sfDir, names, gcBetween)
-      else {
-        // UNTIMED warmup of the audited queries themselves first: the
-        // child JVM is deliberately fresh (no inherited aging), but a
-        // fixture-heavy query must not bill full Spark init + cold
-        // codegen + cold FS caches as plan cost — r15's audit read
-        // q_snapshot_refs 19.99 s isolated vs 5.99 s in-context
-        // through exactly that, and min-of-two inside one cold
-        // process doesn't absorb it (the first timed pass IS the
-        // cold one). Warm, then min-of-two.
-        pass(spark0, sfDir, names, gcBetween)
-        val once = pass(spark0, sfDir, names, gcBetween).toMap
-        val twice = pass(spark0, sfDir, names, gcBetween).toMap
-        names.map(n => n -> math.min(once(n), twice(n)))
-      }
+      else minOfTwo(spark0, sfDir, names, gcBetween)
 
     // Outlier audit: any query that cost >3x the run median (and >2s
     // absolute) gets a min-of-two re-measurement in a FORKED fresh
@@ -136,7 +196,7 @@ object Bench {
     // same-JVM audit reading WORSE than in-context (it inherited the
     // aging it was meant to price). min-of-two keeps one
     // host-contention blip from reading as a slow plan.
-    val sortedTimes = results.map(_._2).filter(_ >= 0).sorted
+    val sortedTimes = results.map(_._2).sorted
     val median =
       if (sortedTimes.isEmpty) 0.0 else sortedTimes(sortedTimes.size / 2)
     val outliers =
@@ -150,11 +210,8 @@ object Bench {
       else forkedAudit(outliers).getOrElse {
         // spawn failed (exotic classpath/env): the in-process
         // fresh-session audit is still better than nothing
-        val spark1 = mkSession(cpus)
-        pass(spark1, sfDir, outliers, gcBetween) // untimed warmup
-        val once = pass(spark1, sfDir, outliers, gcBetween).toMap
-        val twice = pass(spark1, sfDir, outliers, gcBetween).toMap
-        val res = outliers.map(n => n -> math.min(once(n), twice(n)))
+        val spark1 = mkSession()
+        val res = minOfTwo(spark1, sfDir, outliers, gcBetween).times
         spark1.stop()
         res
       }
@@ -163,8 +220,9 @@ object Bench {
       kvs.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results)},"isolated":${jmap(isolated)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results)},"isolated":${jmap(isolated)},"sf":"$sfDir","failed":$failedJson}"""
     println(json)
     // Persist the full record too: the driver's captured stdout has
     // been tail-truncated two rounds running, losing per-query numbers

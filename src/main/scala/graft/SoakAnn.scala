@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN-index scale soak: at each corpus scale, time a search through
@@ -24,16 +23,7 @@ object SoakAnn {
       .getOrElse(Seq(8, 32, 128))
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.mkSession()
 
     val base = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
@@ -54,16 +44,13 @@ object SoakAnn {
         .select(col("vec_id").as("query_id"),
           col("embedding").as("q_embedding"))
         .localCheckpoint()
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      val tBuildIvfPq = timed(graft.ext.IvfPqIndex.build(spark, corpus,
+      val tBuildIvfPq = Bench.secs(graft.ext.IvfPqIndex.build(spark, corpus,
         s"$root/ivfpq", nlist, m, dsub, ksub))
-      val tBuildPq = timed(graft.ext.PqIndex.build(spark, corpus,
+      val tBuildPq = Bench.secs(graft.ext.PqIndex.build(spark, corpus,
         s"$root/pq", m, dsub, ksub))
-      val tIvfPq = timed(graft.ext.IvfPqIndex.search(spark, corpus,
+      val tIvfPq = Bench.secs(graft.ext.IvfPqIndex.search(spark, corpus,
         s"$root/ivfpq", queries, 5, nprobe, 40).count())
-      val tPq = timed(graft.ext.PqIndex.search(spark, corpus,
+      val tPq = Bench.secs(graft.ext.PqIndex.search(spark, corpus,
         s"$root/pq", queries, 5, 40).count())
       s""""x$mult":{"rows":$rows,"ivfpq_search_sec":$tIvfPq,""" +
         s""""pq_search_sec":$tPq,"ivfpq_build_sec":$tBuildIvfPq,""" +

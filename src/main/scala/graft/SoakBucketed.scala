@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Storage-partitioned-join soak: at each table scale, time a LARGE
@@ -33,18 +32,9 @@ object SoakBucketed {
       .getOrElse(Seq(1, 4, 16))
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.graft.merge.checkCardinality", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.mkSession(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.graft.merge.checkCardinality" -> "false")
     val store = new graft.catalog.TableStore(spark)
 
     // a realistic row width (a deterministic ~128-byte payload): the
@@ -67,7 +57,7 @@ object SoakBucketed {
       // parallelism while saving the exchange (at cluster scale you
       // size buckets to the executor count for the same reason)
       graft.pipeline.Snapshot.setPartitionSpec(bDir,
-        Seq(s"bucket($cpus,o_orderkey)"))
+        Seq(s"bucket(${Bench.cpus},o_orderkey)"))
       graft.pipeline.Snapshot.createOrReplaceCurrentSpec(scaled, bDir,
         keepVersions = 2)
       graft.pipeline.Snapshot.createOrReplace(scaled, pDir,
@@ -87,14 +77,11 @@ object SoakBucketed {
           .withColumn("o_orderkey", col("o_orderkey") + 9000000000L))
         .localCheckpoint()
       batch.createOrReplaceTempView("soakb_batch")
-      def timedMerge(t: String): Double = {
-        val t0 = System.nanoTime()
+      def timedMerge(t: String): Double = Bench.secs(
         spark.sql(s"""MERGE INTO soakb.$t x USING soakb_batch s
           ON x.o_orderkey = s.o_orderkey
           WHEN MATCHED THEN UPDATE SET *
-          WHEN NOT MATCHED THEN INSERT *""")
-        (System.nanoTime() - t0) / 1e9
-      }
+          WHEN NOT MATCHED THEN INSERT *"""))
       // plain first: the first timed statement of a scale absorbs any
       // residual JIT/page-cache warmup, and it must not be charged to
       // the layout under test

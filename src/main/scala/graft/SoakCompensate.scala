@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stale-serve compensation soak: at each fact scale, time the
@@ -27,16 +26,7 @@ object SoakCompensate {
       .getOrElse(Seq(1, 8, 32))
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.mkSession()
     val S = graft.pipeline.Snapshot
 
     val baseFact = Tables.orders(spark, sfDir)
@@ -68,14 +58,10 @@ object SoakCompensate {
           AS sum_price,
         min(o_totalprice) AS mn, max(o_totalprice) AS mx
         FROM $ns.orders GROUP BY o_custkey"""
-      def time(body: => Unit): Double = {
-        val t0 = System.nanoTime(); body
-        (System.nanoTime() - t0) / 1e9
-      }
       // (a) the rewrite-off base aggregate — what a fresh-only gate
       // pays after every commit
       spark.conf.set("spark.graft.rollup.rewrite.enabled", "false")
-      val tBase = try time(spark.sql(q).collect())
+      val tBase = try Bench.secs(spark.sql(q).collect())
       finally spark.conf
         .set("spark.graft.rollup.rewrite.enabled", "true")
       // (b) signed-arm compensation over an unrefreshed 5k append
@@ -84,8 +70,8 @@ object SoakCompensate {
         .localCheckpoint()
       S.morCommit(spark, fact, deletes = None,
         appends = Some(appendWave), operation = "append")
-      val tAppFirst = time(spark.sql(q).collect())
-      val tAppWarm = time(spark.sql(q).collect())
+      val tAppFirst = Bench.secs(spark.sql(q).collect())
+      val tAppWarm = Bench.secs(spark.sql(q).collect())
       // (c) affected-group compensation over an unrefreshed equality
       // MERGE window (fixed 1k-delete + 1k-append)
       // the eq wave touches ≤500 of the ~15k customer groups — the
@@ -95,8 +81,8 @@ object SoakCompensate {
       S.morCommit(spark, fact, deletes = Some(eqWave),
         appends = Some(eqWave.withColumn("o_totalprice",
           col("o_totalprice") + 1.0)), operation = "merge")
-      val tEqFirst = time(spark.sql(q).collect())
-      val tEqWarm = time(spark.sql(q).collect())
+      val tEqFirst = Bench.secs(spark.sql(q).collect())
+      val tEqWarm = Bench.secs(spark.sql(q).collect())
       // CLUSTERED twin for the eq arm: with the fact sort-clustered
       // on the group key (the 100-TB star layout), the recompute's
       // IN-pushed touched-key filter prunes to the FILES holding
@@ -117,8 +103,8 @@ object SoakCompensate {
       S.morCommit(spark, fact2, deletes = Some(eqWave2),
         appends = Some(eqWave2.withColumn("o_totalprice",
           col("o_totalprice") + 1.0)), operation = "merge")
-      val tEqClFirst = time(spark.sql(q2).collect())
-      val tEqClWarm = time(spark.sql(q2).collect())
+      val tEqClFirst = Bench.secs(spark.sql(q2).collect())
+      val tEqClWarm = Bench.secs(spark.sql(q2).collect())
       // (d) DIM-window affected-group compensation (r19): a star
       // store keyed on a DIM attribute (5k seg_id groups); one
       // unrefreshed dim MERGE re-segments 500 customers — the serve
@@ -153,8 +139,8 @@ object SoakCompensate {
         appends = Some(seg0.withColumn("seg_id",
           pmod(col("seg_id") + 1, lit(5000L)))),
         operation = "merge")
-      val tDimFirst = time(spark.sql(q3).collect())
-      val tDimWarm = time(spark.sql(q3).collect())
+      val tDimFirst = Bench.secs(spark.sql(q3).collect())
+      val tDimWarm = Bench.secs(spark.sql(q3).collect())
       // (e) HOT eq window (r19): >4096 touched groups — past the
       // IN-literal budget the bloom pattern (superset prune + exact
       // confirm) keeps the serve on the store instead of falling to
@@ -167,8 +153,8 @@ object SoakCompensate {
       S.morCommit(spark, fact, deletes = Some(hotWave),
         appends = Some(hotWave.withColumn("o_totalprice",
           col("o_totalprice") + 1.0)), operation = "merge")
-      val tHotFirst = time(spark.sql(q).collect())
-      val tHotWarm = time(spark.sql(q).collect())
+      val tHotFirst = Bench.secs(spark.sql(q).collect())
+      val tHotWarm = Bench.secs(spark.sql(q).collect())
       ts.dropTable(ns3, "gold"); ts.dropTable(ns3, "orders")
       ts.dropTable(ns3, "dim")
       ts.dropTable(ns2, "gold"); ts.dropTable(ns2, "orders")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the event-analytics family added in r11's third
@@ -20,16 +19,7 @@ object SoakEvents {
       .getOrElse(Seq(1, 4, 16))
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.mkSession()
 
     val base = Tables.events(spark, sfDir)
       .select("event_id", "user_id", "event_type", "ts", "value")
@@ -47,14 +37,9 @@ object SoakEvents {
         .repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint()
       val n = ev.count()
-      def timed(body: => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        body.count()
-        (System.nanoTime() - t0) / 1e9
-      }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id")
-      val tFunnel = timed {
+      val tFunnel = Bench.secs {
         ev.select(col("user_id"), col("event_type"),
             expr("ts div 1000").as("ts_us"))
           .withColumn("t1", min(when(col("event_type") === "view",
@@ -65,8 +50,9 @@ object SoakEvents {
             col("ts_us") > col("t2"), col("ts_us"))).over(w))
           .groupBy("user_id")
           .agg(max("t1").as("t1"), max("t2").as("t2"), max("t3").as("t3"))
+          .count()
       }
-      val tRetention = timed {
+      val tRetention = Bench.secs {
         val e = ev.select(col("user_id"),
           expr("ts div 86400000000000 div 7").as("week"),
           col("event_type"))
@@ -78,11 +64,12 @@ object SoakEvents {
           .filter(col("offset_weeks") >= 0)
           .groupBy("cohort_week", "offset_weeks")
           .agg(countDistinct("user_id").as("active_users"))
+          .count()
       }
       val ws = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type").orderBy("ts_us")
         .rangeBetween(-3600000000L, 0L)
-      val tSliding = timed {
+      val tSliding = Bench.secs {
         // reduce THROUGH the window output — a bare count would let
         // the optimizer prune the unused Window node entirely
         ev.select(col("event_id"), col("event_type"),
@@ -90,13 +77,14 @@ object SoakEvents {
           .withColumn("hour_sum",
             sum(round(col("value") * 100).cast("long")).over(ws))
           .agg(max("hour_sum"))
+          .count()
       }
-      val tResample = timed {
+      val tResample = Bench.secs {
         graft.ext.Resample.interpolate(
           ev.select(col("event_type"), expr("ts div 1000").as("ts_us"),
             col("value"), col("event_id")),
           Seq("event_type"), "ts_us", "value", "event_id",
-          stepMicros = 21600000000L)
+          stepMicros = 21600000000L).count()
       }
       s""""x$mult":{"events":$n,"funnel_sec":$tFunnel,""" +
         s""""retention_sec":$tRetention,"sliding_sec":$tSliding,""" +

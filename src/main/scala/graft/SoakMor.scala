@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Write-cost soak for merge-on-read DML: at each table scale, time a
@@ -21,16 +20,7 @@ object SoakMor {
       .getOrElse(Seq(1, 4, 16))
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.mkSession()
     val store = new graft.catalog.TableStore(spark)
 
     val base = Tables.orders(spark, sfDir)
@@ -53,24 +43,18 @@ object SoakMor {
       spark.sql(s"""ALTER TABLE soakmor.m$mult SET TBLPROPERTIES(
         'write.delete.mode'='merge-on-read')""")
       val rows = scaled.count()
-      def timed(sql: String): Double = {
-        val t0 = System.nanoTime()
-        spark.sql(sql)
-        (System.nanoTime() - t0) / 1e9
-      }
-      val tMor = timed(
-        s"DELETE FROM soakmor.m$mult WHERE o_orderkey = 42")
-      val tCow = timed(
-        s"DELETE FROM soakmor.c$mult WHERE o_orderkey = 42")
+      val tMor = Bench.secs(
+        spark.sql(s"DELETE FROM soakmor.m$mult WHERE o_orderkey = 42"))
+      val tCow = Bench.secs(
+        spark.sql(s"DELETE FROM soakmor.c$mult WHERE o_orderkey = 42"))
       // sanity: both tables agree after the delete
       require(spark.sql(s"SELECT count(*) FROM soakmor.m$mult")
         .head().getLong(0) ==
         spark.sql(s"SELECT count(*) FROM soakmor.c$mult")
           .head().getLong(0), "MOR and CoW deletes must agree")
       // MOR read-back cost after the sidecar commit (the merge tax)
-      val t0 = System.nanoTime()
-      spark.sql(s"SELECT count(*) FROM soakmor.m$mult").collect()
-      val tRead = (System.nanoTime() - t0) / 1e9
+      val tRead = Bench.secs(
+        spark.sql(s"SELECT count(*) FROM soakmor.m$mult").collect())
       s""""x$mult":{"rows":$rows,"mor_delete_sec":$tMor,""" +
         s""""cow_delete_sec":$tCow,"mor_read_sec":$tRead}"""
     }
@@ -93,18 +77,16 @@ object SoakMor {
       spark.sql(s"DELETE FROM soakmor.stack WHERE o_orderkey = $i")
       if (!checkpoints(i)) None
       else {
-        val t0 = System.nanoTime()
-        spark.sql("SELECT count(*) FROM soakmor.stack").collect()
-        Some(s""""d$i":${(System.nanoTime() - t0) / 1e9}""")
+        val t = Bench.secs(
+          spark.sql("SELECT count(*) FROM soakmor.stack").collect())
+        Some(s""""d$i":$t""")
       }
     }
-    val t0 = System.nanoTime()
-    spark.sql("CALL iceberg.system.rewrite_position_delete_files(" +
-      "table => 'soakmor.stack')")
-    val tCompact = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    spark.sql("SELECT count(*) FROM soakmor.stack").collect()
-    val tAfter = (System.nanoTime() - t1) / 1e9
+    val tCompact = Bench.secs(spark.sql(
+      "CALL iceberg.system.rewrite_position_delete_files(" +
+        "table => 'soakmor.stack')"))
+    val tAfter = Bench.secs(
+      spark.sql("SELECT count(*) FROM soakmor.stack").collect())
     println(s"""{"soak":"mor_read_amplification",""" +
       s"""${curve.mkString(",")},"compact_sec":$tCompact,""" +
       s""""read_after_compact_sec":$tAfter}""")
@@ -131,9 +113,8 @@ object SoakMor {
       if (graft.pipeline.Snapshot.morVersions(adir).size < stacked)
         compactions += 1
       if (i % 25 == 24) { // 24 commits stacked: the worst read
-        val t0 = System.nanoTime()
-        spark.sql("SELECT count(*) FROM soakmor.auto").collect()
-        worstRead = math.max(worstRead, (System.nanoTime() - t0) / 1e9)
+        worstRead = math.max(worstRead, Bench.secs(
+          spark.sql("SELECT count(*) FROM soakmor.auto").collect()))
       }
     }
     require(spark.sql("SELECT count(*) FROM soakmor.auto")

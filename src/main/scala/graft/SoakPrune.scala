@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scan-planning soak: at each table scale, time a selective range
@@ -24,25 +23,15 @@ object SoakPrune {
       .getOrElse(Seq(1, 4, 16))
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.mkSession()
     import graft.pipeline.{ScanPruning, Snapshot}
 
     val base = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
 
     def timed(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
+      var n = 0L
+      (Bench.secs { n = f }, n)
     }
 
     val out = mults.map { mult =>

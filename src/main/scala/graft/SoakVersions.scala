@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Version-count soak for the snapshot metadata surface: commit N
   * versions of a small table (keepVersions = N, nothing pruned) and
@@ -31,15 +30,7 @@ import org.apache.spark.sql.SparkSession
 object SoakVersions {
   def main(args: Array[String]): Unit = {
     val maxV = args.headOption.map(_.toInt).getOrElse(1000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.mkSession()
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("soakv")
@@ -52,40 +43,37 @@ object SoakVersions {
       .coalesce(1).localCheckpoint()
 
     val checkpoints = Seq(10, 100, 250, 500, 1000).filter(_ <= maxV)
-    def secs(f: => Any): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
 
     var committed = 0
     val out = checkpoints.map { cp =>
       // commit up to cp versions, timing the tail commit at each level
       var lastCommit = 0.0
       while (committed < cp) {
-        lastCommit = secs {
+        lastCommit = Bench.secs {
           graft.pipeline.Snapshot.createOrReplace(df, dir,
             keepVersions = maxV)
         }
         committed += 1
       }
-      val ancestors = secs {
+      val ancestors = Bench.secs {
         val n = spark.sql(
           "CALL iceberg.system.ancestors_of(table => 'soak.t')").count()
         require(n == cp, s"ancestors_of: $n rows at $cp versions")
       }
-      val metaLog = secs {
+      val metaLog = Bench.secs {
         val n = spark.sql(
           "SELECT * FROM soak.t.metadata_log_entries").count()
         require(n == cp, s"metadata_log_entries: $n rows at $cp versions")
       }
-      val history = secs {
+      val history = Bench.secs {
         require(spark.sql("SELECT * FROM soak.t.history").count() == cp)
       }
-      val committedAtAll = secs {
+      val committedAtAll = Bench.secs {
         (1 to cp).foreach(v =>
           require(graft.pipeline.Snapshot
             .committedAt(dir, v.toLong).nonEmpty))
       }
-      val travel = secs {
+      val travel = Bench.secs {
         require(graft.pipeline.Snapshot
           .readAsOf(spark, dir, (cp / 2).max(1).toLong).count() == 100)
       }

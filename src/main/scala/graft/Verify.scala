@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     // Optional trailing args: run only these queries (dev iteration);
     // the driver always passes exactly two args → full run.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); read as long nanos.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // keep Verify's session identical to Bench's (r19 session conf
-      // notes in Bench.mkSession)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter" +
-        ".marksuccessfuljobs", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.mkSession()
     new java.io.File(outDir).mkdirs()
     // Materialize the shared bronze fixture BEFORE the baseline
     // snapshot, then release each query's own localCheckpoint blocks —

@@ -81,8 +81,6 @@ object GraftMetaTables {
           val verDirs =
             graft.pipeline.Snapshot.retainedVersionDirs(path)
           val versions = verDirs.map(_._1)
-          def dirOf(v: Long): String =
-            verDirs.collectFirst { case (vv, d) if vv == v => d }.get
           val plan: DataFrame = meta match {
             case "history" =>
               // every column is driver-known (version, currency, the

@@ -270,9 +270,6 @@ class TableStore(val spark: SparkSession) {
     TableStore.persist(spark)
   }
 
-  def pendingPartitionSpec(ns: String, name: String): Seq[String] =
-    st.pendingSpecs.getOrElse(key(ns, name), Seq.empty)
-
   def snapshotPath(ns: String, name: String): Option[String] =
     st.snapshotPaths.get(key(ns, name))
 

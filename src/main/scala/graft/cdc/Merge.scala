@@ -84,13 +84,4 @@ object Merge {
         when(matchedOrInserted, col(s"s_$c")).otherwise(col(s"t_$c")).as(c)
       }: _*)
   }
-
-  /** Fold a sequence of micro-batches (already in order) into a target,
-    * LWW-deduping each batch first — the incremental pipeline of
-    * `merge_orders_silver.py` run N times. */
-  def applyBatches(target: DataFrame, batches: Seq[DataFrame],
-                   keys: Seq[String], ordering: Seq[String]): DataFrame =
-    batches.foldLeft(target) { (t, b) =>
-      mergeCdc(t, Dedup.latestByKey(b, keys, ordering), keys)
-    }
 }

@@ -205,7 +205,7 @@ object TextIndex {
     val version = corpusVersionOf(corpusPath)
     // tokenize+explode+partial-agg is the build's CPU-heavy map stage
     // and a small corpus snapshot arrives in 1-3 splits — r20
-    // JobTrace: the postings exchange's map stage ran 1.39 s on ONE
+    // per-job trace: the postings exchange's map stage ran 1.39 s on ONE
     // task of 32. Widen when the size estimate says the scan is
     // narrow; a big corpus passes through untouched (guide §2.5).
     val corpus = Spread.widen(Snapshot.read(spark, corpusPath))

@@ -17,13 +17,9 @@ private[graft] object Par {
       t.setDaemon(true); t
     })
 
-  /** Kill switch for A/B measurement (SPARK_GRAFT_PAR=0 → run
-    * everything sequentially on the caller thread). */
-  private val enabled = sys.env.getOrElse("SPARK_GRAFT_PAR", "1") == "1"
-
   def all(thunks: Seq[() => Unit]): Unit = {
     if (thunks.isEmpty) return
-    if (!enabled || thunks.size == 1) { thunks.foreach(_.apply()); return }
+    if (thunks.size == 1) { thunks.head.apply(); return }
     val flag = Rollup.maintaining.get()
     val futures = thunks.tail.map { th =>
       pool.submit(new java.util.concurrent.Callable[Unit] {
@@ -49,7 +45,6 @@ private[graft] object Par {
   }
 
   def both[A, B](a: => A, b: => B): (A, B) = {
-    if (!enabled) { val ra = a; return (ra, b) }
     val flag = Rollup.maintaining.get()
     val fb = pool.submit(new java.util.concurrent.Callable[B] {
       def call(): B = {

@@ -735,10 +735,11 @@ object Snapshot {
     * the r19/r20 microbenches price at ~260-310 ms PER WRITE JOB) is
     * written as one parquet file straight from the driver through
     * Spark's own ParquetFileFormat writer: identical bytes-on-disk
-    * semantics, no job. Scale-guarded twice (plan-size gate + bounded
-    * take) in [[org.apache.spark.sql.graft.LocalParquet]]; a frame
-    * that fails either guard takes the distributed write below,
-    * unchanged. */
+    * semantics, no job. Scale-guarded in
+    * [[org.apache.spark.sql.graft.LocalParquet]]: the plan-size
+    * estimate gates one unbounded collect, and the row and byte caps
+    * are checked after it; a frame that fails the gate or a cap takes
+    * the distributed write below, unchanged. */
   private[graft] def writeParquetTiny(df: DataFrame, dir: Path): Unit =
     if (!org.apache.spark.sql.graft.LocalParquet.tryWrite(df, dir))
       df.write.mode(SaveMode.Overwrite).parquet(dir.toString)

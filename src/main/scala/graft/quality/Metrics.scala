@@ -17,19 +17,6 @@ object Metrics {
   private def ratio(num: Column, den: Column): Column =
     num.cast(DoubleType) / den.cast(DoubleType)
 
-  /** Silver-table health: row count, null rate per key column, negative
-    * amounts, duplicate keys. */
-  def silverMetrics(silver: DataFrame): DataFrame = {
-    val agg = silver.agg(
-      count(lit(1)).as("n_rows"),
-      count(when(col("user_id").isNull, 1)).as("null_user"),
-      count(when(col("amount_eur").isNull, 1)).as("null_amount"),
-      count(when(col("amount_eur") < 0, 1)).as("negative_amount"),
-      (count(lit(1)) - countDistinct(col("order_id"))).as("dup_orders"))
-    explodeMetrics(agg, Seq("n_rows", "null_user", "null_amount",
-      "negative_amount", "dup_orders"))
-  }
-
   /** Document-corpus health for a training pipeline: empty docs, short
     * docs, oversized docs, exact-dup texts, language skew. */
   def documentMetrics(docs: DataFrame): DataFrame = {

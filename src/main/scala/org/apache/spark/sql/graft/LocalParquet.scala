@@ -27,10 +27,14 @@ import org.apache.spark.sql.types.StructType
   * SCALE GUARDS (this must never collapse a real table write to the
   * driver): [[tryWrite]] first consults the optimizer's size
   * estimate and bails to the caller's distributed write above
-  * `gateBytes`; under it, the rows are fetched with a BOUNDED
-  * `executeTake(maxRows + 1)` and the tiny path is abandoned the
-  * moment the bound overflows. Both knobs are session-configurable
-  * (`spark.graft.write.tiny.max-rows`, 0 disables). Every byte is
+  * `gateBytes`; under it, the rows are fetched with ONE unbounded
+  * `executeCollect`, and the tiny path is abandoned after the collect
+  * when the rows exceed `maxRows` or their bytes exceed 4 × the gate.
+  * The estimate gate is therefore the only bound on what the collect
+  * pulls to the driver: an estimate that lies low is not caught until
+  * the rows are already in driver memory. Both knobs are
+  * session-configurable (`spark.graft.write.tiny.max-rows`, 0
+  * disables; `spark.graft.write.tiny.gate-bytes`). Every byte is
   * still computed from the inputs on every call — this changes WHERE
   * the parquet encoder runs, never what is written.
   */
@@ -79,12 +83,6 @@ object LocalParquet {
     write(df, rows, dir)
     true
   }
-
-  /** The caller-asserted variant: the frame is KNOWN tiny (a 1-row
-    * stats literal, a bounded-cardinality component) — collect it
-    * whole and write, no gate, no probe. */
-  def writeKnownTiny(df: DataFrame, dir: Path): Unit =
-    write(df, df.queryExecution.executedPlan.executeCollect(), dir)
 
   private def write(df: DataFrame, rows: Array[InternalRow],
                     dir: Path): Unit = {

@@ -10,21 +10,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) — same setting as
-      // Verify/Bench so suites can read the fixture tables.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // managed-table home for the bucketed-layout suites
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse-${java.util.UUID.randomUUID()}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The bench's session ([[Bench.mkSession]]) on two cores. */
+  lazy val session: SparkSession = Bench.mkSession(
+    "spark.master" -> "local[2]",
+    "spark.sql.shuffle.partitions" -> "2",
+    // managed-table home for the bucketed-layout suites
+    "spark.sql.warehouse.dir" ->
+      s"/tmp/graft-warehouse-${java.util.UUID.randomUUID()}")
 }
