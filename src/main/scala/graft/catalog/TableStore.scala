@@ -460,10 +460,9 @@ object TableStore {
     java.nio.file.Files.createDirectories(p)
     st.catalogDir = Some(p)
     val f = p.resolve("catalog.json")
-    if (java.nio.file.Files.exists(f)) {
+    graft.pipeline.FsCommit.read(f).foreach { json =>
       st.loading = true
-      try loadInto(s, new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8))
+      try loadInto(s, json)
       finally st.loading = false
     }
     persist(s)
@@ -581,12 +580,7 @@ object TableStore {
             .asJava)
         val json = new com.fasterxml.jackson.databind.ObjectMapper()
           .writerWithDefaultPrettyPrinter().writeValueAsString(root)
-        val tmp = p.resolve("catalog.json.tmp")
-        java.nio.file.Files.write(tmp,
-          json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, p.resolve("catalog.json"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        graft.pipeline.FsCommit.replace(p.resolve("catalog.json"), json)
       }
     }
   }

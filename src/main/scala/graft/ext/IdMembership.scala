@@ -1,12 +1,12 @@
 package graft.ext
 
-import graft.pipeline.Snapshot
+import graft.pipeline.{FsCommit, Snapshot}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 
 /** Commit-maintained id-membership structure for a snapshot table —
   * the O(batch) overlap guard of the streaming maintenance loops
@@ -336,8 +336,6 @@ object IdMembership {
     * (approxItems, byte length, bloom bytes). The stamp is the table
     * version whose full id set the sharded bloom is a superset of. */
   private def persist(tableDir: String, s: State): Unit = {
-    val f = sidecar(tableDir)
-    val tmp = Paths.get(s"$f.tmp")
     val total = 32 + s.shards.map(16 + _.length).sum
     val buf = java.nio.ByteBuffer.allocate(total)
     buf.putLong(Magic).putLong(s.version)
@@ -345,17 +343,15 @@ object IdMembership {
     s.approxItems.zip(s.shards).foreach { case (n, b) =>
       buf.putLong(n).putLong(b.length.toLong).put(b)
     }
-    Files.write(tmp, buf.array())
-    Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    FsCommit.replace(sidecar(tableDir), buf.array())
     cache.put(tableDir, s)
   }
 
   private def load(tableDir: String): Option[State] = {
-    val f = sidecar(tableDir)
-    if (!Files.exists(f)) None
+    val read = FsCommit.readBytes(sidecar(tableDir))
+    if (read.isEmpty) None
     else {
-      val bytes = Files.readAllBytes(f)
+      val bytes = read.get
       if (bytes.length <= 24) None // torn/empty → rebuild
       else {
         val buf = java.nio.ByteBuffer.wrap(bytes)

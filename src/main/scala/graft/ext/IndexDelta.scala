@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.pipeline.Snapshot
+import graft.pipeline.{FsCommit, Snapshot}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,6 +39,31 @@ private[graft] object IndexDelta {
     * wrong neighbors). Indexes persisted before tokens carry none on
     * any component — equally coherent. */
   private[graft] val BuildTokenFile = "_graft_index_build"
+
+  /** The whitespace-separated fields of an index's meta `file`; None
+    * when the index was never built. A count other than `fields` is
+    * an index persisted by an older format — raise, asking for a
+    * rebuild. */
+  def readMeta(indexDir: String, file: String, kind: String,
+               fields: Int): Option[Array[String]] =
+    FsCommit.read(Paths.get(indexDir, file)).map { text =>
+      val p = text.trim.split("\\s+")
+      if (p.length != fields) throw new IllegalStateException(
+        s"$kind index meta at $indexDir has ${p.length} fields (this " +
+          s"version writes $fields) — an index persisted by an older " +
+          "format; rebuild it")
+      p
+    }
+
+  /** Atomically write an index's meta `file`: the fields of `meta` in
+    * declaration order, space-separated (booleans as 1/0). */
+  def writeMeta(indexDir: String, file: String, meta: Product): Unit = {
+    Files.createDirectories(Paths.get(indexDir))
+    FsCommit.replace(Paths.get(indexDir, file), meta.productIterator.map {
+      case b: Boolean => if (b) "1" else "0"
+      case v => v.toString
+    }.mkString("", " ", "\n"))
+  }
 
   private[graft] def newBuildToken(): String =
     java.util.UUID.randomUUID().toString

@@ -4,7 +4,6 @@ import graft.pipeline.Snapshot
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** PERSISTED IVF index — the cell-clustered sibling of [[PqIndex]],
   * with the one property a derived-per-query IVF can never have: the
@@ -44,31 +43,11 @@ object IvfIndex {
 
   def centroidsDir(indexDir: String): String = s"$indexDir/centroids"
   def cellsDir(indexDir: String): String = s"$indexDir/cells"
-  private def metaFile(indexDir: String) =
-    Paths.get(indexDir, "_ivf_meta")
+  private val MetaFile = "_ivf_meta"
 
-  def meta(indexDir: String): Option[Meta] = {
-    val f = metaFile(indexDir)
-    if (!Files.exists(f)) None
-    else {
-      val p = new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
-      if (p.length != 3) throw new IllegalStateException(
-        s"IVF index meta at $indexDir has ${p.length} fields (this " +
-          "version writes 3) — an index persisted by an older format; " +
-          "rebuild it")
-      Some(Meta(p(0).toLong, p(1).toLong, p(2).toInt))
-    }
-  }
-
-  private def writeMeta(indexDir: String, m: Meta): Unit = {
-    Files.createDirectories(Paths.get(indexDir))
-    val tmp = Paths.get(indexDir, "_ivf_meta.tmp")
-    Files.write(tmp, s"${m.corpusVersion} ${m.cellsVersion} ${m.nlist}\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, metaFile(indexDir),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
+  def meta(indexDir: String): Option[Meta] =
+    IndexDelta.readMeta(indexDir, MetaFile, "IVF", 3)
+      .map(p => Meta(p(0).toLong, p(1).toLong, p(2).toInt))
 
   private def corpusVersionOf(corpusPath: String): Long =
     Snapshot.currentVersion(corpusPath).getOrElse(
@@ -112,7 +91,7 @@ object IvfIndex {
         SimilarityOps.assignCentroids(corpus, centroids, 1),
         cellsDir(indexDir), Seq("centroid_id"), keepVersions = 1,
         metaName = Some(IndexDelta.BuildTokenFile), metaContent = token))
-    writeMeta(indexDir, Meta(version,
+    IndexDelta.writeMeta(indexDir, MetaFile, Meta(version,
       Snapshot.currentVersion(cellsDir(indexDir)).getOrElse(0L), nlist))
     // row count from the freshly written (sidecar-free) cells
     // fragments' parquet footers — no read+count job (r19)
@@ -139,8 +118,8 @@ object IvfIndex {
       SimilarityOps.assignCentroids(delta, centroids, 1)
         .withColumn("centroid_id", col("centroid_id").cast("long"))
     }
-    writeMeta(indexDir, im.copy(corpusVersion = version,
-      cellsVersion =
+    IndexDelta.writeMeta(indexDir, MetaFile,
+      im.copy(corpusVersion = version, cellsVersion =
         Snapshot.currentVersion(cellsDir(indexDir)).getOrElse(0L)))
     n
   }

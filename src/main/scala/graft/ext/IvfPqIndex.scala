@@ -4,7 +4,6 @@ import graft.pipeline.Snapshot
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** IVF-PQ — the classic IVFADC composition [Jégou, Douze, Schmid,
   * TPAMI 2011] over BOTH persisted-index layers: the corpus clusters
@@ -58,34 +57,12 @@ object IvfPqIndex {
   def centroidsDir(indexDir: String): String = s"$indexDir/centroids"
   def codebookDir(indexDir: String): String = s"$indexDir/codebook"
   def cellsDir(indexDir: String): String = s"$indexDir/cells"
-  private def metaFile(indexDir: String) =
-    Paths.get(indexDir, "_ivfpq_meta")
+  private val MetaFile = "_ivfpq_meta"
 
-  def meta(indexDir: String): Option[Meta] = {
-    val f = metaFile(indexDir)
-    if (!Files.exists(f)) None
-    else {
-      val p = new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
-      if (p.length != 7) throw new IllegalStateException(
-        s"IVF-PQ index meta at $indexDir has ${p.length} fields (this " +
-          "version writes 7) — an index persisted by an older format; " +
-          "rebuild it")
-      Some(Meta(p(0).toLong, p(1).toLong, p(2).toInt, p(3).toInt,
+  def meta(indexDir: String): Option[Meta] =
+    IndexDelta.readMeta(indexDir, MetaFile, "IVF-PQ", 7)
+      .map(p => Meta(p(0).toLong, p(1).toLong, p(2).toInt, p(3).toInt,
         p(4).toInt, p(5).toInt, p(6) == "1"))
-    }
-  }
-
-  private def writeMeta(indexDir: String, m: Meta): Unit = {
-    Files.createDirectories(Paths.get(indexDir))
-    val tmp = Paths.get(indexDir, "_ivfpq_meta.tmp")
-    Files.write(tmp,
-      (s"${m.corpusVersion} ${m.cellsVersion} ${m.nlist} ${m.m} " +
-        s"${m.dsub} ${m.ksub} ${if (m.residual) "1" else "0"}\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, metaFile(indexDir),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
 
   private def corpusVersionOf(corpusPath: String): Long =
     Snapshot.currentVersion(corpusPath).getOrElse(
@@ -182,7 +159,7 @@ object IvfPqIndex {
           residual),
         cellsDir(indexDir), Seq("centroid_id"), keepVersions = 1,
         metaName = Some(IndexDelta.BuildTokenFile), metaContent = token)))
-    writeMeta(indexDir, Meta(version,
+    IndexDelta.writeMeta(indexDir, MetaFile, Meta(version,
       Snapshot.currentVersion(cellsDir(indexDir)).getOrElse(0L),
       nlist, m, dsub, ksub, residual))
     // row count from the freshly written (sidecar-free) cells
@@ -212,8 +189,8 @@ object IvfPqIndex {
       assignAndEncode(spark, delta, centroids, book,
         im.m, im.dsub, im.residual)
     }
-    writeMeta(indexDir, im.copy(corpusVersion = version,
-      cellsVersion =
+    IndexDelta.writeMeta(indexDir, MetaFile,
+      im.copy(corpusVersion = version, cellsVersion =
         Snapshot.currentVersion(cellsDir(indexDir)).getOrElse(0L)))
     n
   }

@@ -149,30 +149,15 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Widen the id column to the session's parallelism before a HEAVY
-    * codec kernel — only when the scan arrived narrower (the docs
-    * table lands in 1-3 parquet splits at test scale, which would run
-    * the render/decode batch on as many cores; r19 profile: 3 tasks
-    * carrying the whole query). Never shrinks: a many-split table at
-    * production scale passes through untouched — no shuffle, no
-    * collapse of a wide scan to the local core count (r19 applied the
-    * repartition unconditionally, which both regressed the cheap
-    * audio kernel locally and would have collapsed + fully shuffled a
-    * large table at 100 TB). Only the 8-byte ids ever shuffle;
-    * payloads are generated — and decoded — partition-local. */
-  private def widenIds(ids: org.apache.spark.sql.Dataset[Long])
-      : org.apache.spark.sql.Dataset[Long] = {
-    val par = ids.sparkSession.sparkContext.defaultParallelism
-    if (ids.rdd.getNumPartitions < par) ids.repartition(par) else ids
-  }
-
   /** Media table with REAL PNG payloads, rendered per-partition (the
     * encoder initializes per batch like any codec). Same metadata
     * struct as [[mediaTable]]. */
   def imageTable(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    widenIds(docs.select(col(idCol).cast(LongType)).as[Long])
+    // only the 8-byte ids shuffle when widened; payloads are
+    // generated — and decoded — partition-local
+    Spread.widen(docs.select(col(idCol).cast(LongType))).as[Long]
       .mapPartitions { ids =>
         ids.map { id => (id, renderPng(id)) }
       }
@@ -273,7 +258,7 @@ object Multimodal {
     require(frames > 0, s"frames must be positive: $frames")
     val spark = docs.sparkSession
     import spark.implicits._
-    widenIds(docs.select(col(idCol).cast(LongType)).as[Long])
+    Spread.widen(docs.select(col(idCol).cast(LongType))).as[Long]
       .mapPartitions { ids =>
         ids.map { id =>
           val bos = new java.io.ByteArrayOutputStream()
@@ -529,7 +514,7 @@ object Multimodal {
   def rampImageTable(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    widenIds(docs.select(col(idCol).cast(LongType)).as[Long])
+    Spread.widen(docs.select(col(idCol).cast(LongType))).as[Long]
       .flatMap { id =>
         val twins =
           (if (id % 50 == 0) Seq(id + RampBrightTwin) else Nil) ++

@@ -3,7 +3,6 @@ package graft.ext
 import graft.pipeline.Snapshot
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** PERSISTED ANN index lifecycle over the PQ family — build once,
   * query many, re-encode only the delta. The r11 PQ operators derive
@@ -58,33 +57,12 @@ object PqIndex {
 
   def codebookDir(indexDir: String): String = s"$indexDir/codebook"
   def codesDir(indexDir: String): String = s"$indexDir/codes"
-  private def metaFile(indexDir: String) =
-    Paths.get(indexDir, "_pq_meta")
+  private val MetaFile = "_pq_meta"
 
-  def meta(indexDir: String): Option[Meta] = {
-    val f = metaFile(indexDir)
-    if (!Files.exists(f)) None
-    else {
-      val p = new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
-      if (p.length != 5) throw new IllegalStateException(
-        s"PQ index meta at $indexDir has ${p.length} fields (this " +
-          "version writes 5) — an index persisted by an older format; " +
-          "rebuild it")
-      Some(Meta(p(0).toLong, p(1).toLong, p(2).toInt, p(3).toInt,
+  def meta(indexDir: String): Option[Meta] =
+    IndexDelta.readMeta(indexDir, MetaFile, "PQ", 5)
+      .map(p => Meta(p(0).toLong, p(1).toLong, p(2).toInt, p(3).toInt,
         p(4).toInt))
-    }
-  }
-
-  private def writeMeta(indexDir: String, m: Meta): Unit = {
-    Files.createDirectories(Paths.get(indexDir))
-    val tmp = Paths.get(indexDir, "_pq_meta.tmp")
-    Files.write(tmp,
-      s"${m.corpusVersion} ${m.codesVersion} ${m.m} ${m.dsub} ${m.ksub}\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, metaFile(indexDir),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
 
   private def corpusVersionOf(corpusPath: String): Long =
     Snapshot.currentVersion(corpusPath).getOrElse(
@@ -113,7 +91,7 @@ object PqIndex {
         SimilarityOps.pqEncode(corpus, book, m, dsub),
         codesDir(indexDir), keepVersions = 1,
         IndexDelta.BuildTokenFile, token))
-    writeMeta(indexDir, Meta(version,
+    IndexDelta.writeMeta(indexDir, MetaFile, Meta(version,
       Snapshot.currentVersion(codesDir(indexDir)).getOrElse(0L),
       m, dsub, ksub))
     // row count from the freshly written (sidecar-free) codes dir's
@@ -149,8 +127,8 @@ object PqIndex {
         .toSeq.sortBy(t => (t._1, t._2))
       SimilarityOps.pqEncode(delta, book, im.m, im.dsub)
     }
-    writeMeta(indexDir, im.copy(corpusVersion = version,
-      codesVersion =
+    IndexDelta.writeMeta(indexDir, MetaFile,
+      im.copy(corpusVersion = version, codesVersion =
         Snapshot.currentVersion(codesDir(indexDir)).getOrElse(0L)))
     n
   }

@@ -14,23 +14,17 @@ import org.apache.spark.sql.DataFrame
   * to an RDD materializes its shuffle stages eagerly (and compiles a
   * deserializer), which an r20 A/B measured at 1.7-4x WHOLE-QUERY
   * regressions on the MOR-backed index builds. A frame estimated
-  * under the threshold (default 1 GiB — such a scan yields fewer
+  * under the threshold (1 GiB — such a scan yields fewer
   * splits than a 32-way session's cores) is repartitioned to the
   * session parallelism; anything larger passes through untouched —
   * no shuffle, and never a collapse of a wide production scan to the
   * local core count (the r19 verdict's objection to the
   * unconditional form). */
 object Spread {
-  val MaxBytesKey = "spark.graft.spread.max-bytes"
-  private val DefaultMaxBytes = 1L << 30
+  private val MaxBytes = BigInt(1L << 30)
 
-  def widen(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val cap = spark.conf.get(MaxBytesKey, DefaultMaxBytes.toString)
-      .toLong
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes
-          <= BigInt(cap))
-      df.repartition(spark.sparkContext.defaultParallelism)
+  def widen(df: DataFrame): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= MaxBytes)
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     else df
-  }
 }

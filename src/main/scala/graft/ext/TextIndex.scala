@@ -3,7 +3,6 @@ package graft.ext
 import graft.pipeline.Snapshot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** PERSISTED inverted text index — the keyword-retrieval sibling of
   * the ANN index family ([[PqIndex]]/[[IvfIndex]]/[[IvfPqIndex]]).
@@ -73,35 +72,12 @@ object TextIndex {
   def postingsDir(indexDir: String): String = s"$indexDir/postings"
   def doclensDir(indexDir: String): String = s"$indexDir/doclens"
   def statsDir(indexDir: String): String = s"$indexDir/stats"
-  private def metaFile(indexDir: String) =
-    Paths.get(indexDir, "_text_meta")
+  private val MetaFile = "_text_meta"
 
-  def meta(indexDir: String): Option[Meta] = {
-    val f = metaFile(indexDir)
-    if (!Files.exists(f)) None
-    else {
-      val p = new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
-      if (p.length != 6) throw new IllegalStateException(
-        s"text index meta at $indexDir has ${p.length} fields (this " +
-          "version writes 6) — an index persisted by an older format; " +
-          "rebuild it")
-      Some(Meta(p(0).toLong, p(1).toLong, p(2).toLong, p(3).toInt,
+  def meta(indexDir: String): Option[Meta] =
+    IndexDelta.readMeta(indexDir, MetaFile, "text", 6)
+      .map(p => Meta(p(0).toLong, p(1).toLong, p(2).toLong, p(3).toInt,
         p(4).toInt, p(5) == "1"))
-    }
-  }
-
-  private def writeMeta(indexDir: String, m: Meta): Unit = {
-    Files.createDirectories(Paths.get(indexDir))
-    val tmp = Paths.get(indexDir, "_text_meta.tmp")
-    Files.write(tmp,
-      (s"${m.corpusVersion} ${m.postingsVersion} ${m.doclensVersion} " +
-        s"${m.termBuckets} ${m.docBuckets} " +
-        s"${if (m.positional) 1 else 0}\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, metaFile(indexDir),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
 
   private def corpusVersionOf(corpusPath: String): Long =
     Snapshot.currentVersion(corpusPath).getOrElse(
@@ -230,8 +206,8 @@ object TextIndex {
       statsFrom(doclensRead(spark, indexDir)), statsDir(indexDir),
       keepVersions = 1, IndexDelta.BuildTokenFile, token)
     val (pv, dv) = componentVersions(indexDir)
-    writeMeta(indexDir, Meta(version, pv, dv, termBuckets, docBuckets,
-      positional))
+    IndexDelta.writeMeta(indexDir, MetaFile,
+      Meta(version, pv, dv, termBuckets, docBuckets, positional))
     // the doc count was already aggregated into the 1-row stats
     // table — re-scanning doclens for the return value would double
     // the build's doclens read
@@ -318,8 +294,9 @@ object TextIndex {
     Snapshot.createOrReplaceWithMeta(newStats, statsDir(indexDir),
       keepVersions = 1, IndexDelta.BuildTokenFile, token)
     val (pv, dv) = componentVersions(indexDir)
-    writeMeta(indexDir, im.copy(corpusVersion = version,
-      postingsVersion = pv, doclensVersion = dv))
+    IndexDelta.writeMeta(indexDir, MetaFile,
+      im.copy(corpusVersion = version, postingsVersion = pv,
+        doclensVersion = dv))
     w.n
   }
 

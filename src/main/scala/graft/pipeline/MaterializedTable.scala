@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** REBUILD-ONLY MATERIALIZATION — the Trino-parity fallback class for
   * `CREATE MATERIALIZED VIEW` defining queries the incremental rollup
@@ -34,27 +34,18 @@ object MaterializedTable {
   def tableDir(dir: String): String = s"$dir/table"
   private def metaFile(dir: String) = Paths.get(dir, "_mt_meta")
 
-  def meta(dir: String): Option[Meta] = {
-    val f = metaFile(dir)
-    if (!Files.exists(f)) None
-    else Some(Meta(
-      new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-        .split("\n").toSeq.filter(_.nonEmpty).map { line =>
-          val Array(p, v) = line.split("\\s+", 2)
-          (java.net.URLDecoder.decode(p, "UTF-8"), v.trim.toLong)
-        }))
-  }
+  def meta(dir: String): Option[Meta] =
+    FsCommit.read(metaFile(dir)).map(text => Meta(
+      text.trim.split("\n").toSeq.filter(_.nonEmpty).map { line =>
+        val Array(p, v) = line.split("\\s+", 2)
+        (java.net.URLDecoder.decode(p, "UTF-8"), v.trim.toLong)
+      }))
 
   private def writeMeta(dir: String, m: Meta): Unit = {
     Files.createDirectories(Paths.get(dir))
-    val tmp = Paths.get(dir, "_mt_meta.tmp")
-    Files.write(tmp, m.sources.map { case (p, v) =>
+    FsCommit.replace(metaFile(dir), m.sources.map { case (p, v) =>
       java.net.URLEncoder.encode(p, "UTF-8") + s" $v"
-    }.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, metaFile(dir),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    }.mkString("", "\n", "\n"))
   }
 
   /** Fresh ⟺ every pinned source still sits at its pinned version —

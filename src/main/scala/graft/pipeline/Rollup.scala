@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** INCREMENTAL AGGREGATE MAINTENANCE — the gold-layer twin of the
   * persisted-index lifecycle: materialize `GROUP BY groupCols →
@@ -174,12 +174,10 @@ object Rollup {
     Paths.get(rollupDir, "_rollup_meta")
 
   def meta(rollupDir: String): Option[Meta] = {
-    val f = metaFile(rollupDir)
-    if (!Files.exists(f)) None
+    val text = FsCommit.read(metaFile(rollupDir))
+    if (text.isEmpty) None
     else {
-      val lines = new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-        .split("\n").toSeq
+      val lines = text.get.trim.split("\n").toSeq
       // 8 = pre-join, 9 = pre-expr-keys format (missing lines default
       // empty); 10 = current
       if (lines.length < 8 || lines.length > 10)
@@ -209,18 +207,14 @@ object Rollup {
 
   private def writeMeta(rollupDir: String, m: Meta): Unit = {
     Files.createDirectories(Paths.get(rollupDir))
-    val tmp = Paths.get(rollupDir, "_rollup_meta.tmp")
-    Files.write(tmp,
-      (s"${m.srcVersion}\n${m.rollupVersion}\n" +
+    FsCommit.replace(metaFile(rollupDir),
+      s"${m.srcVersion}\n${m.rollupVersion}\n" +
         s"${m.groupCols.mkString("\t")}\n${m.measures.mkString("\t")}\n" +
         s"mm:${m.minMax.mkString("\t")}\n" +
         s"nd:${m.ndv.mkString("\t")}\nk:${m.ndvK}\n" +
         s"w:${m.filter.getOrElse("")}\n" +
         s"d:${encodeDims(m.dims)}\n" +
         s"e:${encodeExprs(m.exprCols)}\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, metaFile(rollupDir),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Null-safe multi-key join on the GROUP columns. `groupBy`

@@ -315,13 +315,8 @@ object ScanPruning {
         if (statLines.isEmpty) Seq(fileName(f)) else statLines
       } finally reader.close()
     }.flatten
-    val tmp = java.nio.file.Paths.get(dir, s".$ManifestName.tmp")
-    java.nio.file.Files.write(tmp, ("v1\n" + lines.mkString("\n"))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(dir, ManifestName),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    FsCommit.replace(java.nio.file.Paths.get(dir, ManifestName),
+      "v1\n" + lines.mkString("\n"))
   }
 
   /** Whether `dir` carries a scan-manifest sidecar (any validity). */
@@ -336,11 +331,9 @@ object ScanPruning {
     * writer emits a bare marker line for it. */
   private def readManifest(
       dir: String): Option[Map[String, Map[String, (Any, Any)]]] = {
-    val p = java.nio.file.Paths.get(dir, ManifestName)
-    if (!java.nio.file.Files.exists(p)) return None
     try {
-      val lines = new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq
+      val lines = FsCommit.read(java.nio.file.Paths.get(dir, ManifestName))
+        .fold(Seq.empty[String])(_.linesIterator.toSeq)
       if (lines.headOption.forall(_ != "v1")) return None
       val rows = lines.drop(1).filter(_.nonEmpty).map { l =>
         val parts = l.split("\t", -1)

@@ -3,16 +3,17 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, regexp_replace}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import FsCommit.deleteRecursively
 
 /** Snapshot-replace sink: the reference's `writeTo(t).createOrReplace()`
   * (`/root/reference/jobs/build_orders_silver.py:95`,
   * `build_privacy_table.py:37`) re-expressed over plain parquet.
   *
   * `mode("overwrite")` on the live path is not atomic (readers can see a
-  * half-deleted directory); instead: write to `<path>.tmp-<epoch>`, then
-  * atomically swap directories — the same commit shape as an Iceberg
-  * snapshot commit, minus the catalog. Also the append sink (bronze,
-  * `ingest_orders_raw.py:53`).
+  * half-deleted directory); instead: write to a staging dir, then
+  * atomically swap directories ([[FsCommit]]) — the same commit shape
+  * as an Iceberg snapshot commit, minus the catalog. Also the append
+  * sink (bronze, `ingest_orders_raw.py:53`).
   */
 object Snapshot {
 
@@ -58,13 +59,8 @@ object Snapshot {
   /** Version stamped in a snapshot dir's marker file — the version of
     * the BASE data files (merge-on-read commits layer on top of it
     * without rewriting them; see [[morVersions]]). */
-  private def markerVersion(dir: String): Option[Long] = {
-    val m = Paths.get(dir, VersionFile)
-    if (Files.exists(m))
-      Some(new String(Files.readAllBytes(m),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-    else None
-  }
+  private def markerVersion(dir: String): Option[Long] =
+    FsCommit.read(Paths.get(dir, VersionFile)).map(_.trim.toLong)
 
   /** Version of the live snapshot at `path` (1-based; None if the path
     * was never written, or predates versioning). Merge-on-read commits
@@ -282,11 +278,6 @@ object Snapshot {
     df
   }
 
-  /** Read `dir`'s state AS OF `upTo`: base files with every MOR
-    * sidecar of version <= `upTo` applied in commit order.
-    * `withLineage = true` keeps the ([[LineageFile]], [[LineagePos]])
-    * columns on the way out — the position-delete WRITE path reads
-    * through this to learn which (file, pos) pairs a predicate hits. */
   /** r19 — ANALYZED-READ CACHE: a lifecycle operation (refresh, DML,
     * metadata table, MV pricing) re-derives the same merge-on-read
     * composition of the same immutable snapshot state many times, and
@@ -369,6 +360,11 @@ object Snapshot {
           _ => morApply(spark, dir, upTo, withLineage))
     }
 
+  /** Read `dir`'s state AS OF `upTo`: base files with every MOR
+    * sidecar of version <= `upTo` applied in commit order.
+    * `withLineage = true` keeps the ([[LineageFile]], [[LineagePos]])
+    * columns on the way out — the position-delete WRITE path reads
+    * through this to learn which (file, pos) pairs a predicate hits. */
   private def morApply(spark: SparkSession, dir: String, upTo: Long,
                        withLineage: Boolean = false): DataFrame = {
     // the base scan plans through (a) the bucket-layout relation when
@@ -590,15 +586,9 @@ object Snapshot {
       Files.write(stage.resolve("_commit"),
         s"operation=$operation\n"
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      commitLocks.getOrElseUpdate(path, new Object).synchronized {
-        val now = currentVersion(path)
-        if (!now.contains(base))
-          throw new java.util.ConcurrentModificationException(
-            s"commit conflict at $path: base version $base was " +
-              s"replaced by ${now.getOrElse(0L)} while this writer " +
-              "staged; re-run the statement against the new live state")
-        Files.move(stage, morRoot(path).resolve(s"v$next"),
-          StandardCopyOption.ATOMIC_MOVE)
+      FsCommit.locked(path) {
+        checkBase(path, Some(base))
+        FsCommit.rename(stage, morRoot(path).resolve(s"v$next"))
       }
       next
     } finally deleteRecursively(stage)
@@ -664,23 +654,6 @@ object Snapshot {
         .parquet(tmp.toString)
     }
 
-  /** Per-path intra-JVM commit locks: the swap section of two
-    * concurrent committers to the SAME table must serialize (a
-    * single-driver Spark app is the one writer a plain-FS layout can
-    * host; cross-driver safety needs a catalog service, like Iceberg
-    * without one). Weak values let idle locks be collected. */
-  private val commitLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  /** Shared commit protocol (OPTIMISTIC, like an Iceberg commit): note
-    * the base version, write to a WRITER-UNIQUE tmp dir (concurrent
-    * stagings never clobber each other), stamp the version marker,
-    * then — serialized per path — re-check the base version and
-    * atomically promote. A base that moved while this writer was
-    * staging raises `ConcurrentModificationException` with the staged
-    * dir cleaned up; the caller re-runs its statement against the new
-    * live state (no blind retry here: a DML/MERGE result depends on
-    * the base it read). */
   /** Operation marker inside a snapshot dir (Iceberg's snapshot
     * `operation` field: append / replace / overwrite / delete) —
     * written by [[swapIn]], surfaced by `.snapshots`. */
@@ -692,24 +665,15 @@ object Snapshot {
     operationOfIn(resolveDir(path, version), version)
 
   /** [[operationOf]] with the serving dir already resolved. */
-  def operationOfIn(dir: String, version: Long): Option[String] = {
-    if (markerVersion(dir).contains(version)) {
-      val f = Paths.get(dir, OperationFile)
-      if (Files.exists(f))
-        Some(new String(Files.readAllBytes(f),
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-      else None
-    } else {
-      val c = morRoot(dir).resolve(s"v$version").resolve("_commit")
-      if (!Files.exists(c)) None
-      else new String(Files.readAllBytes(c),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .linesIterator.collectFirst {
+  def operationOfIn(dir: String, version: Long): Option[String] =
+    if (markerVersion(dir).contains(version))
+      FsCommit.read(Paths.get(dir, OperationFile)).map(_.trim)
+    else
+      FsCommit.read(morRoot(dir).resolve(s"v$version").resolve("_commit"))
+        .flatMap(_.linesIterator.collectFirst {
           case l if l.startsWith("operation=") =>
             l.stripPrefix("operation=")
-        }
-    }
-  }
+        })
 
   /** [[createOrReplace]] that atomically carries a small named metadata
     * file with the commit (underscore-prefixed → invisible to parquet
@@ -746,13 +710,8 @@ object Snapshot {
 
   /** The metadata file a [[createOrReplaceWithMeta]] commit carried,
     * if present on the live dir. */
-  def commitMeta(path: String, metaName: String): Option[String] = {
-    val f = Paths.get(path, metaName)
-    if (Files.exists(f))
-      Some(new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8))
-    else None
-  }
+  def commitMeta(path: String, metaName: String): Option[String] =
+    FsCommit.read(Paths.get(path, metaName))
 
   /** Carry the COMMIT-META marker files of `path`'s live dir (the
     * underscore files a [[createOrReplaceWithMeta]] commit wrote —
@@ -788,52 +747,55 @@ object Snapshot {
     } finally s.close()
   }
 
+  /** Shared commit protocol (OPTIMISTIC, like an Iceberg commit): note
+    * the base version, write to a WRITER-UNIQUE tmp dir (concurrent
+    * stagings never clobber each other), stamp the version marker,
+    * then — serialized per path — re-check the base version and
+    * atomically promote ([[FsCommit.promote]]). A base that moved
+    * while this writer was staging raises
+    * `ConcurrentModificationException` with the staged dir cleaned up;
+    * the caller re-runs its statement against the new live state (no
+    * blind retry here: a DML/MERGE result depends on the base it
+    * read). */
   private def swapIn(path: String, keepVersions: Int,
                      expectedBase: Option[Option[Long]] = None,
                      operation: String = "overwrite")
                     (write: Path => Unit): Unit = {
-    val live = Paths.get(path)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = Paths.get(s"$path.tmp-swap-$token")
-    val old = Paths.get(s"$path.old-swap-$token")
     // maintenance rewrites (compact/rollback/cherry-pick) MATERIALIZE
     // the live state before staging; they pass the version they read as
     // expectedBase so a commit landing between that read and this swap
     // raises the optimistic conflict instead of being silently absorbed
     val cur = expectedBase.getOrElse(currentVersion(path))
     val next = cur.getOrElse(0L) + 1
-    try {
+    // a live dir that predates versioning (e.g. an append-only table
+    // being compacted for the first time) retains as v0
+    val retain = Option.when(keepVersions > 0)(
+      Paths.get(s"$path.v${cur.getOrElse(0L)}"))
+    FsCommit.promote(Paths.get(path), path, retain) { tmp =>
       write(tmp)
       Files.write(tmp.resolve(VersionFile),
         next.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       Files.write(tmp.resolve(OperationFile),
         operation.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      commitLocks.getOrElseUpdate(path, new Object).synchronized {
-        val now = currentVersion(path)
-        if (now != cur)
-          throw new java.util.ConcurrentModificationException(
-            s"commit conflict at $path: base version " +
-              s"${cur.getOrElse(0L)} was replaced by " +
-              s"${now.getOrElse(0L)} while this writer staged; " +
-              "re-run the statement against the new live state")
-        if (Files.exists(live)) {
-          // a live dir that predates versioning (e.g. an append-only
-          // table being compacted for the first time) retains as v0
-          if (keepVersions > 0)
-            Files.move(live, Paths.get(s"$path.v${cur.getOrElse(0L)}"),
-              StandardCopyOption.ATOMIC_MOVE)
-          else
-            Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-        }
-        Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-      }
-      deleteRecursively(old)
-      // prune beyond the newest keepVersions historical snapshots —
-      // except tagged ones, which a ref keeps reachable
-      historicalVersions(path).dropRight(keepVersions)
-        .filterNot(dirProtected(path))
-        .foreach(v => deleteRecursively(Paths.get(s"$path.v$v")))
-    } finally deleteRecursively(tmp)
+    } { _ => checkBase(path, cur) }
+    // prune beyond the newest keepVersions historical snapshots —
+    // except tagged ones, which a ref keeps reachable
+    historicalVersions(path).dropRight(keepVersions)
+      .filterNot(dirProtected(path))
+      .foreach(v => deleteRecursively(Paths.get(s"$path.v$v")))
+  }
+
+  /** The optimistic base check every commit to `path` makes under its
+    * commit lock: the live version must still be the `base` this
+    * writer staged against. */
+  private def checkBase(path: String, base: Option[Long]): Unit = {
+    val now = currentVersion(path)
+    if (now != base)
+      throw new java.util.ConcurrentModificationException(
+        s"commit conflict at $path: base version " +
+          s"${base.getOrElse(0L)} was replaced by " +
+          s"${now.getOrElse(0L)} while this writer staged; " +
+          "re-run the statement against the new live state")
   }
 
   /** Time travel: read snapshot `version` of `path` — the live version
@@ -1079,36 +1041,26 @@ object Snapshot {
   /** Transform fields retired from the spec but physically present in
     * retained files (appended, never removed — expiry of the files
     * does not un-write history). */
-  private def tombstonedFields(path: String): Seq[String] = {
-    val f = tombstoneFile(path)
-    if (!Files.exists(f)) Seq.empty
-    else new String(Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-  }
+  private def tombstonedFields(path: String): Seq[String] =
+    sidecarLines(tombstoneFile(path))
 
   private def addTombstones(path: String, fields: Seq[String]): Unit =
     if (fields.nonEmpty) {
       val merged = (tombstonedFields(path) ++ fields).distinct
-      val tmp = Paths.get(path + ".pspec.hidden.tmp")
-      Files.write(tmp, merged.mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, tombstoneFile(path),
-        StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
+      FsCommit.replace(tombstoneFile(path), merged.mkString("", "\n", "\n"))
     }
+
+  /** Trimmed non-empty lines of a sidecar file (empty when absent). */
+  private def sidecarLines(f: Path): Seq[String] =
+    FsCommit.read(f).toSeq
+      .flatMap(_.linesIterator.map(_.trim).filter(_.nonEmpty))
 
   /** The CURRENT partition spec of `path` (ordered identity columns;
     * empty = unpartitioned). */
-  def partitionSpec(path: String): Seq[String] = {
-    val f = specFile(path)
-    if (!Files.exists(f)) Seq.empty
-    else new String(Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-  }
+  def partitionSpec(path: String): Seq[String] =
+    sidecarLines(specFile(path))
 
-  /** Replace the current spec (atomic tmp + rename; empty clears).
+  /** Replace the current spec ([[FsCommit.replace]]; empty clears).
     * Entries are canonicalized transform strings or identity columns;
     * duplicate FIELD names (e.g. two bucket(_, c) entries) raise. */
   def setPartitionSpec(path: String, cols: Seq[String]): Unit = {
@@ -1121,13 +1073,7 @@ object Snapshot {
       .filterNot(_.isIdentity).map(_.name).filterNot(names.contains))
     val f = specFile(path)
     if (cols.isEmpty) Files.deleteIfExists(f)
-    else {
-      val tmp = Paths.get(path + ".pspec.tmp")
-      Files.write(tmp, cols.mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-    }
+    else FsCommit.replace(f, cols.mkString("", "\n", "\n"))
   }
 
   /** `ALTER TABLE … ADD PARTITION FIELD field` — metadata-only append
@@ -1302,15 +1248,11 @@ object Snapshot {
 
   /** The (numBuckets, columns) join layout a snapshot dir was written
     * under, if any (several columns for a composite bucket spec). */
-  def bucketLayout(dir: String): Option[(Int, Seq[String])] = {
-    val f = Paths.get(dir, BucketMarker)
-    if (!Files.exists(f)) None
-    else {
-      val parts = new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
-      Some((parts(0).toInt, parts.drop(1).toSeq))
+  def bucketLayout(dir: String): Option[(Int, Seq[String])] =
+    FsCommit.read(Paths.get(dir, BucketMarker)).map { m =>
+      val parts = m.trim.split("\\s+")
+      (parts(0).toInt, parts.drop(1).toSeq)
     }
-  }
 
   /** Rename the staged dir's data files to Spark's bucket convention
     * and stamp the layout marker. Runs on the staging dir BEFORE the
@@ -1336,8 +1278,7 @@ object Snapshot {
               val at = if (dot < 0) name.length else dot
               val renamed = name.substring(0, at) + f"_$id%05d" +
                 name.substring(at)
-              Files.move(p, p.resolveSibling(renamed),
-                StandardCopyOption.ATOMIC_MOVE)
+              FsCommit.rename(p, p.resolveSibling(renamed))
             case _ => throw new IllegalStateException(
               s"unexpected data file name in a bucket-spec write: " +
                 s"$name (cannot derive its bucket id)")
@@ -1351,36 +1292,24 @@ object Snapshot {
 
   // WRITE ORDERED BY metadata — Iceberg's table sort order, stored in
   // the sidecar `<path>.sortorder` (one `col asc|desc` line each,
-  // atomic tmp + rename like the spec file). Metadata-only: set it and
+  // replaced atomically like the spec file). Metadata-only: set it and
   // every later spec-aware commit writes range-clustered, locally
   // sorted files; WRITE UNORDERED clears it.
 
   private def sortOrderFile(path: String) = Paths.get(path + ".sortorder")
 
   /** Current write sort order: (column, ascending) pairs, empty = none. */
-  def sortOrder(path: String): Seq[(String, Boolean)] = {
-    val f = sortOrderFile(path)
-    if (!Files.exists(f)) Seq.empty
-    else new String(Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.map(_.trim).filter(_.nonEmpty).map { line =>
-        val p = line.split("\\s+")
-        (p(0), p.length < 2 || !p(1).equalsIgnoreCase("desc"))
-      }.toSeq
-  }
+  def sortOrder(path: String): Seq[(String, Boolean)] =
+    sidecarLines(sortOrderFile(path)).map { line =>
+      val p = line.split("\\s+")
+      (p(0), p.length < 2 || !p(1).equalsIgnoreCase("desc"))
+    }
 
   def setSortOrder(path: String, order: Seq[(String, Boolean)]): Unit = {
     val f = sortOrderFile(path)
     if (order.isEmpty) Files.deleteIfExists(f)
-    else {
-      val tmp = Paths.get(path + ".sortorder.tmp")
-      val body = order.map { case (c, asc) =>
-        s"$c ${if (asc) "asc" else "desc"}" }.mkString("", "\n", "\n")
-      Files.write(tmp,
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-    }
+    else FsCommit.replace(f, order.map { case (c, asc) =>
+      s"$c ${if (asc) "asc" else "desc"}" }.mkString("", "\n", "\n"))
   }
 
   def read(spark: SparkSession, path: String): DataFrame =
@@ -1649,10 +1578,7 @@ object Snapshot {
       Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
       Files.setLastModifiedTime(dst, t)
     }
-    def rewrite(dir: String, underSpec: Boolean): Unit = {
-      val tmp = Paths.get(dir + ".tmp-erase")
-      val old = Paths.get(dir + ".old-erase")
-      deleteRecursively(tmp); deleteRecursively(old)
+    def stage(dir: String, underSpec: Boolean, tmp: Path): Unit = {
       // the LIVE dir rewrites under the table's current spec (fragment
       // layout, bucket marker, write order all preserved — erasure
       // must not demote a storage-partitioned table to exchanges);
@@ -1765,9 +1691,18 @@ object Snapshot {
         if (Files.exists(c))
           copyPreservingMtime(c, dstV.resolve("_commit"))
       }
-      Files.move(Paths.get(dir), old, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(tmp, Paths.get(dir), StandardCopyOption.ATOMIC_MOVE)
-      deleteRecursively(old)
+    }
+    // the version each rewrite reads: a commit (or a prune) landing
+    // while it stages fails the check, instead of being replaced by
+    // the erased OLD state
+    def rewrite(dir: String, underSpec: Boolean): Unit = {
+      val base = currentVersion(dir)
+      FsCommit.promote(Paths.get(dir), path)(
+        stage(dir, underSpec, _)) { _ =>
+        if (!Files.isDirectory(Paths.get(dir)))
+          throw new java.nio.file.NoSuchFileException(dir)
+        checkBase(dir, base)
+      }
     }
     rewrite(path, underSpec = true)
     historicalVersions(path).foreach(v =>
@@ -2433,8 +2368,8 @@ object Snapshot {
 
   /** Iceberg's primary expire form: drop historical versions whose
     * commit instant is strictly before `olderThanMicros` (the live
-    * version is never a victim; tagged versions stay reachable). */
-  /** `retainLastFloor` is Iceberg's combined-form semantics: even
+    * version is never a victim; tagged versions stay reachable).
+    * `retainLastFloor` is Iceberg's combined-form semantics: even
     * past the cutoff, the newest `retainLastFloor` snapshots (live +
     * newest historical) survive — `retain_last` is a FLOOR limiting
     * `older_than` expiry, never widened by it. */
@@ -2475,29 +2410,25 @@ object Snapshot {
     currentVersion(path).get
   }
 
-  /** Table maintenance — `remove_orphan_files`: delete leftover
-    * `.tmp-swap` / `.old-swap` / `.tmp-erase` / `.old-erase` work dirs
-    * that a crashed commit could strand beside the table.
+  /** Table maintenance — `remove_orphan_files`: delete the staging
+    * and displaced dirs ([[FsCommit.promote]]'s `.tmp-swap-<token>` /
+    * `.old-swap-<token>`, and the untokenized and `-erase` names older
+    * writers used) that a crashed commit could strand beside the live
+    * table, a historical `.v<N>` version or a `.branch-<b>` branch.
     * @return the number of orphan dirs removed */
   def removeOrphans(path: String): Int = {
-    val fixed = Seq(".tmp-swap", ".old-swap", ".tmp-erase", ".old-erase")
-      .map(s => Paths.get(path + s)).filter(Files.exists(_))
-    // writer-unique staged commits (`.tmp-swap-<token>` /
-    // `.old-swap-<token>`) stranded by a crashed committer
     val live = Paths.get(path)
     val parent = live.getParent
-    val tokens =
+    val staged =
       if (parent == null || !Files.exists(parent)) Seq.empty[Path]
       else {
         import scala.jdk.CollectionConverters._
-        val base = live.getFileName.toString
+        val name = (java.util.regex.Pattern.quote(
+          live.getFileName.toString) + """(\.v\d+|\.branch-.+)?""" +
+          FsCommit.StagingSuffix).r
         val s = Files.list(parent)
         try s.iterator().asScala
-          .filter { p =>
-            val n = p.getFileName.toString
-            n.startsWith(base + ".tmp-swap-") ||
-              n.startsWith(base + ".old-swap-")
-          }.toSeq
+          .filter(p => name.matches(p.getFileName.toString)).toSeq
         finally s.close()
       }
     // merge-on-read stagings stranded inside _mor (dot-prefixed)
@@ -2512,7 +2443,7 @@ object Snapshot {
         finally s.close()
       }
     }
-    val orphans = fixed ++ tokens ++ morTmp
+    val orphans = staged ++ morTmp
     orphans.foreach(deleteRecursively)
     orphans.size
   }
@@ -2520,7 +2451,7 @@ object Snapshot {
   /** Snapshot refs — Iceberg's TAGS over the versioned-dir history: a
     * named, immutable pointer to a retained version, stored in the
     * sibling `<path>.tags` file (one `name=version` line each, written
-    * via tmp-file + atomic rename like every other commit here). Tags
+    * via [[FsCommit.replace]] like every other sidecar here). Tags
     * survive [[createOrReplace]] swaps because they live BESIDE the
     * table, not inside a version dir; [[expireSnapshots]] and pruning
     * refuse to drop a tagged version (a ref makes it reachable —
@@ -2531,27 +2462,16 @@ object Snapshot {
   private def tagsFile(path: String) = Paths.get(path + ".tags")
 
   /** All tags of `path` (empty if none). */
-  def tags(path: String): Map[String, Long] = {
-    val f = tagsFile(path)
-    if (!Files.exists(f)) Map.empty
-    else new String(Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).map { line =>
+  def tags(path: String): Map[String, Long] =
+    FsCommit.read(tagsFile(path)).toSeq
+      .flatMap(_.linesIterator.filter(_.nonEmpty)).map { line =>
         val i = line.lastIndexOf('=')
         line.substring(0, i) -> line.substring(i + 1).toLong
       }.toMap
-  }
 
-  private def writeTags(path: String, t: Map[String, Long]): Unit = {
-    val f = tagsFile(path)
-    val tmp = Paths.get(path + ".tags.tmp")
-    val body = t.toSeq.sortBy(_._1)
-      .map { case (n, v) => s"$n=$v" }.mkString("", "\n", "\n")
-    Files.write(tmp,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeTags(path: String, t: Map[String, Long]): Unit =
+    FsCommit.replace(tagsFile(path), t.toSeq.sortBy(_._1)
+      .map { case (n, v) => s"$n=$v" }.mkString("", "\n", "\n"))
 
   /** Create (or with `replace` re-point) a tag at a RETAINED version. */
   def createTag(path: String, name: String, version: Long,
@@ -2641,69 +2561,47 @@ object Snapshot {
   private val BranchStagingFile = "_graft_branch_staging"
 
   /** Write (or rewrite) branch `name` as a complete staged snapshot —
-    * atomic against concurrent branch readers via tmp + dir swap. */
-  def writeBranch(df: DataFrame, path: String, name: String): Unit = {
-    val dir = branchDir(path, name)
-    val tmp = Paths.get(dir.toString + ".tmp-swap")
-    val old = Paths.get(dir.toString + ".old-swap")
-    deleteRecursively(tmp); deleteRecursively(old)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    currentVersion(path).foreach(v =>
-      Files.write(tmp.resolve(VersionFile),
-        v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    Files.write(tmp.resolve(BranchStagingFile),
-      java.util.UUID.randomUUID().toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // a restaged branch keeps its id; a new one gets the next id from
-    // the per-table high-water-mark sidecar (serialized with commits on
-    // this path so two stagings never share an id). The HWM — not
-    // max(live branches)+1 — means a dropped branch's id is NEVER
-    // reissued to a later staging (Iceberg snapshot ids are never
-    // reused): a caller holding a stale id gets "no staged snapshot",
-    // not another branch's content.
-    commitLocks.getOrElseUpdate(path, new Object).synchronized {
+    * atomic against concurrent branch readers via [[FsCommit.promote]]. */
+  def writeBranch(df: DataFrame, path: String, name: String): Unit =
+    FsCommit.promote(branchDir(path, name), path) { tmp =>
+      df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      currentVersion(path).foreach(v =>
+        Files.write(tmp.resolve(VersionFile),
+          v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      Files.write(tmp.resolve(BranchStagingFile),
+        java.util.UUID.randomUUID().toString
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } { tmp =>
+      // a restaged branch keeps its id; a new one gets the next id from
+      // the per-table high-water-mark sidecar (serialized with commits
+      // on this path so two stagings never share an id). The HWM — not
+      // max(live branches)+1 — means a dropped branch's id is NEVER
+      // reissued to a later staging (Iceberg snapshot ids are never
+      // reused): a caller holding a stale id gets "no staged snapshot",
+      // not another branch's content.
       val id = branchSnapshotId(path, name).getOrElse {
         val next = math.max(branchIdHighWaterMark(path),
           (branches(path).flatMap(branchSnapshotId(path, _)) :+ 1000L).max) + 1
-        setBranchIdHighWaterMark(path, next)
+        FsCommit.replace(branchIdFile(path), next.toString)
         next
       }
       Files.write(tmp.resolve(BranchIdFile),
         id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      if (Files.exists(dir))
-        Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
     }
-    deleteRecursively(old)
-  }
+
+  private def branchIdFile(path: String) = Paths.get(path + ".branchid")
 
   /** Highest branch snapshot id ever issued for `path` — persisted in
     * the sidecar `<path>.branchid` so ids survive branch drops and are
     * never reissued (bumped only under the per-path commit lock). */
-  private def branchIdHighWaterMark(path: String): Long = {
-    val f = Paths.get(path + ".branchid")
-    if (!Files.exists(f)) 1000L
-    else new String(Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-  }
-
-  private def setBranchIdHighWaterMark(path: String, id: Long): Unit = {
-    val tmp = Paths.get(path + ".branchid.tmp")
-    Files.write(tmp,
-      id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path + ".branchid"),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def branchIdHighWaterMark(path: String): Long =
+    FsCommit.read(branchIdFile(path)).map(_.trim.toLong).getOrElse(1000L)
 
   /** Snapshot id stamped on a staged branch (None for a branch staged
     * by a pre-id writer). */
-  def branchSnapshotId(path: String, name: String): Option[Long] = {
-    val m = branchDir(path, name).resolve(BranchIdFile)
-    if (Files.exists(m))
-      Some(new String(Files.readAllBytes(m),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-    else None
-  }
+  def branchSnapshotId(path: String, name: String): Option[Long] =
+    FsCommit.read(branchDir(path, name).resolve(BranchIdFile))
+      .map(_.trim.toLong)
 
   /** The staged branch carrying snapshot id `id`, if any. */
   def branchBySnapshotId(path: String, id: Long): Option[String] =
@@ -2720,8 +2618,7 @@ object Snapshot {
       val s = Files.list(parent)
       try s.iterator().asScala
         .map(_.getFileName.toString)
-        .filter(n => n.startsWith(prefix) && !n.endsWith(".tmp-swap") &&
-          !n.endsWith(".old-swap"))
+        .filter(n => n.startsWith(prefix) && !FsCommit.isStaging(n))
         .map(_.stripPrefix(prefix)).toSeq.sorted
       finally s.close()
     }
@@ -2751,10 +2648,9 @@ object Snapshot {
     * recorded against an older staging stop serving, the same
     * no-stale-stats discipline as the live version gate. */
   def branchStatsToken(path: String, name: String): Option[String] = {
-    val nonce = branchDir(path, name).resolve(BranchStagingFile)
-    if (Files.exists(nonce))
-      return Some(new String(Files.readAllBytes(nonce),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
+    val nonce =
+      FsCommit.read(branchDir(path, name).resolve(BranchStagingFile))
+    if (nonce.isDefined) return nonce.map(_.trim)
     val m = Seq(branchDir(path, name).resolve(BranchIdFile),
       branchDir(path, name).resolve(VersionFile))
       .find(Files.exists(_))
@@ -2774,13 +2670,8 @@ object Snapshot {
 
   /** Fork version recorded at [[writeBranch]] time (None if the table
     * had no live version then). */
-  def branchForkVersion(path: String, name: String): Option[Long] = {
-    val m = branchDir(path, name).resolve(VersionFile)
-    if (Files.exists(m))
-      Some(new String(Files.readAllBytes(m),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-    else None
-  }
+  def branchForkVersion(path: String, name: String): Option[Long] =
+    markerVersion(branchDir(path, name).toString)
 
   /** PUBLISH: promote the audited branch to live — one atomic swap
     * (the previous live rolls into history under `keepVersions` like
@@ -2792,9 +2683,7 @@ object Snapshot {
     if (!Files.exists(dir))
       throw new java.util.NoSuchElementException(
         s"no such branch: '$name' at $path")
-    swapIn(path, keepVersions) { tmp =>
-      Files.move(dir, tmp, StandardCopyOption.ATOMIC_MOVE)
-    }
+    swapIn(path, keepVersions)(FsCommit.rename(dir, _))
     currentVersion(path).get
   }
 
@@ -2881,8 +2770,8 @@ object Snapshot {
   }
 
   /** Live-snapshot parquet file count (maintenance signal: schedule
-    * [[compact]] when it exceeds the table's file-size budget). */
-  /** Data files of the serving dir, RECURSIVE — a partitioned table's
+    * [[compact]] when it exceeds the table's file-size budget). Data
+    * files of the serving dir, RECURSIVE — a partitioned table's
     * parquet files live inside `k=v` fragment dirs, so a top-level
     * listing would report 0 for every partitioned table (the
     * rewrite_data_files before/after counts read this). MOR sidecar
@@ -2898,10 +2787,4 @@ object Snapshot {
       finally s.close()
     }
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-    }
 }

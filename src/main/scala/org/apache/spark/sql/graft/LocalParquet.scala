@@ -27,30 +27,19 @@ import org.apache.spark.sql.types.StructType
   * SCALE GUARDS (this must never collapse a real table write to the
   * driver): [[tryWrite]] first consults the optimizer's size
   * estimate and bails to the caller's distributed write above
-  * `gateBytes`; under it, the rows are fetched with ONE unbounded
+  * `GateBytes`; under it, the rows are fetched with ONE unbounded
   * `executeCollect`, and the tiny path is abandoned after the collect
-  * when the rows exceed `maxRows` or their bytes exceed 4 × the gate.
-  * The estimate gate is therefore the only bound on what the collect
-  * pulls to the driver: an estimate that lies low is not caught until
-  * the rows are already in driver memory. Both knobs are
-  * session-configurable (`spark.graft.write.tiny.max-rows`, 0
-  * disables; `spark.graft.write.tiny.gate-bytes`). Every byte is
+  * when the rows exceed `MaxRows` or their bytes exceed 4 × the
+  * gate. The estimate gate is therefore the only bound on what the
+  * collect pulls to the driver: an estimate that lies low is not
+  * caught until the rows are already in driver memory. Every byte is
   * still computed from the inputs on every call — this changes WHERE
   * the parquet encoder runs, never what is written.
   */
 object LocalParquet {
 
-  val MaxRowsKey = "spark.graft.write.tiny.max-rows"
-  val GateBytesKey = "spark.graft.write.tiny.gate-bytes"
-  private val DefaultMaxRows = 65536
-  private val DefaultGateBytes = 16L * 1024 * 1024
-
-  private def maxRows(df: DataFrame): Int =
-    df.sparkSession.conf.get(MaxRowsKey, DefaultMaxRows.toString).toInt
-
-  private def gateBytes(df: DataFrame): Long =
-    df.sparkSession.conf
-      .get(GateBytesKey, DefaultGateBytes.toString).toLong
+  private val MaxRows = 65536
+  private val GateBytes = 16L * 1024 * 1024
 
   /** Write `df` as one driver-written parquet part file under `dir`
     * when it is provably tiny; return false (writing nothing) when
@@ -67,19 +56,17 @@ object LocalParquet {
     * the collect are the backstop for a badly lying estimate, at the
     * price of re-running the frame distributed. */
   def tryWrite(df: DataFrame, dir: Path): Boolean = {
-    val max = maxRows(df)
-    if (max <= 0) return false
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes
-          > gateBytes(df)) return false
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes > GateBytes)
+      return false
     val rows = df.queryExecution.executedPlan.executeCollect()
-    if (rows.length > max) return false
+    if (rows.length > MaxRows) return false
     var bytes = 0L
     rows.foreach {
       case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
         bytes += u.getSizeInBytes
       case _ => bytes += 64
     }
-    if (bytes > 4 * gateBytes(df)) return false
+    if (bytes > 4 * GateBytes) return false
     write(df, rows, dir)
     true
   }

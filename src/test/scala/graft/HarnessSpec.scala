@@ -48,4 +48,12 @@ class HarnessSpec extends SparkSpec {
       }.toSeq
     assert(hits == Seq("Bench.scala"), s"session builders in $hits")
   }
+
+  test("src/main has exactly one file of atomic renames, FsCommit's") {
+    val hits = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        Files.readString(p).contains("ATOMIC_MOVE"))
+      .map(_.getFileName.toString).toSeq
+    assert(hits == Seq("FsCommit.scala"), s"ATOMIC_MOVE in $hits")
+  }
 }

@@ -669,4 +669,22 @@ class CallSqlSpec extends SparkSpec {
       spark.sql(
         "CALL iceberg.system.rewrite_data_files(table => 'maint.plain')") }
   }
+
+  test("remove_orphan_files finds stranded stagings of historical " +
+    "versions and branches, and keeps the versions and branches") {
+    val (_, dir) = fixture()
+    Snapshot.writeBranch(Seq((9, "b")).toDF("id", "tag"), dir, "b")
+    val stranded = Seq(".branch-b.tmp-swap", ".branch-b.old-swap",
+      ".v1.tmp-erase", ".v1.old-erase", ".branch-b.tmp-swap-0a1b2c3d",
+      ".v2.old-swap-0a1b2c3d").map(s => java.nio.file.Paths.get(dir + s))
+    stranded.foreach(java.nio.file.Files.createDirectories(_))
+    val res = spark.sql(
+      "CALL iceberg.system.remove_orphan_files(table => 'maint.t')")
+      .collect()
+    assert(res.head.getLong(0) == stranded.size.toLong)
+    assert(stranded.forall(!java.nio.file.Files.exists(_)))
+    assert(Snapshot.historicalVersions(dir) == Seq(1L, 2L))
+    assert(Snapshot.branches(dir) == Seq("b"))
+    assert(Snapshot.readBranch(spark, dir, "b").count() == 1)
+  }
 }

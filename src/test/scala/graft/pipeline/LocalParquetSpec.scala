@@ -46,16 +46,11 @@ class LocalParquetSpec extends SparkSpec {
   }
 
   test("the row bound refuses an over-bound frame (fallback stays " +
-    "with the caller) and the conf can disable the path") {
+    "with the caller)") {
     val dir = Files.createTempDirectory("lp-big")
-    spark.conf.set(LocalParquet.MaxRowsKey, "10")
-    try {
-      assert(!LocalParquet.tryWrite(
-        spark.range(100).toDF("id"), dir))
-      spark.conf.set(LocalParquet.MaxRowsKey, "0")
-      assert(!LocalParquet.tryWrite(
-        spark.range(1).toDF("id"), dir))
-    } finally spark.conf.unset(LocalParquet.MaxRowsKey)
+    // 70,000 rows: over the 65,536-row cap, estimated far under the
+    // 16 MB gate
+    assert(!LocalParquet.tryWrite(spark.range(70000).toDF("id"), dir))
     // nothing was written by the refusals
     val s = Files.list(dir)
     try assert(!s.iterator().hasNext ||

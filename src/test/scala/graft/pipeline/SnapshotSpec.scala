@@ -133,6 +133,42 @@ class SnapshotSpec extends SparkSpec {
     assert(stranded.isEmpty, s"staging dirs left behind: $stranded")
   }
 
+  test("erase is an optimistic commit: a commit landing while erase " +
+    "stages raises a conflict, and the interloper's state stands") {
+    val dir = Files.createTempDirectory("snaperase").toString + "/t"
+    Snapshot.createOrReplace(Seq(1).toDF("x"), dir, keepVersions = 3)
+    SnapshotRaceGates.reset()
+    // erase's predicate parks inside its staging write until the test
+    // releases it
+    val parked = org.apache.spark.sql.functions.udf { (x: Int) =>
+      SnapshotRaceGates.started.countDown()
+      SnapshotRaceGates.gate.await()
+      x == 1
+    }
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val erasing = Future { Snapshot.erase(spark, dir, parked(col("x"))) }
+    assert(SnapshotRaceGates.started.await(
+      60, java.util.concurrent.TimeUnit.SECONDS))
+    // keepVersions > 0: the parked reader's file is renamed into
+    // history, not deleted
+    Snapshot.createOrReplace(Seq(2).toDF("x"), dir, keepVersions = 3)
+    SnapshotRaceGates.gate.countDown()
+    val err = intercept[java.util.ConcurrentModificationException] {
+      Await.result(erasing, scala.concurrent.duration.Duration("120s"))
+    }
+    assert(err.getMessage.contains("commit conflict"))
+    assert(Snapshot.currentVersion(dir).contains(2L))
+    assert(Snapshot.read(spark, dir).as[Int].collect().toSeq == Seq(2))
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(java.nio.file.Paths.get(dir).getParent)
+    val stranded = try s.iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.contains(".tmp-") || n.contains(".old-")).toSeq
+    finally s.close()
+    assert(stranded.isEmpty, s"staging dirs left behind: $stranded")
+  }
+
   test("timestamp travel: committedAt is monotone across commits, " +
     "readAsOfTimestamp picks the snapshot current at the instant, and " +
     "SQL TIMESTAMP AS OF resolves through the same path") {
