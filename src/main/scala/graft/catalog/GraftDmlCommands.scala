@@ -269,22 +269,12 @@ private[catalog] object GraftDml {
             s"write.mor.compact-after-commits must be >= 1: $n")
           n
         }
-    threshold.foreach { n =>
-      if (graft.pipeline.Snapshot.morVersions(path).size >= n)
-        // BEST-EFFORT: the statement's own commit is already durable —
-        // a maintenance failure (e.g. an optimistic conflict with a
-        // concurrent writer) must not fail the statement; the next
-        // commit past the threshold retries
-        try graft.pipeline.Snapshot.rewritePositionDeletes(spark, path,
-          keepVersions =
-            graft.pipeline.Snapshot.historicalVersions(path).size + 1)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"auto-compaction of $path failed (statement committed;" +
-                s" will retry at the next threshold commit): $e")
-        }
-    }
+    // BEST-EFFORT: the statement's own commit is already durable —
+    // a maintenance failure must not fail the statement
+    threshold.foreach(n =>
+      graft.pipeline.Snapshot.compactIfStacked(spark, path, n,
+        keepVersions =
+          graft.pipeline.Snapshot.historicalVersions(path).size + 1))
   }
 
   /** Post-commit ROLLUP MAINTENANCE — `graft.rollup.auto-refresh =

@@ -183,16 +183,15 @@ object GraftMetaTables {
               // file" of this layout is the version marker inside each
               // snapshot dir (a MOR commit's is its sidecar marker);
               // the commit instant is its mtime.
+              val markers = verDirs.map(_._2).distinct.flatMap(d =>
+                graft.pipeline.Snapshot.morCommits(d)
+                  .map(c => (d, c.version) -> c.marker.toString)).toMap
               val rows = verDirs.map { case (v, d) =>
                 val at = graft.pipeline.Snapshot.committedAtIn(d, v)
                   .map(us => java.sql.Timestamp.from(
                     java.time.Instant.ofEpochSecond(us / 1000000L,
                       (us % 1000000L) * 1000L))).orNull
-                val file =
-                  if (graft.pipeline.Snapshot.morVersions(d)
-                      .contains(v)) s"$d/_mor/v$v/_commit"
-                  else s"$d/_graft_version"
-                (at, file, v)
+                (at, markers.getOrElse((d, v), s"$d/_graft_version"), v)
               }
               import session.implicits._
               rows.toDF("timestamp", "file", "latest_snapshot_id")

@@ -101,17 +101,19 @@ private[graft] object IndexDelta {
     * @param what index family name for error messages */
   def changesSince(spark: SparkSession, corpusPath: String,
                    sinceVersion: Long, liveVersion: Long,
-                   what: String, keyCol: String = "vec_id"): Changes =
-    Snapshot.commitsSince(corpusPath, sinceVersion,
-        Some(liveVersion)) match {
+                   what: String, keyCol: String = "vec_id"): Changes = {
+    // ONE listing serves both the classification and the pricing
+    val window = Snapshot.listWindow(corpusPath, sinceVersion,
+      Some(liveVersion))
+    window.kind match {
       case Snapshot.CommitWindow.FastAppends(dirs) =>
         Changes(
           if (dirs.isEmpty) Snapshot.read(spark, corpusPath).limit(0)
           else dirs.map(spark.read.parquet(_)).reduce(_ unionByName _),
           None)
       case Snapshot.CommitWindow.CarriesDeletes(_) =>
-        val (net, dels) = Snapshot.windowChanges(spark, corpusPath,
-          sinceVersion, liveVersion, Seq(keyCol), what)
+        val (net, dels) =
+          Snapshot.windowChanges(spark, window, Seq(keyCol), what)
         Changes(net, Some(dels))
       case Snapshot.CommitWindow.Rebased(_) =>
         if (!Snapshot.retainedVersions(corpusPath).contains(sinceVersion))
@@ -129,6 +131,7 @@ private[graft] object IndexDelta {
         Changes(appended,
           if (deleted.limit(1).count() > 0) Some(deleted) else None)
     }
+  }
 
   /** The materialized change set of one refresh window, plus the
     * upsert-replay resolution — the shared protocol core
@@ -165,24 +168,6 @@ private[graft] object IndexDelta {
              else if (touched.isDefined) "delete" else "append"
     WindowApply(delta, n, delKeys, touched, op)
   }
-
-  /** Best-effort sidecar-stack compaction past `threshold` — the
-    * READ-TAX BOUND every maintenance loop applies (see
-    * [[applyRefresh]]; [[graft.streaming.StreamingSilver]]'s
-    * foreachBatch arm shares it); spec-aware, and a lost race (e.g.
-    * an optimistic conflict with a concurrent writer) is LOGGED but
-    * never fails the refresh — the next threshold crossing retries. */
-  private[graft] def maybeCompact(spark: SparkSession, dir: String,
-                                  threshold: Int,
-                                  keepVersions: Int = 0): Unit =
-    if (threshold > 0 && Snapshot.morVersions(dir).size >= threshold)
-      try Snapshot.rewritePositionDeletes(spark, dir, keepVersions)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"auto-compaction of $dir failed (the commit is durable; " +
-              s"retries at the next threshold crossing): $e")
-      }
 
   /** The shared refresh body all three index families run: discover
     * the corpus changes of `(sinceVersion, liveVersion]`, apply them
@@ -224,7 +209,7 @@ private[graft] object IndexDelta {
       Snapshot.morCommit(spark, tableDir, deletes = w.touched,
         appends = if (w.n > 0) Some(encode(w.delta)) else None,
         operation = w.op)
-    maybeCompact(spark, tableDir, compactAfterCommits)
+    Snapshot.compactIfStacked(spark, tableDir, compactAfterCommits)
     w.n
   }
 }

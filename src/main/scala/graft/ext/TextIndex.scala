@@ -278,7 +278,7 @@ object TextIndex {
     // READ-TAX BOUND (the family's sawtooth contract) on BOTH MOR
     // components — spec-aware, best-effort
     Seq(postingsDir(indexDir), doclensDir(indexDir)).foreach(
-      IndexDelta.maybeCompact(spark, _, compactAfterCommits))
+      Snapshot.compactIfStacked(spark, _, compactAfterCommits))
     val newStats =
       if (crashed) statsFrom(doclensRead(spark, indexDir))
       else {

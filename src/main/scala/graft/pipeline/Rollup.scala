@@ -942,15 +942,10 @@ object Rollup {
     // (its arm compacts; compacting between phases is wasted work)
     if (anyDimEq)
       return n + refresh(spark, srcPath, rollupDir, compactAfterCommits)
-    if (compactAfterCommits > 0 &&
-        Snapshot.morVersions(tableDir(rollupDir)).size
-          >= compactAfterCommits) {
-      try {
-        Snapshot.rewritePositionDeletes(spark, tableDir(rollupDir))
-        writeMeta(rollupDir, meta(rollupDir).get.copy(rollupVersion =
-          Snapshot.currentVersion(tableDir(rollupDir)).getOrElse(0L)))
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    if (Snapshot.compactIfStacked(spark, tableDir(rollupDir),
+        compactAfterCommits))
+      writeMeta(rollupDir, meta(rollupDir).get.copy(rollupVersion =
+        Snapshot.currentVersion(tableDir(rollupDir)).getOrElse(0L)))
     n
   }
 
@@ -1151,15 +1146,10 @@ object Rollup {
         d.copy(version = v) },
       rollupVersion =
         Snapshot.currentVersion(tableDir(rollupDir)).getOrElse(0L)))
-    if (compactAfterCommits > 0 &&
-        Snapshot.morVersions(tableDir(rollupDir)).size
-          >= compactAfterCommits) {
-      try {
-        Snapshot.rewritePositionDeletes(spark, tableDir(rollupDir))
-        writeMeta(rollupDir, meta(rollupDir).get.copy(rollupVersion =
-          Snapshot.currentVersion(tableDir(rollupDir)).getOrElse(0L)))
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    if (Snapshot.compactIfStacked(spark, tableDir(rollupDir),
+        compactAfterCommits))
+      writeMeta(rollupDir, meta(rollupDir).get.copy(rollupVersion =
+        Snapshot.currentVersion(tableDir(rollupDir)).getOrElse(0L)))
     n
   }
 

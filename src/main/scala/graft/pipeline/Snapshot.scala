@@ -111,11 +111,19 @@ object Snapshot {
   //                        an equality-delete file (Iceberg's
   //                        equality deletes identify rows by value;
   //                        this layout's "position" is the row itself)
+  //   _mor/v<N>/pos_deletes/  parquet of (file_path, pos) pairs —
+  //                        Iceberg's position-delete files: file ids
+  //                        RELATIVE to the table dir (see relFileId)
   //   _mor/v<N>/appends/   parquet of the rows added (an UPDATE is
   //                        delete-old + append-new, Iceberg's MOR
   //                        update decomposition)
   //   _mor/v<N>/_commit    marker: `operation=<delete|update|merge>`;
   //                        its mtime is the commit instant
+  //
+  // [[morCommits]] is the ONE reader of this layout: every read,
+  // metadata listing, census, compaction, erase and window pricer
+  // takes its sidecar dirs from it, and [[morCommitDir]] is the one
+  // place a `_mor/v<N>` path is built.
   //
   // The `_mor` dir is underscore-prefixed, so plain parquet scans of
   // the table dir never see it (same convention as `_SUCCESS` and the
@@ -151,6 +159,80 @@ object Snapshot {
       finally s.close()
     }
   }
+
+  // the sidecar kinds and the commit marker inside a `_mor/v<N>` dir
+  private val Appends = "appends"
+  private val Deletes = "deletes"
+  private val PosDeletes = "pos_deletes"
+  private val CommitMarker = "_commit"
+
+  /** The dir of MOR commit `v` on table dir `dir` (which may be a
+    * staging dir a rewrite is filling). */
+  private def morCommitDir(dir: String, v: Long): Path =
+    morRoot(dir).resolve(s"v$v")
+
+  /** One merge-on-read commit: each sidecar kind's dir iff the commit
+    * CARRIES rows of that kind — the dir exists AND holds a parquet
+    * file (a zero-row sidecar contributes nothing and would fail
+    * schema inference) — and its `_commit` marker. */
+  private[graft] final case class MorCommit(version: Long, appends: Option[String],
+                             deletes: Option[String],
+                             posDeletes: Option[String], marker: Path)
+
+  /** `dir`'s MOR commits with version in `(since, upTo]`, ascending —
+    * the one reader of the sidecar layout. Lists `_mor/` once and each
+    * `v<N>` once (plus each present kind dir, for the parquet test). */
+  private[graft] def morCommits(dir: String, since: Long = Long.MinValue,
+                                upTo: Long = Long.MaxValue)
+      : Seq[MorCommit] =
+    morVersions(dir).filter(v => v > since && v <= upTo).map { v =>
+      val d = morCommitDir(dir, v)
+      val kinds = listNames(d)
+      def carried(kind: String): Option[String] =
+        Option.when(kinds(kind) && parquetFiles(d.resolve(kind)).nonEmpty)(
+          d.resolve(kind).toString)
+      MorCommit(v, carried(Appends), carried(Deletes), carried(PosDeletes),
+        d.resolve(CommitMarker))
+    }
+
+  private def listNames(d: Path): Set[String] =
+    if (!Files.isDirectory(d)) Set.empty
+    else {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(d)
+      try s.iterator().asScala.map(_.getFileName.toString).toSet
+      finally s.close()
+    }
+
+  private def parquetFiles(d: Path): Seq[Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(d)
+    try s.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    finally s.close()
+  }
+
+  /** The auto-compaction trigger every maintenance loop shares (DML
+    * `write.mor.compact-after-commits`, index and rollup refresh,
+    * streaming silver): once `threshold > 0` MOR commits are stacked
+    * on `dir`, compact it through [[rewritePositionDeletes]] —
+    * BEST-EFFORT: the triggering commit is already durable, so a
+    * failure (e.g. an optimistic conflict with a concurrent writer)
+    * is logged, never raised, and the next threshold crossing retries.
+    * @return whether it compacted */
+  private[graft] def compactIfStacked(spark: SparkSession, dir: String,
+                                      threshold: Int,
+                                      keepVersions: => Int = 0): Boolean =
+    threshold > 0 && morVersions(dir).size >= threshold && {
+      try { rewritePositionDeletes(spark, dir, keepVersions); true }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"auto-compaction of $dir failed (the commit is durable; " +
+              s"retries at the next threshold crossing): $e")
+          false
+      }
+    }
 
   /** Versions a single snapshot dir can serve: its base marker plus
     * every MOR commit stacked on it. */
@@ -205,12 +287,6 @@ object Snapshot {
     df.withColumn(LineageFile, relFileId(dir))
       .withColumn(LineagePos, col("_metadata.row_index"))
 
-  /** The position-delete sidecar dirs of `dir` visible at `upTo`. */
-  private def posDeleteDirsIn(dir: String, upTo: Long): Seq[String] =
-    morVersions(dir).filter(_ <= upTo)
-      .map(v => morRoot(dir).resolve(s"v$v").resolve("pos_deletes"))
-      .filter(Files.isDirectory(_)).map(_.toString)
-
   /** The ONE sidecar-merge pipeline, shared by the plain read
     * ([[morApply]]) and the stats-pruned read ([[prunedRead]]) so the
     * two can never drift: onto `base` (the caller's base-file scan,
@@ -227,9 +303,10 @@ object Snapshot {
     * the way out. */
   private def applySidecars(spark: SparkSession, dir: String, upTo: Long,
                             base: DataFrame, withLineage: Boolean,
-                            appendFrame: Path => Option[DataFrame])
+                            appendFrame: String => Option[DataFrame])
       : DataFrame = {
-    val posDirs = posDeleteDirsIn(dir, upTo)
+    val commits = morCommits(dir, upTo = upTo)
+    val posDirs = commits.flatMap(_.posDeletes)
     val lineage = withLineage || posDirs.nonEmpty
     var df = if (lineage) withLineageCols(base, dir) else base
     var pendingDeletes = List.empty[String]
@@ -254,11 +331,9 @@ object Snapshot {
         }
       pendingDeletes = Nil
     }
-    morVersions(dir).filter(_ <= upTo).foreach { v =>
-      val d = morRoot(dir).resolve(s"v$v").resolve("deletes")
-      val a = morRoot(dir).resolve(s"v$v").resolve("appends")
-      if (Files.isDirectory(d)) pendingDeletes ::= d.toString
-      if (Files.isDirectory(a)) {
+    commits.foreach { c =>
+      c.deletes.foreach(pendingDeletes ::= _)
+      c.appends.foreach { a =>
         flush() // a delete never touches rows appended after it
         appendFrame(a).foreach { app =>
           df = df.unionByName(
@@ -294,17 +369,27 @@ object Snapshot {
     * action still executes from the parquet files. Dirs WITHOUT a
     * version marker (plain append sinks — files land with no marker
     * change) are never cached. Weak per-session keying lets stopped
-    * sessions collect. */
+    * sessions collect. Each session's cache holds at most
+    * [[MaxCachedPlans]] plans and evicts the least recently used. */
   private val readPlanCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+    new java.util.WeakHashMap[SparkSession, PlanCache]()
 
-  private def readCacheFor(spark: SparkSession)
-      : java.util.concurrent.ConcurrentHashMap[String, DataFrame] =
+  private val MaxCachedPlans = 512
+
+  /** Access-ordered, so the eldest entry is the least recently used;
+    * guarded by its own monitor. */
+  private final class PlanCache
+      extends java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[String, DataFrame]): Boolean =
+      size() > MaxCachedPlans
+  }
+
+  private def readCacheFor(spark: SparkSession): PlanCache =
     readPlanCache.synchronized {
       var m = readPlanCache.get(spark)
       if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
+        m = new PlanCache
         readPlanCache.put(spark, m)
       }
       m
@@ -355,9 +440,17 @@ object Snapshot {
         val key = s"$dir|$upTo|$withLineage|${purgeEpoch(dir)}|" +
           s"${commitSignature(dir)}"
         val cache = readCacheFor(spark)
-        if (cache.size > 512) cache.clear() // crude bound; re-warms
-        cache.computeIfAbsent(key,
-          _ => morApply(spark, dir, upTo, withLineage))
+        val hit = cache.synchronized(cache.get(key))
+        if (hit != null) hit
+        else {
+          // plan outside the monitor: concurrent reads of other keys
+          // must not queue behind this analysis
+          val df = morApply(spark, dir, upTo, withLineage)
+          cache.synchronized {
+            val prev = cache.putIfAbsent(key, df)
+            if (prev == null) df else prev
+          }
+        }
     }
 
   /** Read `dir`'s state AS OF `upTo`: base files with every MOR
@@ -388,7 +481,7 @@ object Snapshot {
     val hidden = hiddenFieldNames(dir).filter(df.columns.contains)
     if (hidden.nonEmpty) df = df.drop(hidden: _*)
     applySidecars(spark, dir, upTo, df, withLineage,
-      a => Some(spark.read.parquet(a.toString)))
+      a => Some(spark.read.parquet(a)))
   }
 
   /** The live state with ([[LineageFile]], [[LineagePos]]) columns —
@@ -403,24 +496,16 @@ object Snapshot {
     * soak): stacked commit count, per-kind sidecar file and row
     * counts. Row counts come from parquet footers (no data read). */
   def morStats(path: String): Seq[(String, Long)] = {
-    val vs = morVersions(path)
-    def census(kind: String): (Long, Long) = vs.map { v =>
-      import scala.jdk.CollectionConverters._
-      val d = morRoot(path).resolve(s"v$v").resolve(kind)
-      if (!Files.isDirectory(d)) (0L, 0L)
-      else {
-        val s = Files.list(d)
-        val files = try s.iterator().asScala.toSeq
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-        finally s.close()
-        (files.size.toLong, files.map(f => footerRows(f)).sum)
-      }
-    }.foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-    val (edF, edR) = census("deletes")
-    val (pdF, pdR) = census("pos_deletes")
-    val (apF, apR) = census("appends")
+    val cs = morCommits(path)
+    def census(kind: MorCommit => Option[String]): (Long, Long) = {
+      val files = cs.flatMap(kind).flatMap(d => parquetFiles(Paths.get(d)))
+      (files.size.toLong, files.map(footerRows).sum)
+    }
+    val (edF, edR) = census(_.deletes)
+    val (pdF, pdR) = census(_.posDeletes)
+    val (apF, apR) = census(_.appends)
     Seq(
-      "mor_commits" -> vs.size.toLong,
+      "mor_commits" -> cs.size.toLong,
       "equality_delete_files" -> edF, "equality_delete_rows" -> edR,
       "position_delete_files" -> pdF, "position_delete_pairs" -> pdR,
       "append_files" -> apF, "append_rows" -> apR)
@@ -482,9 +567,7 @@ object Snapshot {
 
   /** [[dataDirsAsOf]] with the serving dir already resolved. */
   def dataDirsIn(dir: String, version: Long): Seq[String] =
-    dir +: morVersions(dir).filter(_ <= version)
-      .map(v => morRoot(dir).resolve(s"v$v").resolve("appends"))
-      .filter(Files.isDirectory(_)).map(_.toString)
+    dir +: morCommits(dir, upTo = version).flatMap(_.appends)
 
   /** (data dir, committing version) pairs visible at `version` of
     * `path`: the serving dir's base files at the dir's own base marker
@@ -495,25 +578,20 @@ object Snapshot {
                           version: Long): Seq[(String, Long)] = {
     val dir = serveDir(path, version)
     (dir, markerVersion(dir).getOrElse(0L)) +:
-      morVersions(dir).filter(_ <= version).flatMap { v =>
-        val a = morRoot(dir).resolve(s"v$v").resolve("appends")
-        if (Files.isDirectory(a)) Seq((a.toString, v)) else Seq.empty
-      }
+      morCommits(dir, upTo = version)
+        .flatMap(c => c.appends.map(_ -> c.version))
   }
 
   /** The equality-delete sidecar dirs visible at `version` of `path` —
     * the `.delete_files` metadata table's listing unit (content 2). */
-  def deleteDirsAsOf(path: String, version: Long): Seq[String] = {
-    val dir = serveDir(path, version)
-    morVersions(dir).filter(_ <= version)
-      .map(v => morRoot(dir).resolve(s"v$v").resolve("deletes"))
-      .filter(Files.isDirectory(_)).map(_.toString)
-  }
+  def deleteDirsAsOf(path: String, version: Long): Seq[String] =
+    morCommits(serveDir(path, version), upTo = version).flatMap(_.deletes)
 
   /** The position-delete sidecar dirs visible at `version` of `path`
     * (Iceberg's content 1 delete files). */
   def posDeleteDirsAsOf(path: String, version: Long): Seq[String] =
-    posDeleteDirsIn(serveDir(path, version), version)
+    morCommits(serveDir(path, version), upTo = version)
+      .flatMap(_.posDeletes)
 
   /** The dir that serves `version` of `path` (live or historical),
     * raising the standard no-such-version error otherwise. */
@@ -556,7 +634,7 @@ object Snapshot {
       // in the staging order
       val writes = Seq.newBuilder[() => Unit]
       deletes.foreach(d => writes += (() =>
-        writeParquetTiny(d, stage.resolve("deletes"))))
+        writeParquetTiny(d, stage.resolve(Deletes))))
       // position deletes: (file_path, pos) pairs in Iceberg's
       // position-delete schema, file ids RELATIVE to the serving dir
       // (see relFileId — rename-stable by construction). Relativity is
@@ -578,17 +656,17 @@ object Snapshot {
           writeParquetTiny(
             pd.select(relOrRaise.as("file_path"),
               col(LineagePos).cast("long").as("pos")),
-            stage.resolve("pos_deletes")))
+            stage.resolve(PosDeletes)))
       }
       appends.foreach(a => writes += (() =>
-        writeParquetTiny(a, stage.resolve("appends"))))
+        writeParquetTiny(a, stage.resolve(Appends))))
       Par.all(writes.result())
-      Files.write(stage.resolve("_commit"),
+      Files.write(stage.resolve(CommitMarker),
         s"operation=$operation\n"
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       FsCommit.locked(path) {
         checkBase(path, Some(base))
-        FsCommit.rename(stage, morRoot(path).resolve(s"v$next"))
+        FsCommit.rename(stage, morCommitDir(path, next))
       }
       next
     } finally deleteRecursively(stage)
@@ -602,20 +680,11 @@ object Snapshot {
     * @return (collapsed delete-file count, new live version) */
   def rewritePositionDeletes(spark: SparkSession, path: String,
                              keepVersions: Int = 0): (Long, Long) = {
-    val collapsed = morVersions(path).flatMap { v =>
-      Seq("deletes", "pos_deletes")
-        .map(k => morRoot(path).resolve(s"v$v").resolve(k))
-    }.map { d =>
-      if (!Files.isDirectory(d)) 0L
-      else {
-        val s = Files.list(d)
-        try s.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .count()
-        finally s.close()
-      }
-    }.sum
-    if (morVersions(path).isEmpty)
+    val commits = morCommits(path)
+    if (commits.isEmpty)
       return (0L, currentVersion(path).getOrElse(0L))
+    val collapsed = commits.flatMap(c => c.deletes ++ c.posDeletes)
+      .map(d => parquetFiles(Paths.get(d)).size.toLong).sum
     val base = currentVersion(path)
     val applied = read(spark, path).localCheckpoint()
     // spec-aware write: a partitioned/write-ordered table's compaction
@@ -669,7 +738,7 @@ object Snapshot {
     if (markerVersion(dir).contains(version))
       FsCommit.read(Paths.get(dir, OperationFile)).map(_.trim)
     else
-      FsCommit.read(morRoot(dir).resolve(s"v$version").resolve("_commit"))
+      FsCommit.read(morCommitDir(dir, version).resolve(CommitMarker))
         .flatMap(_.linesIterator.collectFirst {
           case l if l.startsWith("operation=") =>
             l.stripPrefix("operation=")
@@ -848,7 +917,7 @@ object Snapshot {
     val m =
       if (markerVersion(dir).contains(version))
         Paths.get(dir, VersionFile)
-      else morRoot(dir).resolve(s"v$version").resolve("_commit")
+      else morCommitDir(dir, version).resolve(CommitMarker)
     if (!Files.exists(m)) None
     else {
       val i = Files.getLastModifiedTime(m).toInstant
@@ -1349,10 +1418,10 @@ object Snapshot {
     // component
     val df = applySidecars(spark, path, Long.MaxValue, base,
       withLineage = false, a => {
-        val ap = ScanPruning.pruneDir(spark, a.toString, ranges)
+        val ap = ScanPruning.pruneDir(spark, a, ranges)
         if (ap.kept.isEmpty) None
         else Some(spark.read
-          .option("basePath", a.toString).parquet(ap.kept: _*))
+          .option("basePath", a).parquet(ap.kept: _*))
       })
     ranges.foldLeft(df) { (acc, r) =>
       val c = col(r.column)
@@ -1622,40 +1691,29 @@ object Snapshot {
       // Semantics-preserving under the engine's contract that position
       // pairs derive from deterministic predicates (a predicate matches
       // every identical instance, exactly what equality deletes remove).
+      val commits = morCommits(dir)
       lazy val rawLineage: DataFrame = {
         var base = spark.read.parquet(dir)
         // derived hidden-partitioning fields would otherwise leak into
         // the converted equality rows and break the sidecar schema
         val hidden = hiddenFieldNames(dir).filter(base.columns.contains)
         if (hidden.nonEmpty) base = base.drop(hidden: _*)
-        morVersions(dir).foldLeft(withLineageCols(base, dir)) {
-          (df, v) =>
-            val a = morRoot(dir).resolve(s"v$v").resolve("appends")
-            if (Files.isDirectory(a))
-              df.unionByName(withLineageCols(
-                spark.read.parquet(a.toString), dir))
-            else df
+        commits.flatMap(_.appends).foldLeft(withLineageCols(base, dir)) {
+          (df, a) =>
+            df.unionByName(withLineageCols(spark.read.parquet(a), dir))
         }
       }
-      morVersions(dir).foreach { v =>
-        val srcV = morRoot(dir).resolve(s"v$v")
-        val dstV = morRoot(tmp.toString).resolve(s"v$v")
+      commits.foreach { c =>
+        val dstV = morCommitDir(tmp.toString, c.version)
         Files.createDirectories(dstV)
-        val posD = srcV.resolve("pos_deletes")
-        val converted =
-          if (!Files.isDirectory(posD)) None
-          else {
-            val pos = spark.read.parquet(posD.toString)
-            Some(rawLineage.join(pos,
-              col(LineageFile) === pos("file_path") &&
-                col(LineagePos) === pos("pos"), "left_semi")
-              .drop(LineageFile, LineagePos).distinct())
-          }
-        val eqD = srcV.resolve("deletes")
-        val eq =
-          if (Files.isDirectory(eqD))
-            Some(spark.read.parquet(eqD.toString))
-          else None
+        val converted = c.posDeletes.map { d =>
+          val pos = spark.read.parquet(d)
+          rawLineage.join(pos,
+            col(LineageFile) === pos("file_path") &&
+              col(LineagePos) === pos("pos"), "left_semi")
+            .drop(LineageFile, LineagePos).distinct()
+        }
+        val eq = c.deletes.map(spark.read.parquet(_))
         // an equality file projected to IDENTIFIER FIELDS has fewer
         // columns than the converted full rows — project converted
         // rows down to ITS schema (valid under the same key-identity
@@ -1680,16 +1738,14 @@ object Snapshot {
               case _: org.apache.spark.sql.AnalysisException => d
             }
           purged.write.mode(SaveMode.Overwrite)
-            .parquet(dstV.resolve("deletes").toString)
+            .parquet(dstV.resolve(Deletes).toString)
         }
-        val a = srcV.resolve("appends")
-        if (Files.isDirectory(a))
-          spark.read.parquet(a.toString).filter(keep)
+        c.appends.foreach(a =>
+          spark.read.parquet(a).filter(keep)
             .write.mode(SaveMode.Overwrite)
-            .parquet(dstV.resolve("appends").toString)
-        val c = srcV.resolve("_commit")
-        if (Files.exists(c))
-          copyPreservingMtime(c, dstV.resolve("_commit"))
+            .parquet(dstV.resolve(Appends).toString))
+        if (Files.exists(c.marker))
+          copyPreservingMtime(c.marker, dstV.resolve(CommitMarker))
       }
     }
     // the version each rewrite reads: a commit (or a prune) landing
@@ -1797,8 +1853,8 @@ object Snapshot {
   }
 
   /** Classify the commits in `(sinceVersion, live]` of `path` — pure
-    * filesystem metadata (the `_mor/vN` sidecar listing), no data
-    * read. `sinceVersion == live` yields `FastAppends(Nil)`.
+    * filesystem metadata (the [[morCommits]] listing), no data read.
+    * `sinceVersion == live` yields `FastAppends(Nil)`.
     *
     * `untilVersion` BOUNDS the window for a consumer that captured a
     * version before classifying: a concurrent commit landing between
@@ -1807,49 +1863,136 @@ object Snapshot {
     * re-process them (duplicates) on its next refresh. Defaults to
     * the live version. */
   def commitsSince(path: String, sinceVersion: Long,
-                   untilVersion: Option[Long] = None): CommitWindow = {
-    val live = currentVersion(path).getOrElse(
-      throw new IllegalStateException(
-        s"commitsSince needs a versioned snapshot at $path"))
-    val until = untilVersion.getOrElse(live)
-    require(sinceVersion <= until,
-      s"sinceVersion $sinceVersion is ahead of the window end $until " +
-        s"at $path")
-    val base = markerVersion(path).getOrElse(0L)
-    if (base > sinceVersion) CommitWindow.Rebased(base)
-    else {
-      val window = morVersions(path)
-        .filter(v => v > sinceVersion && v <= until)
-      // sidecarDir is the ONE definition of "carries rows of this
-      // kind" (dir exists AND holds parquet) — a bare isDirectory
-      // would classify a zero-row DELETE's empty sidecar as
-      // delete-carrying while every window pricer sees no deletes,
-      // needlessly abandoning the O(appended rows) fast path
-      val withDeletes = window.filter(v =>
-        sidecarDir(path, v, "deletes").isDefined ||
-          sidecarDir(path, v, "pos_deletes").isDefined)
-      if (withDeletes.nonEmpty) CommitWindow.CarriesDeletes(withDeletes)
-      else CommitWindow.FastAppends(
-        window.flatMap(v => sidecarDir(path, v, "appends")))
+                   untilVersion: Option[Long] = None): CommitWindow =
+    listWindow(path, sinceVersion, untilVersion).kind
+
+  /** The commits of `(since, until]` of `path`, listed ONCE by
+    * [[morCommits]], with the copy-on-write rebase the window may have
+    * suffered — what [[commitsSince]] classifies and the window
+    * pricers price, so a consumer doing both lists the window once. */
+  private[graft] final case class MorWindow(path: String, since: Long,
+      rebasedTo: Option[Long], commits: Seq[MorCommit]) {
+    // morCommits' carries-rows rule is the one rule: a bare isDirectory
+    // would classify a zero-row DELETE's empty sidecar as
+    // delete-carrying while every pricer sees no deletes, needlessly
+    // abandoning the O(appended rows) fast path
+    def kind: CommitWindow = rebasedTo match {
+      case Some(base) => CommitWindow.Rebased(base)
+      case None =>
+        val withDeletes = commits
+          .filter(c => c.deletes.isDefined || c.posDeletes.isDefined)
+        if (withDeletes.nonEmpty)
+          CommitWindow.CarriesDeletes(withDeletes.map(_.version))
+        else CommitWindow.FastAppends(commits.flatMap(_.appends))
     }
   }
 
-  private def hasParquet(d: Path): Boolean = {
-    val s = Files.list(d)
-    try s.anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
-    finally s.close()
+  private def morWindow(path: String, since: Long,
+                        until: Long): MorWindow =
+    MorWindow(path, since, rebasedPast(path, since),
+      morCommits(path, since, until))
+
+  /** [[commitsSince]]'s window, unclassified. */
+  private[graft] def listWindow(path: String, since: Long,
+                                until: Option[Long]): MorWindow = {
+    val live = currentVersion(path).getOrElse(
+      throw new IllegalStateException(
+        s"commitsSince needs a versioned snapshot at $path"))
+    val end = until.getOrElse(live)
+    require(since <= end,
+      s"sinceVersion $since is ahead of the window end $end at $path")
+    morWindow(path, since, end)
   }
 
-  /** Commit v's sidecar dir of `kind` (`appends` / `deletes` /
-    * `pos_deletes`) iff it exists AND holds at least one parquet file
-    * — the one definition of "this commit carries rows of this kind"
-    * every window consumer shares (a zero-row sidecar contributes
-    * nothing and would fail schema inference). */
-  private def sidecarDir(path: String, v: Long,
-                         kind: String): Option[String] = {
-    val d = morRoot(path).resolve(s"v$v").resolve(kind)
-    if (Files.isDirectory(d) && hasParquet(d)) Some(d.toString)
-    else None
+  /** REBASE GUARD: the base version, when a copy-on-write commit
+    * (replace/compact/overwrite) re-based `path` past `since` — the
+    * window's per-commit deltas are then gone. */
+  private def rebasedPast(path: String, since: Long): Option[Long] =
+    Some(markerVersion(path).getOrElse(0L)).filter(_ > since)
+
+  /** Commit-version tag the pricers put on sidecar rows. */
+  private val VersionTag = "_graft_v"
+
+  /** A [[MorWindow]] opened for pricing — the one opening step of the
+    * five window pricers. The REBASE GUARD is re-checked at pricing
+    * time: a copy-on-write commit landing after the caller classified
+    * the window (e.g. a concurrent compaction) collapses its sidecars
+    * into the base — pricing would silently return an empty delta and
+    * the consumer would stamp the window applied, permanent drift;
+    * raise to its rebuild fallback instead. Then ONE empty read for
+    * every schema question (each read() replans the full merged
+    * base-plus-sidecar tree, nontrivial on a long MOR run). */
+  private final class Pricing(spark: SparkSession, w: MorWindow,
+                              what: String) {
+    import w.{path, since}
+    val commits: Seq[MorCommit] = w.commits
+    if (rebasedPast(path, since).isDefined) throw unpriceable(
+      s"the table was re-based past v$since (a copy-on-write commit " +
+        "landed)")
+    val empty: DataFrame = read(spark, path).limit(0)
+    val tableCols: Seq[String] = empty.columns.toSeq
+
+    def unpriceable(why: String): UnpriceableWindowException =
+      new UnpriceableWindowException(s"$what over $path cannot price " +
+        s"the window exactly: $why — rebuild/recompute instead")
+
+    /** `df` projected to `cols`; raises when `whose` rows lack any. */
+    def project(df: DataFrame, cols: Seq[String],
+                whose: String): DataFrame = {
+      val missing = cols.filterNot(df.columns.contains)
+      if (missing.nonEmpty) throw unpriceable(
+        s"$whose: missing column(s) ${missing.mkString(", ")}")
+      df.select(cols.map(col): _*)
+    }
+
+    /** Each window commit's sidecar of `kind`, read, in commit order:
+      * (version, dir, rows). */
+    def sidecars(kind: MorCommit => Option[String])
+        : Seq[(Long, String, DataFrame)] =
+      commits.flatMap(c =>
+        kind(c).map(d => (c.version, d, spark.read.parquet(d))))
+
+    /** The window's position pairs, each tagged with its commit
+      * ([[VersionTag]]) — every commit's pairs resolve in ONE pass
+      * (a 200-micro-batch window otherwise re-scans the same hot base
+      * files 200 times with a driver collect each). */
+    lazy val taggedPairs: Option[DataFrame] = sidecars(_.posDeletes)
+      .map { case (v, _, df) =>
+        df.select(col("file_path"), col("pos"))
+          .withColumn(VersionTag, lit(v))
+      }.reduceOption(_ unionByName _)
+
+    /** The window's distinct untagged position pairs — a (file, pos)
+      * pair addresses one immutable row, so a re-delete in a later
+      * commit must not count twice. */
+    def pairs: Option[DataFrame] =
+      taggedPairs.map(_.drop(VersionTag).distinct())
+
+    /** THE position-delete resolver: `pairs` (file_path relative to
+      * the live dir, pos, extra columns…) to the FULL row images they
+      * address, carrying the extra columns — an inner join on the
+      * distinct pairs, so a pair two commits deleted resolves once per
+      * tag. Reads ONLY the referenced data files: the file list is
+      * collected driver-side, bounded by the files the delete
+      * predicates touched (the bound Iceberg's delete-file manifests
+      * carry), never the table. */
+    def resolve(pairs: DataFrame): DataFrame = {
+      val dir = Paths.get(path).toAbsolutePath.normalize.toString
+      val files = pairs.select("file_path").distinct()
+        .collect().map(_.getString(0)).toSeq
+      val extra = pairs.columns.toSeq
+        .filterNot(Seq("file_path", "pos").contains)
+      if (files.isEmpty) extra.foldLeft(empty)((df, c) =>
+        df.withColumn(c, lit(null).cast(pairs.schema(c).dataType)))
+      else {
+        val rows = spark.read.parquet(files.map(f => s"$dir/$f"): _*)
+        val pc = pairs.distinct()
+        withLineageCols(rows, dir)
+          .join(pc, col(LineageFile) === pc("file_path") &&
+            col(LineagePos) === pc("pos"))
+          .drop(LineageFile, LineagePos, "file_path", "pos")
+      }
+    }
   }
 
   /** [[diff]] with an O(window delta) fast path: when every commit in
@@ -1870,88 +2013,65 @@ object Snapshot {
   def diffIncremental(spark: SparkSession, path: String,
                       fromVersion: Long, toVersion: Long,
                       keyCols: Seq[String]): DataFrame =
-    windowOpDelta(spark, path, fromVersion, toVersion, keyCols)
-      .getOrElse(diff(spark, path, fromVersion, toVersion, keyCols))
+    try windowOpDelta(spark, path, fromVersion, toVersion, keyCols)
+    catch {
+      case _: UnpriceableWindowException =>
+        diff(spark, path, fromVersion, toVersion, keyCols)
+    }
 
-  /** The sidecar-derived diff of `(from, to]`, or None when the
-    * window cannot be priced exactly from sidecars (see
-    * [[diffIncremental]]). Per-key op classification under the
-    * unique-key contract: a key's FIRST in-window delete at or before
-    * its first in-window append means it existed at `from` (a second
-    * live instance would violate uniqueness); its LAST append
-    * surviving every later delete means it is present at `to`;
-    * (existed, present) maps to delete / insert / update, and an
-    * update whose old and new non-key values are null-safe-equal is
-    * dropped — exactly [[diff]]'s net-state semantics. */
+  /** The sidecar-derived diff of `(from, to]`; raises
+    * [[UnpriceableWindowException]] when the window cannot be priced
+    * exactly from sidecars (see [[diffIncremental]]). Per-key op
+    * classification under the unique-key contract: a key's FIRST
+    * in-window delete at or before its first in-window append means
+    * it existed at `from` (a second live instance would violate
+    * uniqueness); its LAST append surviving every later delete means
+    * it is present at `to`; (existed, present) maps to delete /
+    * insert / update, and an update whose old and new non-key values
+    * are null-safe-equal is dropped — exactly [[diff]]'s net-state
+    * semantics. */
   private def windowOpDelta(spark: SparkSession, path: String,
                             from: Long, to: Long,
-                            keyCols: Seq[String]): Option[DataFrame] = {
+                            keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{max_by, min, min_by, struct,
       when}
-    // a reversed range is not a window this fast path can price —
-    // delegate to [[diff]] (which serves the reverse diff), keeping
-    // the ALWAYS-diff-identical contract instead of silently
-    // returning an empty changelog
-    if (from > to) return None
-    if (markerVersion(path).getOrElse(0L) > from) return None
-    if (currentVersion(path).forall(_ < to)) return None
-    // ONE empty read for every schema question below — each read()
-    // replans the full merged base-plus-sidecar tree, nontrivial on a
-    // long MOR run
-    val empty = read(spark, path).limit(0)
-    val tableCols = empty.columns.toSeq
-    if (!keyCols.forall(tableCols.contains)) return None
-    val vs = morVersions(path).filter(v => v > from && v <= to)
-    // delete events must carry full row images
-    var delFrames = List.empty[DataFrame]
-    var appFrames = List.empty[DataFrame]
-    for (v <- vs) {
-      sidecarDir(path, v, "deletes").foreach { d =>
-        val df = spark.read.parquet(d)
-        if (!tableCols.forall(df.columns.contains)) return None
-        delFrames ::= df.select(tableCols.map(col): _*)
-          .withColumn("_graft_v", lit(v))
+    // a reversed range (or one past the live version) is not a window
+    // this fast path can price — [[diff]] serves it, keeping the
+    // ALWAYS-diff-identical contract instead of silently returning an
+    // empty changelog
+    if (from > to || currentVersion(path).forall(_ < to))
+      throw new UnpriceableWindowException(
+        s"no sidecar window ($from, $to] at $path")
+    val p = new Pricing(spark, morWindow(path, from, to), "diff")
+    val tableCols = p.tableCols
+    val emptyOut = p.project(p.empty, keyCols, "the table")
+      .withColumn("op", lit("insert"))
+    // delete events must carry full row images; a pre-schema-evolution
+    // append sidecar lacks later columns — both unpriceable against
+    // the live schema
+    def tagged(kind: MorCommit => Option[String]): Seq[DataFrame] =
+      p.sidecars(kind).map { case (v, d, df) =>
+        p.project(df, tableCols, s"the sidecar $d")
+          .withColumn(VersionTag, lit(v))
       }
-      sidecarDir(path, v, "appends").foreach { d =>
-        val df = spark.read.parquet(d)
-        // a pre-schema-evolution append sidecar lacks later columns —
-        // unpriceable against the live schema; fall back to diff
-        if (!tableCols.forall(df.columns.contains)) return None
-        appFrames ::= df
-          .select(tableCols.map(col): _*).withColumn("_graft_v", lit(v))
-      }
-    }
-    // position pairs of EVERY window commit resolve in ONE pass (tag
-    // each pair with its commit, union, read the referenced files
-    // once) — a 200-micro-batch changelog window otherwise re-scans
-    // the same hot base files 200 times with a driver collect each
-    val posPairs = vs
-      .flatMap(v => sidecarDir(path, v, "pos_deletes").map(d =>
-        spark.read.parquet(d).select(col("file_path"), col("pos"))
-          .withColumn("_graft_v", lit(v))))
-      .reduceOption(_ unionByName _)
-    posPairs.foreach { pp =>
-      val rows = resolvePosDeleteRowsTagged(spark, path, pp)
-      if (!tableCols.forall(rows.columns.contains)) return None
-      delFrames ::= rows.select((tableCols :+ "_graft_v").map(col): _*)
-    }
-    val emptyOut = empty
-      .select(keyCols.map(col): _*).withColumn("op", lit("insert"))
-    if (delFrames.isEmpty && appFrames.isEmpty) return Some(emptyOut)
+    val delFrames = tagged(_.deletes) ++ p.taggedPairs.map(pp =>
+      p.project(p.resolve(pp), tableCols :+ VersionTag,
+        "position-deleted rows"))
+    val appFrames = tagged(_.appends)
     val nonKey = tableCols.filterNot(keyCols.contains)
     def valOf = if (nonKey.isEmpty) lit(0) else
       struct(nonKey.map(col): _*)
-    val valType = empty.select(valOf.as("v")).schema.head.dataType
+    val valType = p.empty.select(valOf.as("v")).schema.head.dataType
     val dAgg = delFrames.reduceOption(_ unionByName _).map(
       _.groupBy(keyCols.map(col): _*).agg(
-        min("_graft_v").as("_first_del"),
-        max("_graft_v").as("_last_del"),
-        min_by(valOf, col("_graft_v")).as("_old_val")))
+        min(VersionTag).as("_first_del"),
+        max(VersionTag).as("_last_del"),
+        min_by(valOf, col(VersionTag)).as("_old_val")))
     val aAgg = appFrames.reduceOption(_ unionByName _).map(
       _.groupBy(keyCols.map(col): _*).agg(
-        min("_graft_v").as("_first_app"),
-        max("_graft_v").as("_last_app"),
-        max_by(valOf, col("_graft_v")).as("_new_val")))
+        min(VersionTag).as("_first_app"),
+        max(VersionTag).as("_last_app"),
+        max_by(valOf, col(VersionTag)).as("_new_val")))
     val joined = (dAgg, aAgg) match {
       case (Some(d), Some(a)) => d.join(a, keyCols, "full_outer")
       case (Some(d), None) => d
@@ -1962,7 +2082,7 @@ object Snapshot {
         .withColumn("_first_del", lit(null).cast("long"))
         .withColumn("_last_del", lit(null).cast("long"))
         .withColumn("_old_val", lit(null).cast(valType))
-      case (None, None) => return Some(emptyOut)
+      case (None, None) => return emptyOut
     }
     val existedStart = col("_first_del").isNotNull &&
       (col("_first_app").isNull ||
@@ -1973,79 +2093,13 @@ object Snapshot {
     val changed =
       if (nonKey.isEmpty) lit(false)
       else !(col("_old_val") <=> col("_new_val"))
-    Some(joined
+    joined
       .select(keyCols.map(col) :+
         when(existedStart && !presentEnd, "delete")
           .when(!existedStart && presentEnd, "insert")
           .when(existedStart && presentEnd && changed, "update")
           .as("op"): _*)
-      .filter(col("op").isNotNull))
-  }
-
-  /** Resolve position-delete pairs (file_path relative to `path`'s
-    * live dir, pos) to the FULL row images they address. Reads ONLY
-    * the referenced data files — the file list is collected
-    * driver-side, bounded by the number of files the delete
-    * predicates touched (the same bound Iceberg's delete-file
-    * manifests carry), never the table. */
-  private def resolvePosDeleteRows(spark: SparkSession, path: String,
-                                   pairs: DataFrame): DataFrame = {
-    val dir = Paths.get(path).toAbsolutePath.normalize.toString
-    val files = pairs.select("file_path").distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (files.isEmpty)
-      return read(spark, path).limit(0)
-    val rows = spark.read.parquet(files.map(f => s"$dir/$f"): _*)
-    val tagged = rows
-      .withColumn(LineageFile, relFileId(dir))
-      .withColumn(LineagePos, col("_metadata.row_index"))
-    tagged
-      .join(pairs, tagged(LineageFile) === pairs("file_path") &&
-        tagged(LineagePos) === pairs("pos"), "left_semi")
-      .drop(LineageFile, LineagePos)
-  }
-
-  /** [[resolvePosDeleteRows]] that PRESERVES the pairs' extra columns
-    * (e.g. a per-commit `_graft_v` tag) on the resolved row images —
-    * an inner join instead of the semi, so the same (file, pos) pair
-    * deleted by two commits resolves once per tag, exactly the
-    * per-commit accounting the caller priced. */
-  private def resolvePosDeleteRowsTagged(spark: SparkSession,
-                                         path: String,
-                                         pairs: DataFrame): DataFrame = {
-    val dir = Paths.get(path).toAbsolutePath.normalize.toString
-    val extra = pairs.columns.toSeq.filterNot(
-      Seq("file_path", "pos").contains)
-    val files = pairs.select("file_path").distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (files.isEmpty)
-      return extra.foldLeft(read(spark, path).limit(0))((df, c) =>
-        df.withColumn(c, lit(null).cast(
-          pairs.schema(c).dataType)))
-    val rows = spark.read.parquet(files.map(f => s"$dir/$f"): _*)
-    val tagged = rows
-      .withColumn(LineageFile, relFileId(dir))
-      .withColumn(LineagePos, col("_metadata.row_index"))
-    tagged
-      .join(pairs, tagged(LineageFile) === pairs("file_path") &&
-        tagged(LineagePos) === pairs("pos"))
-      .drop(LineageFile, LineagePos, "file_path", "pos")
-  }
-
-  /** [[resolvePosDeleteRows]] projected to `keyCols`, with a loud
-    * failure when the referenced files do not store them. */
-  private def resolvePosDeleteKeys(spark: SparkSession, path: String,
-                                   pairsDir: String, keyCols: Seq[String],
-                                   what: String): DataFrame = {
-    val resolved = resolvePosDeleteRows(spark, path,
-      spark.read.parquet(pairsDir))
-    val missing = keyCols.filterNot(resolved.columns.contains)
-    if (missing.nonEmpty) throw new UnpriceableWindowException(
-      s"$what over $path cannot resolve position-delete sidecars to " +
-        s"keys: column(s) ${missing.mkString(", ")} are not stored in " +
-        "the referenced data files (partition-transformed away?) — " +
-        "rebuild the derived table instead")
-    resolved.select(keyCols.map(col): _*)
+      .filter(col("op").isNotNull)
   }
 
   /** EXACT value-level row delta of the MOR commits in `(since,
@@ -2065,68 +2119,40 @@ object Snapshot {
   def windowRowDelta(spark: SparkSession, path: String, since: Long,
                      until: Long, what: String)
       : (DataFrame, DataFrame) = {
-    // REBASE GUARD: a copy-on-write commit landing after the caller
-    // classified the window (e.g. a concurrent compaction) collapses
-    // the window's sidecars into the base — pricing would silently
-    // return an empty delta and the consumer would stamp the window
-    // applied, permanent drift; raise to its rebuild fallback instead
-    if (markerVersion(path).getOrElse(0L) > since)
-      throw new UnpriceableWindowException(
-        s"$what over $path cannot price the window: the table was " +
-          s"re-based past v$since (a copy-on-write commit landed) — " +
-          "rebuild/recompute instead")
-    val vs = morVersions(path).filter(v => v > since && v <= until)
-    val eq = vs.filter(v => sidecarDir(path, v, "deletes").isDefined)
-    if (eq.nonEmpty) throw new UnpriceableWindowException(
-      s"$what over $path cannot price the window exactly: commit(s) " +
-        s"${eq.map(v => s"v$v").mkString(", ")} carry EQUALITY deletes " +
-        "(each removes every identical row instance — per-instance " +
-        "accounting needs position deletes; set " +
-        "'write.mor.deletes'='position' on the source) — recompute " +
-        "instead")
+    val p = new Pricing(spark, morWindow(path, since, until), what)
+    val eq = p.commits.filter(_.deletes.isDefined).map(_.version)
+    if (eq.nonEmpty) throw p.unpriceable(
+      s"commit(s) ${eq.map(v => s"v$v").mkString(", ")} carry " +
+        "EQUALITY deletes (each removes every identical row instance " +
+        "— per-instance accounting needs position deletes; set " +
+        "'write.mor.deletes'='position' on the source)")
     val dir = Paths.get(path).toAbsolutePath.normalize.toString
-    val plusRaw = vs.flatMap(v => sidecarDir(path, v, "appends"))
-      .map(d => spark.read.parquet(d)
-        .withColumn(LineageFile, relFileId(dir))
-        .withColumn(LineagePos, col("_metadata.row_index")))
+    val plusRaw = p.sidecars(_.appends)
+      .map { case (_, _, df) => withLineageCols(df, dir) }
       .reduceOption(_ unionByName _)
-    val pairs = vs.flatMap(v => sidecarDir(path, v, "pos_deletes"))
-      .map(spark.read.parquet(_)).reduceOption(_ unionByName _)
-      // a (file, pos) pair addresses one immutable row — re-deleting
-      // it in a later commit must not double-subtract
-      .map(_.distinct().localCheckpoint())
-    val emptyRows = read(spark, path).limit(0)
-    pairs match {
+    p.pairs.map(_.localCheckpoint()) match {
       case None =>
         (plusRaw.map(_.drop(LineageFile, LineagePos))
-          .getOrElse(emptyRows), emptyRows)
+          .getOrElse(p.empty), p.empty)
       case Some(pc) =>
-        val plus = plusRaw.map { p =>
-          p.join(pc, p(LineageFile) === pc("file_path") &&
-              p(LineagePos) === pc("pos"), "left_anti")
+        val plus = plusRaw.map { r =>
+          r.join(pc, r(LineageFile) === pc("file_path") &&
+              r(LineagePos) === pc("pos"), "left_anti")
             .drop(LineageFile, LineagePos)
-        }.getOrElse(emptyRows)
+        }.getOrElse(p.empty)
         // pairs into the window's OWN append sidecars already
         // cancelled against plus; everything else — base files and
         // pre-window sidecars — was present at `since`
-        val ver = regexp_replace(col("file_path"),
-          "^_mor/v([0-9]+)/appends/.*$", "$1")
-        val inWindow = ver.rlike("^[0-9]+$") &&
-          ver.cast("long") > lit(since) && ver.cast("long") <= lit(until)
-        val minus = resolvePosDeleteRows(spark, path,
-          pc.filter(!inWindow))
+        val root = Paths.get(path)
+        val inWindow = p.commits.flatMap(_.appends)
+          .map(a => col("file_path")
+            .startsWith(root.relativize(Paths.get(a)).toString + "/"))
+          .foldLeft(lit(false))(_ || _)
         // a partitioned base stores partition columns only in its
-        // directory names — explicit-leaf-file reads drop them, and
-        // a silently narrower minus side breaks the EXACT-delta
-        // contract (the loud-raise discipline resolvePosDeleteKeys
-        // already applies); raise to the rebuild fallback
-        val missing = emptyRows.columns.filterNot(minus.columns.contains)
-        if (missing.nonEmpty) throw new UnpriceableWindowException(
-          s"$what over $path cannot price the window exactly: " +
-            s"position-deleted base rows lack column(s) " +
-            s"${missing.mkString(", ")} (stored only in partition " +
-            "directories) — recompute instead")
-        (plus, minus.select(emptyRows.columns.toSeq.map(col): _*))
+        // directory names — explicit-leaf-file reads drop them, and a
+        // silently narrower minus side breaks the EXACT-delta contract
+        (plus, p.project(p.resolve(pc.filter(!inWindow)), p.tableCols,
+          "position-deleted base rows (partition columns?)"))
     }
   }
 
@@ -2155,46 +2181,33 @@ object Snapshot {
   def windowChanges(spark: SparkSession, path: String,
                     sinceVersion: Long, untilVersion: Long,
                     keyCols: Seq[String], what: String)
+      : (DataFrame, DataFrame) =
+    windowChanges(spark, morWindow(path, sinceVersion, untilVersion),
+      keyCols, what)
+
+  /** [[windowChanges]] of an already listed window. */
+  private[graft] def windowChanges(spark: SparkSession, w: MorWindow,
+                                   keyCols: Seq[String], what: String)
       : (DataFrame, DataFrame) = {
-    // the same REBASE GUARD as [[windowRowDelta]]: a CoW commit that
-    // landed after the caller classified the window collapses its
-    // sidecars — pricing would silently return an empty change set
-    if (markerVersion(path).getOrElse(0L) > sinceVersion)
-      throw new UnpriceableWindowException(
-        s"$what over $path cannot price the window: the table was " +
-          s"re-based past v$sinceVersion (a copy-on-write commit " +
-          "landed) — rebuild/recompute instead")
-    val vs = morVersions(path)
-      .filter(v => v > sinceVersion && v <= untilVersion)
-    val delFrames = vs.flatMap { v =>
-      val eq = sidecarDir(path, v, "deletes").map { d =>
-        val df = spark.read.parquet(d)
-        val missing = keyCols.filterNot(df.columns.contains)
-        if (missing.nonEmpty) throw new UnpriceableWindowException(
-          s"$what over $path cannot resolve the equality-delete " +
-            s"sidecar of commit v$v to keys: column(s) " +
-            s"${missing.mkString(", ")} are not in the delete file " +
-            "(identifier fields do not cover the key) — rebuild the " +
-            "derived table instead")
-        df.select(keyCols.map(col): _*)
-      }
-      val pos = sidecarDir(path, v, "pos_deletes")
-        .map(d => resolvePosDeleteKeys(spark, path, d, keyCols, what))
-      (eq ++ pos).reduceOption(_ unionByName _)
-        .map(_.withColumn("_graft_del_v", lit(v)))
-    }
-    val appended0 = vs.flatMap(v => sidecarDir(path, v, "appends").map(d =>
-        spark.read.parquet(d).withColumn("_graft_app_v", lit(v))))
+    val p = new Pricing(spark, w, what)
+    val delFrames = p.sidecars(_.deletes).map { case (v, _, df) =>
+      p.project(df, keyCols, s"the equality-delete sidecar of commit " +
+          s"v$v (identifier fields do not cover the key)")
+        .withColumn(VersionTag, lit(v))
+    } ++ p.taggedPairs.map(pp => p.project(p.resolve(pp),
+      keyCols :+ VersionTag, "position-deleted rows (partition " +
+        "columns transformed away?)"))
+    val appended0 = p.sidecars(_.appends)
+      .map { case (v, _, df) => df.withColumn("_graft_app_v", lit(v)) }
       .reduceOption(_ unionByName _)
-    val emptyRows = read(spark, path).limit(0)
     if (delFrames.isEmpty)
-      return (appended0.map(_.drop("_graft_app_v")).getOrElse(emptyRows),
-        emptyRows.select(keyCols.map(col): _*))
+      return (appended0.map(_.drop("_graft_app_v")).getOrElse(p.empty),
+        p.empty.select(keyCols.map(col): _*))
     val delKeys = delFrames.reduce(_ unionByName _)
     val lastDel = delKeys.groupBy(keyCols.map(col): _*)
-      .agg(max("_graft_del_v").as("_graft_last_del_v"))
+      .agg(max(VersionTag).as("_graft_last_del_v"))
     val net = appended0 match {
-      case None => emptyRows
+      case None => p.empty
       case Some(apps) => apps
         .join(lastDel, keyCols, "left")
         .filter(col("_graft_last_del_v").isNull ||
@@ -2212,8 +2225,7 @@ object Snapshot {
     * metadata, no data read. */
   def windowHasEqualityDeletes(path: String, since: Long,
                                until: Long): Boolean =
-    morVersions(path).filter(v => v > since && v <= until)
-      .exists(v => sidecarDir(path, v, "deletes").isDefined)
+    morWindow(path, since, until).commits.exists(_.deletes.isDefined)
 
   /** The RAW appended rows of every commit in `(since, until]` —
     * including rows a later window commit deleted again (callers
@@ -2222,21 +2234,11 @@ object Snapshot {
     * sidecar rows), never a base read. */
   def windowAppendRows(spark: SparkSession, path: String, since: Long,
                        until: Long, what: String): DataFrame = {
-    val emptyRows = read(spark, path).limit(0)
-    val tableCols = emptyRows.columns.toSeq
-    morVersions(path).filter(v => v > since && v <= until)
-      .flatMap(v => sidecarDir(path, v, "appends"))
-      .map { d =>
-        val df = spark.read.parquet(d)
-        val missing = tableCols.filterNot(df.columns.contains)
-        if (missing.nonEmpty) throw new UnpriceableWindowException(
-          s"$what over $path cannot price the window exactly: the " +
-            s"append sidecar $d predates column(s) " +
-            s"${missing.mkString(", ")} (schema evolved mid-window) " +
-            "— recompute instead")
-        df.select(tableCols.map(col): _*)
-      }
-      .reduceOption(_ unionByName _).getOrElse(emptyRows)
+    val p = new Pricing(spark, morWindow(path, since, until), what)
+    p.sidecars(_.appends)
+      .map { case (_, d, df) => p.project(df, p.tableCols,
+        s"the append sidecar $d (schema evolved mid-window)") }
+      .reduceOption(_ unionByName _).getOrElse(p.empty)
   }
 
   /** FULL row images of (a superset of) the rows the window's DELETE
@@ -2263,55 +2265,36 @@ object Snapshot {
   def windowDeleteImages(spark: SparkSession, path: String,
                          since: Long, until: Long,
                          what: String): DataFrame = {
-    if (markerVersion(path).getOrElse(0L) > since)
-      throw new UnpriceableWindowException(
-        s"$what over $path cannot price the window: the table was " +
-          s"re-based past v$since (a copy-on-write commit landed) — " +
-          "rebuild/recompute instead")
-    val emptyRows = read(spark, path).limit(0)
-    val tableCols = emptyRows.columns.toSeq
-    val vs = morVersions(path).filter(v => v > since && v <= until)
+    val p = new Pricing(spark, morWindow(path, since, until), what)
+    val tableCols = p.tableCols
     val parts = Seq.newBuilder[DataFrame]
     // id-scoped sidecars resolve against ONE as-of read per distinct
     // column set (in practice one — the table's identifier fields)
     val scoped = scala.collection.mutable.Map
       .empty[Seq[String], List[DataFrame]]
-    vs.foreach { v =>
-      sidecarDir(path, v, "deletes").foreach { d =>
-        val df = spark.read.parquet(d)
-        if (tableCols.forall(df.columns.contains))
-          parts += df.select(tableCols.map(col): _*)
-        else {
-          val cols = df.columns.toSeq.sorted
-          scoped(cols) = df :: scoped.getOrElse(cols, Nil)
-        }
+    p.sidecars(_.deletes).foreach { case (_, _, df) =>
+      if (tableCols.forall(df.columns.contains))
+        parts += df.select(tableCols.map(col): _*)
+      else {
+        val cols = df.columns.toSeq.sorted
+        scoped(cols) = df :: scoped.getOrElse(cols, Nil)
       }
     }
     if (scoped.nonEmpty) {
       val asOfSince =
         try readAsOf(spark, path, since)
         catch {
-          case e: NoSuchElementException =>
-            throw new UnpriceableWindowException(
-              s"$what over $path cannot resolve identifier-scoped " +
-                s"equality deletes: version $since is no longer " +
-                s"retained (${e.getMessage}) — rebuild/recompute " +
-                "instead")
+          case e: NoSuchElementException => throw p.unpriceable(
+            s"identifier-scoped equality deletes need version $since, " +
+              s"no longer retained (${e.getMessage})")
         }
       scoped.foreach { case (cols, dfs) =>
         // schema drift across the window (identifier column added
         // after `since`, or a current column the as-of read lacks)
         // must take the caller's recompute fallback, not explode as
         // an AnalysisException out of the condition/select below
-        val asOfCols = asOfSince.columns.toSet
-        val unresolvable =
-          (cols ++ tableCols).filterNot(asOfCols.contains).distinct
-        if (unresolvable.nonEmpty) throw new UnpriceableWindowException(
-          s"$what over $path cannot resolve identifier-scoped " +
-            s"equality deletes: column(s) " +
-            s"${unresolvable.mkString(", ")} are not in the v$since " +
-            "schema (columns changed mid-window) — rebuild/recompute " +
-            "instead")
+        val atSince = p.project(asOfSince, (cols ++ tableCols).distinct,
+          s"the v$since rows (columns changed mid-window)")
         val keys = dfs.reduce(_ unionByName _)
           .select(cols.map(col): _*).distinct().localCheckpoint()
         val first = cols.head
@@ -2319,8 +2302,8 @@ object Snapshot {
           .limit(MaxInPruneKeys + 1).collect().map(_.get(0))
         val pruned =
           if (vals.length <= MaxInPruneKeys && !vals.contains(null))
-            asOfSince.filter(col(first).isin(vals.toIndexedSeq: _*))
-          else asOfSince
+            atSince.filter(col(first).isin(vals.toIndexedSeq: _*))
+          else atSince
         // null-safe per-column match: exactly applySidecars'
         // every-identical-instance semantics
         val cond = cols.map(c =>
@@ -2329,22 +2312,9 @@ object Snapshot {
           .select(tableCols.map(col): _*)
       }
     }
-    val posPairs = vs
-      .flatMap(v => sidecarDir(path, v, "pos_deletes")
-        .map(d => spark.read.parquet(d)
-          .select(col("file_path"), col("pos"))))
-      .reduceOption(_ unionByName _).map(_.distinct())
-    posPairs.foreach { pp =>
-      val rows = resolvePosDeleteRows(spark, path, pp)
-      val missing = tableCols.filterNot(rows.columns.contains)
-      if (missing.nonEmpty) throw new UnpriceableWindowException(
-        s"$what over $path cannot price the window exactly: " +
-          s"position-deleted base rows lack column(s) " +
-          s"${missing.mkString(", ")} (stored only in partition " +
-          "directories) — recompute instead")
-      parts += rows.select(tableCols.map(col): _*)
-    }
-    parts.result().reduceOption(_ unionByName _).getOrElse(emptyRows)
+    p.pairs.foreach(pp => parts += p.project(p.resolve(pp), tableCols,
+      "position-deleted base rows (partition columns?)"))
+    parts.result().reduceOption(_ unionByName _).getOrElse(p.empty)
   }
 
   /** Literal budget for pushed IN filters on resolution scans —

@@ -2609,9 +2609,9 @@ FROM iceberg.silver.orders_current""")
       // commits stacked AND their delete files key-only
       require(graft.pipeline.Snapshot.morVersions(dir) == Seq(2L, 3L),
         "DML must take the merge-on-read sidecar path")
-      Seq(2L, 3L).foreach { v =>
-        val sch = s.read.parquet(s"$dir/_mor/v$v/deletes")
-          .columns.toSeq
+      graft.pipeline.Snapshot.morCommits(dir).foreach { c =>
+        require(c.deletes.isDefined, s"v${c.version} must carry deletes")
+        val sch = s.read.parquet(c.deletes.get).columns.toSeq
         require(sch == Seq("o_orderkey"),
           s"delete file must carry only the identifier fields: $sch")
       }

@@ -126,10 +126,10 @@ object StreamingSilver {
               deletes = Some(deletes), appends = Some(appends),
               operation = "merge")
             // the maintenance loops' one compaction contract
-            // (IndexDelta.maybeCompact): threshold check, spec-aware
+            // (Snapshot.compactIfStacked): threshold check, spec-aware
             // rewrite, best-effort with a logged failure
             compactAfterCommits.foreach(n =>
-              graft.ext.IndexDelta.maybeCompact(spark, silverDir, n,
+              Snapshot.compactIfStacked(spark, silverDir, n,
                 keepVersions = 2))
           }
         }

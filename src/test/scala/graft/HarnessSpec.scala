@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.regex.Pattern
 import org.apache.spark.sql.functions.{col, udf}
 import scala.jdk.CollectionConverters._
 
@@ -55,5 +56,26 @@ class HarnessSpec extends SparkSpec {
         Files.readString(p).contains("ATOMIC_MOVE"))
       .map(_.getFileName.toString).toSeq
     assert(hits == Seq("FsCommit.scala"), s"ATOMIC_MOVE in $hits")
+  }
+
+  test("src/main spells the merge-on-read sidecar layout in one file, " +
+    "Snapshot's listing") {
+    val layout = Seq("\"pos_deletes\"", "_mor/v", "resolve(s\"v$v\")")
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val hits = files.flatMap { p =>
+      val text = Files.readString(p)
+      layout.filter(text.contains).map(l => s"${p.getFileName}: $l")
+    }
+    assert(hits.nonEmpty && hits.forall(_.startsWith("Snapshot.scala: ")),
+      s"sidecar layout spelled in $hits")
+    val regex = "_mor/v([0-9]+)"
+    assert(!files.exists(p => Files.readString(p).contains(regex)),
+      "sidecar paths are listed, never parsed back out of file ids")
+    val snapshot = Files.readString(
+      Paths.get("src/main/scala/graft/pipeline/Snapshot.scala"))
+    def count(s: String) = snapshot.split(Pattern.quote(s), -1).length - 1
+    assert(count("resolve(s\"v$v\")") == 1, "one commit-dir builder")
+    assert(count("re-based past v") == 1, "one rebase-guard message")
   }
 }

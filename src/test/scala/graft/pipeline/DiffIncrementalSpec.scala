@@ -121,6 +121,80 @@ class DiffIncrementalSpec extends SparkSpec {
       asSet(Snapshot.diff(spark, src, from, to3, Seq("order_id"))))
   }
 
+  test("every window pricer agrees with readAsOf on one MOR history: " +
+    "appends, position deletes into base and window rows, an update") {
+    val root = Files.createTempDirectory("dinc4").toString
+    val src = s"$root/src"
+    Snapshot.createOrReplace(fixture(100), src, keepVersions = 5)
+    val since = Snapshot.currentVersion(src).get
+    val app1 = fixture(110).filter(col("order_id") > 100)
+    Snapshot.morCommit(spark, src, deletes = None,
+      appends = Some(app1), operation = "append")
+    // position deletes: one base row, one row the window appended
+    Snapshot.morCommit(spark, src, deletes = None, appends = None,
+      operation = "delete", posDeletes = Some(
+        Snapshot.readLineage(spark, src)
+          .filter(col("order_id").isin(1L, 105L))))
+    val posOnly = Snapshot.currentVersion(src).get
+    // an update: full-row equality delete plus the new image
+    val updOld = fixture(100).filter(col("order_id") === 50)
+    Snapshot.morCommit(spark, src, deletes = Some(updOld),
+      appends = Some(updOld.withColumn("amount", lit(-1.0))),
+      operation = "overwrite")
+    val app2 = fixture(115).filter(col("order_id") > 110)
+    Snapshot.morCommit(spark, src, deletes = None,
+      appends = Some(app2), operation = "append")
+    val until = Snapshot.currentVersion(src).get
+
+    def rows(df: DataFrame): Seq[(Long, String, Double)] =
+      df.select(col("order_id").cast("long"), col("status"),
+        col("amount").cast("double")).as[(Long, String, Double)]
+        .collect().toSeq.sorted
+    def keys(df: DataFrame): Set[Long] =
+      df.select(col("order_id").cast("long")).as[Long].collect().toSet
+    val atSince = rows(Snapshot.readAsOf(spark, src, since))
+    val atUntil = rows(Snapshot.readAsOf(spark, src, until))
+    val windowApps = rows(app1.unionByName(app2).unionByName(
+      updOld.withColumn("amount", lit(-1.0))))
+
+    assert(Snapshot.commitsSince(src, since, Some(until))
+      .isInstanceOf[Snapshot.CommitWindow.CarriesDeletes])
+    assert(Snapshot.windowHasEqualityDeletes(src, since, until))
+    assert(!Snapshot.windowHasEqualityDeletes(src, since, posOnly))
+
+    // windowChanges: since − deleted keys + net appends == until
+    val (net, dels) = Snapshot.windowChanges(spark, src, since, until,
+      Seq("order_id"), "pin")
+    assert(keys(dels) == Set(1L, 50L, 105L))
+    val dk = keys(dels)
+    assert((atSince.filterNot(r => dk(r._1)) ++ rows(net)).sorted ==
+      atUntil, "keyed net changes must reproduce the until state")
+
+    // diffIncremental is diff-identical
+    assert(asSet(Snapshot.diffIncremental(spark, src, since, until,
+        Seq("order_id"))) ==
+      asSet(Snapshot.diff(spark, src, since, until, Seq("order_id"))))
+
+    // windowRowDelta on the position-only sub-window, as multisets
+    val (plus, minus) =
+      Snapshot.windowRowDelta(spark, src, since, posOnly, "pin")
+    val atPos = rows(Snapshot.readAsOf(spark, src, posOnly))
+    assert((atSince.diff(rows(minus)) ++ rows(plus)).sorted == atPos)
+    assert(rows(minus).map(_._1) == Seq(1L),
+      "a pair into a window append cancels against plus, not minus")
+
+    // windowAppendRows: the raw union of the window's appends
+    assert(rows(Snapshot.windowAppendRows(spark, src, since, until,
+      "pin")) == windowApps)
+
+    // windowDeleteImages covers every removed row image
+    val removed = (atSince ++ windowApps).toSet -- atUntil.toSet
+    assert(removed.map(_._1) == Set(1L, 50L, 105L))
+    val images = rows(Snapshot.windowDeleteImages(spark, src, since,
+      until, "pin")).toSet
+    assert(removed.subsetOf(images), s"missing ${removed -- images}")
+  }
+
   test("interleaved lifecycles classify by net state: append-then-" +
     "delete vanishes, delete-then-reappend-identical vanishes, " +
     "bounded window end excludes later commits") {
