@@ -1,6 +1,6 @@
 package graft
 
-import graft.ext.{IvfIndex, SimilarityOps}
+import graft.ext.{IndexDelta, IvfIndex, SimilarityOps}
 import graft.pipeline.Snapshot
 import org.apache.spark.sql.functions._
 
@@ -89,7 +89,7 @@ object SoakDrift {
         got.count(exact.contains).toDouble / (nQ * 5.0)
       }
       val pre = recall()
-      val (mx0, med0) = IvfIndex.skewOf(IvfIndex.cellSizes(spark, idx))
+      val (mx0, med0) = IndexDelta.skewOf(IvfIndex.cellSizes(spark, idx))
       val t0 = System.nanoTime()
       val (fired, _, _) = IvfIndex.rebalance(spark, corpus, idx, 2.0)
       val tReb = (System.nanoTime() - t0) / 1e9

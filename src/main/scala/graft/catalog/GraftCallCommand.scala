@@ -454,11 +454,10 @@ case class GraftCallCommand(proc: String, args: Seq[Expression])
               .get("graft.index.rebalance-threshold").map(_.toDouble)
           }
           .getOrElse(2.0)
-        val jp = java.nio.file.Paths.get(idxDir)
         val (fired, mx, med) =
-          if (java.nio.file.Files.exists(jp.resolve("_ivfpq_meta")))
+          if (graft.ext.IvfPqIndex.meta(idxDir).isDefined)
             graft.ext.IvfPqIndex.rebalance(spark, path, idxDir, threshold)
-          else if (java.nio.file.Files.exists(jp.resolve("_ivf_meta")))
+          else if (graft.ext.IvfIndex.meta(idxDir).isDefined)
             graft.ext.IvfIndex.rebalance(spark, path, idxDir, threshold)
           else throw new IllegalArgumentException(
             s"rebalance_index: no IVF or IVF-PQ index at $idxDir")

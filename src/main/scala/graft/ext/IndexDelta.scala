@@ -1,16 +1,40 @@
 package graft.ext
 
-import graft.pipeline.{FsCommit, Snapshot}
+import graft.pipeline.{FsCommit, Par, Snapshot}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Shared delta discovery for the persisted ANN indexes ([[PqIndex]],
-  * [[IvfIndex]], [[IvfPqIndex]]) and the streaming maintainer: the
-  * row-level CHANGES to a corpus snapshot since the version an index
-  * last saw, WITHOUT re-scanning the corpus.
+/** The persisted-index lifecycle, one definition for the four index
+  * families ([[PqIndex]], [[IvfIndex]], [[IvfPqIndex]], [[TextIndex]])
+  * and the streaming maintainer. Each family is a set of component
+  * snapshot tables beside the corpus plus one atomic meta file, and
+  * declares a [[Family]]; everything else is shared:
   *
-  * The discovery is version-window driven ([[Snapshot.commitsSince]]):
+  *  - **build** ([[Family.commitBuild]]): one build token rides every
+  *    component commit and the meta, so a reader can tell a
+  *    half-finished rebuild from a finished one.
+  *  - **open** ([[Family.open]]): every refresh, rebalance, search and
+  *    phrase count starts here — the meta or "build first", the live
+  *    corpus version or "requires a versioned corpus snapshot"; a read
+  *    also refuses a STALE index (the corpus moved past the version
+  *    the meta stamps) and a MID-REBUILD one (a component carries a
+  *    build token other than the meta's: a rebuild is in flight, or
+  *    died between its swaps or before its meta write).
+  *  - **refresh**: the row-level CHANGES to the corpus since the
+  *    version the index last saw, WITHOUT re-scanning the corpus
+  *    ([[changesSince]]), applied as ONE MOR commit per component
+  *    table with an upsert crash replay ([[windowApply]]; the
+  *    single-table families run the whole body,
+  *    [[Family.refreshTable]]), then the meta re-stamp.
+  *  - **shared ANN read steps**: the PQ-book decode ([[readBook]]),
+  *    the exact rerank against the corpus ([[rerank]]), the
+  *    fragment-pruned cell probe ([[probeCells]]) and the cell-size
+  *    drift gate ([[driftRebalance]]).
+  *
+  * The change discovery is version-window driven
+  * ([[Snapshot.commitsSince]]):
   *  - **fast-append window** (the normal append path, incl. every
   *    streaming micro-batch): the delta IS the union of the window's
   *    append-sidecar dirs — O(appended rows), zero base-table reads,
@@ -33,53 +57,166 @@ import org.apache.spark.sql.functions._
 private[graft] object IndexDelta {
 
   /** Marker riding each component table's atomic commit: one build
-    * writes the SAME token into every component, so a reader can
-    * detect the mixed window between two component swaps of a
+    * writes the SAME token into every component and its meta, so a
+    * reader can detect the window between two component swaps of a
     * rebuild (new centroids against old cells would return silently
-    * wrong neighbors). Indexes persisted before tokens carry none on
-    * any component — equally coherent. */
+    * wrong neighbors) and a rebuild that swapped everything but died
+    * before its meta write (a new book sliced with the old geometry).
+    * Layout-only rewrites (compaction) carry the token over. */
   private[graft] val BuildTokenFile = "_graft_index_build"
-
-  /** The whitespace-separated fields of an index's meta `file`; None
-    * when the index was never built. A count other than `fields` is
-    * an index persisted by an older format — raise, asking for a
-    * rebuild. */
-  def readMeta(indexDir: String, file: String, kind: String,
-               fields: Int): Option[Array[String]] =
-    FsCommit.read(Paths.get(indexDir, file)).map { text =>
-      val p = text.trim.split("\\s+")
-      if (p.length != fields) throw new IllegalStateException(
-        s"$kind index meta at $indexDir has ${p.length} fields (this " +
-          s"version writes $fields) — an index persisted by an older " +
-          "format; rebuild it")
-      p
-    }
-
-  /** Atomically write an index's meta `file`: the fields of `meta` in
-    * declaration order, space-separated (booleans as 1/0). */
-  def writeMeta(indexDir: String, file: String, meta: Product): Unit = {
-    Files.createDirectories(Paths.get(indexDir))
-    FsCommit.replace(Paths.get(indexDir, file), meta.productIterator.map {
-      case b: Boolean => if (b) "1" else "0"
-      case v => v.toString
-    }.mkString("", " ", "\n"))
-  }
 
   private[graft] def newBuildToken(): String =
     java.util.UUID.randomUUID().toString
 
-  /** Raise when the index's component tables were not written by the
-    * same build (a rebuild is in flight or died between its swaps). */
-  private[graft] def requireCoherent(indexDir: String,
-                                     componentDirs: Seq[String],
-                                     what: String): Unit = {
-    val tokens = componentDirs.map(Snapshot.commitMeta(_, BuildTokenFile))
-    if (tokens.distinct.size > 1)
-      throw new IllegalStateException(
-        s"$what at $indexDir is MID-REBUILD (or a rebuild died " +
-          "between its component swaps): the component tables carry " +
-          s"different build tokens ($tokens) — retry once the rebuild " +
-          "completes, or rebuild")
+  /** The two fields the lifecycle reads off every family's meta. */
+  trait Stamp {
+    def corpusVersion: Long
+    def buildToken: String
+  }
+
+  /** One write of a build's component table under the build token:
+    * a plain snapshot swap, or Hive fragments when `partitionBy` is
+    * given. `frame` is built inside the write, so a component may
+    * read one an earlier wave of [[Family.commitBuild]] wrote. */
+  def component(dir: String, partitionBy: String*)(frame: => DataFrame)
+      : String => Unit = token =>
+    if (partitionBy.isEmpty)
+      Snapshot.createOrReplaceWithMeta(frame, dir, keepVersions = 1,
+        BuildTokenFile, token)
+    else
+      Snapshot.createOrReplacePartitioned(frame, dir, partitionBy,
+        keepVersions = 1, metaName = Some(BuildTokenFile),
+        metaContent = token)
+
+  /** One index family: its name in errors (`kind`), the object its
+    * errors point to (`owner`), its meta file and field count, the
+    * meta parser and the component dirs a read checks. */
+  final class Family[M <: Product with Stamp](kind: String,
+      owner: String, metaFile: String, fields: Int,
+      parse: Array[String] => M, components: String => Seq[String]) {
+
+    /** The meta; None when the index was never built. A field count
+      * other than `fields` is an index persisted by an older format —
+      * raise, asking for a rebuild. */
+    def meta(indexDir: String): Option[M] =
+      FsCommit.read(Paths.get(indexDir, metaFile)).map { text =>
+        val p = text.trim.split("\\s+")
+        if (p.length != fields) throw new IllegalStateException(
+          s"$kind index meta at $indexDir has ${p.length} fields (this " +
+            s"version writes $fields) — an index persisted by an older " +
+            "format; rebuild it")
+        parse(p)
+      }
+
+    /** Atomically write the meta: its fields in declaration order,
+      * space-separated (booleans as 1/0). */
+    def writeMeta(indexDir: String, m: M): Unit = {
+      Files.createDirectories(Paths.get(indexDir))
+      FsCommit.replace(Paths.get(indexDir, metaFile),
+        m.productIterator.map {
+          case b: Boolean => if (b) "1" else "0"
+          case v => v.toString
+        }.mkString("", " ", "\n"))
+    }
+
+    def corpusVersionOf(corpusPath: String): Long =
+      Snapshot.currentVersion(corpusPath).getOrElse(
+        throw new IllegalStateException(
+          s"$kind index requires a versioned corpus snapshot at " +
+            s"$corpusPath — the staleness contract pins index to " +
+            "corpus version"))
+
+    /** The open step of every refresh, rebalance and read. A read
+      * (`read = true`) also refuses a STALE index and one whose
+      * components do not all carry the meta's build token.
+      * @return (meta, live corpus version) */
+    def open(indexDir: String, corpusPath: String,
+             read: Boolean): (M, Long) = {
+      val m = meta(indexDir).getOrElse(throw new IllegalStateException(
+        s"no $kind index at $indexDir (build first)"))
+      val version = corpusVersionOf(corpusPath)
+      if (read) {
+        if (version != m.corpusVersion)
+          throw new IllegalStateException(
+            s"$kind index at $indexDir is STALE: it describes corpus " +
+              s"version ${m.corpusVersion} but the live corpus is " +
+              s"v$version — run $owner.refresh or rebuild")
+        val foreign = components(indexDir).filterNot(d =>
+          Snapshot.commitMeta(d, BuildTokenFile).contains(m.buildToken))
+        if (foreign.nonEmpty)
+          throw new IllegalStateException(
+            s"$kind index at $indexDir is MID-REBUILD (a rebuild is in " +
+              "flight, or died between its component swaps or before " +
+              s"its meta write): $foreign do not carry the build token " +
+              s"the meta records (${m.buildToken}) — retry once the " +
+              "rebuild completes, or rebuild")
+      }
+      (m, version)
+    }
+
+    /** The build commit: draw one build token, write each wave's
+      * components under [[Par.all]] (waves in order — a later wave
+      * may read an earlier one), then write the meta `stamp` makes
+      * of the token. */
+    def commitBuild(indexDir: String, waves: Seq[String => Unit]*)
+                   (stamp: String => M): Unit = {
+      val token = IndexDelta.newBuildToken()
+      waves.foreach(w => Par.all(w.map(write => () => write(token))))
+      writeMeta(indexDir, stamp(token))
+    }
+
+    /** The refresh of a family whose corpus keys live in ONE MOR
+      * component table (`tableDir`): open, return early when the
+      * index already describes the live version, else discover the
+      * changes of the window `(indexed, live]` and apply them to the
+      * table as ONE commit — deleted corpus keys become a key-scoped
+      * equality delete ([[Snapshot.applySidecars]] removes every index
+      * row carrying the key), the net-appended rows land through
+      * `encode` as the append arm; a window that both deletes and
+      * appends a key upserts it (deletes flush before the same
+      * commit's appends) — and re-stamp the meta with `restamp(meta,
+      * live version, table version)`.
+      *
+      * Crash replay: when the table sits PAST the version the meta
+      * recorded (`tableVersion` — a previous refresh committed, then
+      * died before its meta write), the replay must not stack
+      * duplicate entries — it self-heals as an UPSERT, deleting every
+      * key this window touches (the crashed commit may have already
+      * appended them) before re-appending. Still O(window delta); the
+      * index table is never read.
+      *
+      * READ-TAX BOUND: every refresh stacks one MOR sidecar on the
+      * index table; a long-running maintenance loop (ST9 streams a
+      * refresh per micro-batch) would otherwise grow the read's merge
+      * cost without bound. After the commit, when the stacked sidecar
+      * count reaches `compactAfterCommits`, the table auto-compacts
+      * through [[Snapshot.rewritePositionDeletes]] — spec-aware (cell
+      * fragments and build tokens survive, the PqIndexSpec pin) and
+      * best-effort (a concurrent writer losing the race never fails
+      * the refresh), the same sawtooth contract as
+      * `write.mor.compact-after-commits` on the DML arms.
+      * @return net rows appended */
+    def refreshTable(spark: SparkSession, corpusPath: String,
+                     indexDir: String, tableDir: String,
+                     compactAfterCommits: Int)
+                    (tableVersion: M => Long,
+                     restamp: (M, Long, Long) => M)
+                    (encode: (M, DataFrame) => DataFrame): Long = {
+      val (im, version) = open(indexDir, corpusPath, read = false)
+      if (version == im.corpusVersion) return 0L
+      val crashed =
+        !Snapshot.currentVersion(tableDir).contains(tableVersion(im))
+      val w = windowApply(spark, corpusPath, im.corpusVersion, version,
+        s"$kind index", "vec_id", crashed)
+      if (w.n > 0 || w.touched.isDefined)
+        Snapshot.morCommit(spark, tableDir, deletes = w.touched,
+          appends = if (w.n > 0) Some(encode(im, w.delta)) else None,
+          operation = w.op)
+      Snapshot.compactIfStacked(spark, tableDir, compactAfterCommits)
+      writeMeta(indexDir, restamp(im, version,
+        Snapshot.currentVersion(tableDir).getOrElse(0L)))
+      w.n
+    }
   }
 
   /** The corpus change set of the window `(sinceVersion, liveVersion]`:
@@ -135,7 +272,7 @@ private[graft] object IndexDelta {
 
   /** The materialized change set of one refresh window, plus the
     * upsert-replay resolution — the shared protocol core
-    * [[applyRefresh]] (single-table ANN indexes) and
+    * [[Family.refreshTable]] (single-table ANN indexes) and
     * [[TextIndex.refresh]] (multi-table) both commit from, so the
     * crash-replay and op-naming rules cannot diverge between the
     * families. `touched` is the delete set to commit: the window's
@@ -169,47 +306,97 @@ private[graft] object IndexDelta {
     WindowApply(delta, n, delKeys, touched, op)
   }
 
-  /** The shared refresh body all three index families run: discover
-    * the corpus changes of `(sinceVersion, liveVersion]`, apply them
-    * to the index's own MOR table as ONE commit — deleted corpus keys
-    * become a key-scoped equality delete ([[Snapshot.applySidecars]]
-    * removes every index row carrying the key), the net-appended rows
-    * land through `encode` as the append arm; a window that both
-    * deletes and appends a key upserts it (deletes flush before the
-    * same commit's appends).
-    *
-    * Crash replay: when `tableDir` sits PAST `recordedVersion` (a
-    * previous refresh committed, then died before its meta write),
-    * the replay must not stack duplicate entries — it self-heals as
-    * an UPSERT, deleting every key this window touches (the crashed
-    * commit may have already appended them) before re-appending.
-    * Still O(window delta); the index table is never read.
-    *
-    * READ-TAX BOUND: every refresh stacks one MOR sidecar on the
-    * index table; a long-running maintenance loop (ST9 streams a
-    * refresh per micro-batch) would otherwise grow the read's merge
-    * cost without bound. After the commit, when the stacked sidecar
-    * count reaches `compactAfterCommits`, the table auto-compacts
-    * through [[Snapshot.rewritePositionDeletes]] — spec-aware (cell
-    * fragments and build tokens survive, the PqIndexSpec pin) and
-    * best-effort (a concurrent writer losing the race never fails
-    * the refresh), the same sawtooth contract as
-    * `write.mor.compact-after-commits` on the DML arms.
-    * @return net rows appended (the caller's refresh return value) */
-  private[graft] def applyRefresh(spark: SparkSession,
-      corpusPath: String, tableDir: String, recordedVersion: Long,
-      sinceVersion: Long, liveVersion: Long, what: String,
-      keyCol: String = "vec_id", compactAfterCommits: Int = 64)
-      (encode: DataFrame => DataFrame): Long = {
-    val crashed =
-      !Snapshot.currentVersion(tableDir).contains(recordedVersion)
-    val w = windowApply(spark, corpusPath, sinceVersion, liveVersion,
-      what, keyCol, crashed)
-    if (w.n > 0 || w.touched.isDefined)
-      Snapshot.morCommit(spark, tableDir, deletes = w.touched,
-        appends = if (w.n > 0) Some(encode(w.delta)) else None,
-        operation = w.op)
-    Snapshot.compactIfStacked(spark, tableDir, compactAfterCommits)
-    w.n
+  // ---- shared ANN read steps ----
+
+  /** The stored PQ codebook as the encoder's literal book, sorted by
+    * (sub, code) — one m·ksub-row collect. */
+  def readBook(spark: SparkSession,
+               codebookDir: String): Seq[(Int, Int, Seq[Double])] =
+    Snapshot.read(spark, codebookDir)
+      .select("sub", "code", "c_sub").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
+      .toSeq.sortBy(t => (t._1, t._2))
+
+  /** The exact second stage of a PQ read: join the shortlist `cand`
+    * (query_id, neighbor_id) back to the corpus's full-precision
+    * vectors (|queries|·shortlist rows, never a distance scan), score
+    * the exact inner product in BIGINT micros and keep the top `k`
+    * per query. @return (query_id, neighbor_id, rank, score_micros) */
+  def rerank(spark: SparkSession, corpusPath: String, cand: DataFrame,
+             queries: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("score_micros").desc, col("neighbor_id"))
+    cand
+      .join(Snapshot.read(spark, corpusPath)
+        .select(col("vec_id").as("neighbor_id"), col("embedding")),
+        "neighbor_id")
+      .join(broadcast(queries), "query_id")
+      .select(col("query_id"), col("neighbor_id"),
+        round(SimilarityOps.dot(col("q_embedding"), col("embedding"))
+          * lit(1000000.0)).cast("long").as("score_micros"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", "rank", "score_micros")
+  }
+
+  /** A cell-clustered component table. Hive partition inference may
+    * narrow `centroid_id` to INT; pin it back to the id type every
+    * join side uses. */
+  def cellsRead(spark: SparkSession, cellsDir: String): DataFrame =
+    Snapshot.read(spark, cellsDir)
+      .withColumn("centroid_id", col("centroid_id").cast("long"))
+
+  /** Per-cell member counts — the skew probe [[driftRebalance]] gates
+    * on. One column-pruned scan of `centroid_id`, partial-aggregated;
+    * nlist rows out. */
+  def cellSizes(spark: SparkSession, cellsDir: String): DataFrame =
+    cellsRead(spark, cellsDir).groupBy("centroid_id")
+      .agg(count(lit(1)).as("n"))
+
+  /** Probe `nprobe` cells per query: the (query_id, q_embedding,
+    * centroid_id) rows — widened by `extend` — are checkpointed, and
+    * their distinct cell ids (bounded by nlist, one tiny driver read)
+    * turn the cells scan into a fragment-pruned read: a
+    * `centroid_id IN (…)` filter that drops whole cell fragments at
+    * plan time (IvfIndexSpec pins the PartitionFilters).
+    * @return (per-(query, probed cell) rows, pruned cells scan) */
+  def probeCells(spark: SparkSession, cellsDir: String,
+                 queries: DataFrame, centroids: DataFrame, nprobe: Int)
+                (extend: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val qcells = extend(SimilarityOps.assignCentroids(
+        queries.select(col("query_id").as("vec_id"),
+          col("q_embedding").as("embedding")), centroids, nprobe)
+      .select(col("vec_id").as("query_id"),
+        col("embedding").as("q_embedding"), col("centroid_id")))
+      .localCheckpoint()
+    // centroid_id inherits the corpus vec_id's type — cast before the
+    // driver read so an INT-keyed corpus cannot ClassCastException
+    val probes = qcells.select(col("centroid_id").cast("long"))
+      .distinct().collect().map(_.getLong(0)).toSeq
+    (qcells, cellsRead(spark, cellsDir)
+      .filter(col("centroid_id").isin(probes: _*)))
+  }
+
+  /** The drift gate both IVF-family rebalances share: measure the
+    * max/median cell-size skew, and past `threshold` hand a
+    * Lloyd-TRAINED replacement codebook to `rebuild` — one place for
+    * the policy, so the two families cannot diverge.
+    * @return (rebalanced?, max cell rows, median cell rows) — the
+    *         PRE-rebalance skew measurements */
+  def driftRebalance(spark: SparkSession, corpusPath: String,
+                     sizes: DataFrame, threshold: Double, nlist: Int)
+                    (rebuild: DataFrame => Unit): (Boolean, Long, Long) = {
+    val (mx, med) = skewOf(sizes)
+    val fire = med > 0 && mx.toDouble / med >= threshold
+    if (fire) rebuild(
+      SimilarityOps.kmeansTrain(Snapshot.read(spark, corpusPath), nlist)
+        .select(col("centroid_id"), col("c_embedding")))
+    (fire, mx, med)
+  }
+
+  /** (max, median) of the per-cell counts (nlist-bounded collect). */
+  def skewOf(sizes: DataFrame): (Long, Long) = {
+    val ns = sizes.select("n").collect().map(_.getLong(0)).sorted
+    if (ns.isEmpty) (0L, 0L) else (ns.last, ns(ns.length / 2))
   }
 }

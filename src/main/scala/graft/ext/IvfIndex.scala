@@ -19,47 +19,33 @@ import org.apache.spark.sql.functions._
   * <indexDir>/_ivf_meta   corpus version + nlist (atomic)
   * ```
   *
-  * Same lifecycle contract as [[PqIndex]]: [[build]] stamps the corpus
-  * snapshot version the cells describe; [[refresh]] discovers the
-  * change set from the corpus's commit window
-  * ([[IndexDelta.changesSince]] — O(window delta) except a
-  * copy-on-write rebase, never a plain corpus re-scan), assigns the
-  * net-appended rows against the broadcast centroids, and commits
-  * them as a MOR sidecar — base cell files untouched; reads stay
-  * correct because the sidecar merge applies the probe filter to the
-  * (small) append frame too, and `rewrite_position_delete_files`-style
-  * compaction re-fragments the delta on the maintenance cadence.
-  * Corpus DELETES propagate as a key-scoped equality delete on the
-  * cells table in the same commit — the case IVF can least afford to
-  * miss: its cells store the embeddings and search never joins back
-  * to the corpus, so a lingering cell row WOULD be served as a
-  * neighbor. [[search]] refuses a stale index. */
+  * The lifecycle (build token, open step, refresh, crash replay) is
+  * [[IndexDelta]]'s. Refresh assigns the net-appended rows against
+  * the broadcast centroids and commits them as a MOR sidecar — base
+  * cell files untouched; reads stay correct because the sidecar merge
+  * applies the probe filter to the (small) append frame too, and
+  * `rewrite_position_delete_files`-style compaction re-fragments the
+  * delta on the maintenance cadence. Corpus DELETES propagate as a
+  * key-scoped equality delete on the cells table in the same commit —
+  * the case IVF can least afford to miss: its cells store the
+  * embeddings and search never joins back to the corpus, so a
+  * lingering cell row WOULD be served as a neighbor. */
 object IvfIndex {
 
   /** `cellsVersion`: crash detector for the idempotence guard — see
     * [[PqIndex.Meta]]. */
   final case class Meta(corpusVersion: Long, cellsVersion: Long,
-                        nlist: Int)
+                        nlist: Int, buildToken: String)
+      extends IndexDelta.Stamp
 
   def centroidsDir(indexDir: String): String = s"$indexDir/centroids"
   def cellsDir(indexDir: String): String = s"$indexDir/cells"
-  private val MetaFile = "_ivf_meta"
 
-  def meta(indexDir: String): Option[Meta] =
-    IndexDelta.readMeta(indexDir, MetaFile, "IVF", 3)
-      .map(p => Meta(p(0).toLong, p(1).toLong, p(2).toInt))
+  private val Family = new IndexDelta.Family[Meta]("IVF", "IvfIndex",
+    "_ivf_meta", 4, p => Meta(p(0).toLong, p(1).toLong, p(2).toInt, p(3)),
+    d => Seq(centroidsDir(d), cellsDir(d)))
 
-  private def corpusVersionOf(corpusPath: String): Long =
-    Snapshot.currentVersion(corpusPath).getOrElse(
-      throw new IllegalStateException(
-        s"IVF index requires a versioned corpus snapshot at " +
-          s"$corpusPath"))
-
-  /** Hive partition inference may narrow `centroid_id` to INT; pin it
-    * back to the id type every join side uses. */
-  private def cellsRead(spark: SparkSession, indexDir: String): DataFrame =
-    Snapshot.read(spark, cellsDir(indexDir))
-      .withColumn("centroid_id", col("centroid_id").cast("long"))
+  def meta(indexDir: String): Option[Meta] = Family.meta(indexDir)
 
   /** Build (or rebuild): sample the codebook, assign every vector to
     * its single nearest cell, store the corpus CLUSTERED BY CELL.
@@ -75,61 +61,41 @@ object IvfIndex {
   private def buildWith(spark: SparkSession, corpusPath: String,
                         indexDir: String, centroids0: DataFrame,
                         nlist: Int): Long = {
-    val version = corpusVersionOf(corpusPath)
+    val version = Family.corpusVersionOf(corpusPath)
     val corpus = Snapshot.read(spark, corpusPath)
     val centroids = centroids0.localCheckpoint()
-    // one token rides BOTH component commits: a reader caught between
-    // the two swaps of a rebuild sees mismatched tokens and raises
-    // instead of probing new centroids against old cells
-    val token = IndexDelta.newBuildToken()
-    // independent component writes — overlap (guide §2.6); the cells
-    // write consumes the already-checkpointed centroids frame
-    graft.pipeline.Par.both(
-      Snapshot.createOrReplaceWithMeta(centroids, centroidsDir(indexDir),
-        keepVersions = 1, IndexDelta.BuildTokenFile, token),
-      Snapshot.createOrReplacePartitioned(
-        SimilarityOps.assignCentroids(corpus, centroids, 1),
-        cellsDir(indexDir), Seq("centroid_id"), keepVersions = 1,
-        metaName = Some(IndexDelta.BuildTokenFile), metaContent = token))
-    IndexDelta.writeMeta(indexDir, MetaFile, Meta(version,
-      Snapshot.currentVersion(cellsDir(indexDir)).getOrElse(0L), nlist))
+    // the cells write consumes the already-checkpointed centroids
+    Family.commitBuild(indexDir, Seq(
+      IndexDelta.component(centroidsDir(indexDir))(centroids),
+      IndexDelta.component(cellsDir(indexDir), "centroid_id")(
+        SimilarityOps.assignCentroids(corpus, centroids, 1))))(token =>
+      Meta(version, Snapshot.currentVersion(cellsDir(indexDir))
+        .getOrElse(0L), nlist, token))
     // row count from the freshly written (sidecar-free) cells
     // fragments' parquet footers — no read+count job (r19)
     Snapshot.parquetFooterRowCount(cellsDir(indexDir))
   }
 
-  /** Apply the commit-window change set ([[IndexDelta.changesSince]] —
-    * O(window delta), no corpus re-scan): net-appended vectors assign
+  /** Apply the commit-window change set
+    * ([[IndexDelta.Family.refreshTable]]): net-appended vectors assign
     * against the frozen centroids and land as a MOR sidecar; deleted
     * corpus keys propagate as a key-scoped equality delete on the
-    * cells table in the same commit. A crashed partial refresh
-    * (detected from `cellsVersion`) replays as a self-healing upsert.
-    * @return newly assigned vectors */
+    * cells table in the same commit. @return newly assigned vectors */
   def refresh(spark: SparkSession, corpusPath: String,
-              indexDir: String, compactAfterCommits: Int = 64): Long = {
-    val im = meta(indexDir).getOrElse(throw new IllegalStateException(
-      s"no IVF index at $indexDir (build first)"))
-    val version = corpusVersionOf(corpusPath)
-    if (version == im.corpusVersion) return 0L
-    val n = IndexDelta.applyRefresh(spark, corpusPath,
-        cellsDir(indexDir), im.cellsVersion, im.corpusVersion, version,
-        "IVF index", compactAfterCommits = compactAfterCommits) { delta =>
-      val centroids = Snapshot.read(spark, centroidsDir(indexDir))
-      SimilarityOps.assignCentroids(delta, centroids, 1)
+              indexDir: String, compactAfterCommits: Int = 64): Long =
+    Family.refreshTable(spark, corpusPath, indexDir, cellsDir(indexDir),
+        compactAfterCommits)(_.cellsVersion,
+        (im, v, tv) => im.copy(corpusVersion = v, cellsVersion = tv)) {
+      (_, delta) => SimilarityOps.assignCentroids(delta,
+          Snapshot.read(spark, centroidsDir(indexDir)), 1)
         .withColumn("centroid_id", col("centroid_id").cast("long"))
     }
-    IndexDelta.writeMeta(indexDir, MetaFile,
-      im.copy(corpusVersion = version, cellsVersion =
-        Snapshot.currentVersion(cellsDir(indexDir)).getOrElse(0L)))
-    n
-  }
 
-  /** Per-cell member counts of the stored index — the skew probe
-    * `rebalance` gates on. One column-pruned scan of `centroid_id`,
-    * partial-aggregated; nlist rows out. */
+  /** Per-cell member counts of the stored index
+    * ([[IndexDelta.cellSizes]]) — the skew probe `rebalance` gates
+    * on. */
   def cellSizes(spark: SparkSession, indexDir: String): DataFrame =
-    cellsRead(spark, indexDir).groupBy("centroid_id")
-      .agg(count(lit(1)).as("n"))
+    IndexDelta.cellSizes(spark, cellsDir(indexDir))
 
   /** Index maintenance under DRIFT: appends assign to FROZEN
     * centroids, so a corpus whose distribution moved scatters new
@@ -138,7 +104,7 @@ object IvfIndex {
     * region leans toward bloats (the skew signal). `rebalance`
     * measures the max/median cell-size ratio and, when it crosses
     * `threshold`, RE-CLUSTERS with a Lloyd-TRAINED codebook
-    * ([[SimilarityOps.kmeansTrain]] — trained centroids converge onto
+    * ([[IndexDelta.driftRebalance]] — trained centroids converge onto
     * the drifted clusters, which a fresh random sample only hits by
     * luck; SoakDrift measures the recall restored), re-assigning
     * every vector through the same atomic snapshot swaps — a
@@ -149,72 +115,24 @@ object IvfIndex {
   def rebalance(spark: SparkSession, corpusPath: String,
                 indexDir: String,
                 threshold: Double): (Boolean, Long, Long) = {
-    val im = meta(indexDir).getOrElse(throw new IllegalStateException(
-      s"no IVF index at $indexDir (build first)"))
-    driftRebalance(spark, corpusPath, cellSizes(spark, indexDir),
-      threshold, im.nlist)(centroids =>
+    val (im, _) = Family.open(indexDir, corpusPath, read = false)
+    IndexDelta.driftRebalance(spark, corpusPath,
+      cellSizes(spark, indexDir), threshold, im.nlist)(centroids =>
       buildWith(spark, corpusPath, indexDir, centroids, im.nlist))
   }
 
-  /** The drift gate both IVF-family rebalances share: measure the
-    * max/median cell-size skew, and past `threshold` hand a
-    * Lloyd-TRAINED replacement codebook to `rebuild` — one place for
-    * the policy, so the two families cannot diverge.
-    * @return (rebalanced?, max cell rows, median cell rows) — the
-    *         PRE-rebalance skew measurements */
-  private[ext] def driftRebalance(spark: SparkSession,
-                                  corpusPath: String, sizes: DataFrame,
-                                  threshold: Double, nlist: Int)
-                                 (rebuild: DataFrame => Unit)
-      : (Boolean, Long, Long) = {
-    val (mx, med) = skewOf(sizes)
-    val fire = med > 0 && mx.toDouble / med >= threshold
-    if (fire) rebuild(
-      SimilarityOps.kmeansTrain(Snapshot.read(spark, corpusPath), nlist)
-        .select(col("centroid_id"), col("c_embedding")))
-    (fire, mx, med)
-  }
-
-  /** (max, median) of the per-cell counts (nlist-bounded collect). */
-  private[graft] def skewOf(sizes: DataFrame): (Long, Long) = {
-    val ns = sizes.select("n").collect().map(_.getLong(0)).sorted
-    if (ns.isEmpty) (0L, 0L) else (ns.last, ns(ns.length / 2))
-  }
-
-  /** Probe `nprobe` cells per query and rescore exactly within them —
-    * the cells scan carries a `centroid_id IN (…)` filter that PRUNES
-    * whole cell fragments at plan time (IvfIndexSpec pins the
-    * PartitionFilters). Raises when the index is stale.
+  /** Probe `nprobe` cells per query ([[IndexDelta.probeCells]] — the
+    * cells scan prunes to the probed fragments at plan time) and
+    * rescore exactly within them. Raises when the index is stale.
     * @param queries (query_id, q_embedding)
     * @return (query_id, neighbor_id, rank, score) */
   def search(spark: SparkSession, corpusPath: String, indexDir: String,
              queries: DataFrame, k: Int, nprobe: Int,
              excludeSelf: Boolean = true): DataFrame = {
-    val im = meta(indexDir).getOrElse(throw new IllegalStateException(
-      s"no IVF index at $indexDir (build first)"))
-    val version = corpusVersionOf(corpusPath)
-    if (version != im.corpusVersion)
-      throw new IllegalStateException(
-        s"IVF index at $indexDir is STALE: it clusters corpus version " +
-          s"${im.corpusVersion} but the live corpus is v$version — " +
-          "run IvfIndex.refresh or rebuild")
-    IndexDelta.requireCoherent(indexDir,
-      Seq(centroidsDir(indexDir), cellsDir(indexDir)), "IVF index")
-    val centroids = Snapshot.read(spark, centroidsDir(indexDir))
-    val queryCells = SimilarityOps.assignCentroids(
-        queries.select(col("query_id").as("vec_id"),
-          col("q_embedding").as("embedding")), centroids, nprobe)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_embedding"), col("centroid_id"))
-      .localCheckpoint()
-    // the probed cell ids — bounded by nlist, one tiny driver read
-    // that turns the cells scan into a fragment-pruned read; cast
-    // first (centroid_id inherits the corpus vec_id's type, and an
-    // INT-keyed corpus would ClassCastException the driver read)
-    val probes = queryCells.select(col("centroid_id").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val cells = cellsRead(spark, indexDir)
-      .filter(col("centroid_id").isin(probes: _*))
+    Family.open(indexDir, corpusPath, read = true)
+    val (queryCells, cells) = IndexDelta.probeCells(spark,
+      cellsDir(indexDir), queries,
+      Snapshot.read(spark, centroidsDir(indexDir)), nprobe)(identity)
     val scored = cells.join(broadcast(queryCells), "centroid_id")
       .filter(if (excludeSelf) col("query_id") =!= col("vec_id")
               else lit(true))

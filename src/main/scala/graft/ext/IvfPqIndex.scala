@@ -39,12 +39,11 @@ import org.apache.spark.sql.functions._
   * variant (`residual = false`, kept for comparison — the recall
   * audit lays them side by side).
   *
-  * Same lifecycle contract as the parents: build stamps the corpus
-  * version; refresh assigns + encodes the commit-window change set
-  * ([[IndexDelta.changesSince]] — O(window delta), no corpus
-  * re-scan) as a MOR sidecar, propagating corpus deletes as a
-  * key-scoped equality delete on the codes table; search refuses a
-  * stale index. */
+  * The lifecycle is [[IndexDelta]]'s, and so are the read steps it
+  * shares with the parents (the cell probe, the book decode, the
+  * exact rerank): refresh assigns + encodes the commit-window change
+  * set as a MOR sidecar, propagating corpus deletes as a key-scoped
+  * equality delete on the codes table. */
 object IvfPqIndex {
 
   /** `cellsVersion`: crash detector for the idempotence guard — see
@@ -52,27 +51,19 @@ object IvfPqIndex {
     * `x − centroid(cell)` (classic IVFADC) or raw vectors. */
   final case class Meta(corpusVersion: Long, cellsVersion: Long,
                         nlist: Int, m: Int, dsub: Int, ksub: Int,
-                        residual: Boolean)
+                        residual: Boolean, buildToken: String)
+      extends IndexDelta.Stamp
 
   def centroidsDir(indexDir: String): String = s"$indexDir/centroids"
   def codebookDir(indexDir: String): String = s"$indexDir/codebook"
   def cellsDir(indexDir: String): String = s"$indexDir/cells"
-  private val MetaFile = "_ivfpq_meta"
 
-  def meta(indexDir: String): Option[Meta] =
-    IndexDelta.readMeta(indexDir, MetaFile, "IVF-PQ", 7)
-      .map(p => Meta(p(0).toLong, p(1).toLong, p(2).toInt, p(3).toInt,
-        p(4).toInt, p(5).toInt, p(6) == "1"))
+  private val Family = new IndexDelta.Family[Meta]("IVF-PQ",
+    "IvfPqIndex", "_ivfpq_meta", 8, p => Meta(p(0).toLong, p(1).toLong,
+      p(2).toInt, p(3).toInt, p(4).toInt, p(5).toInt, p(6) == "1", p(7)),
+    d => Seq(centroidsDir(d), codebookDir(d), cellsDir(d)))
 
-  private def corpusVersionOf(corpusPath: String): Long =
-    Snapshot.currentVersion(corpusPath).getOrElse(
-      throw new IllegalStateException(
-        s"IVF-PQ index requires a versioned corpus snapshot at " +
-          s"$corpusPath"))
-
-  private def cellsRead(spark: SparkSession, indexDir: String): DataFrame =
-    Snapshot.read(spark, cellsDir(indexDir))
-      .withColumn("centroid_id", col("centroid_id").cast("long"))
+  def meta(indexDir: String): Option[Meta] = Family.meta(indexDir)
 
   /** Assign each vector to its cell and — in the residual arm —
     * replace `embedding` by `x − centroid(cell)` (exact float→double
@@ -130,12 +121,9 @@ object IvfPqIndex {
                         indexDir: String, centroids0: DataFrame,
                         nlist: Int, m: Int, dsub: Int, ksub: Int,
                         residual: Boolean): Long = {
-    val version = corpusVersionOf(corpusPath)
+    val version = Family.corpusVersionOf(corpusPath)
     val corpus = Snapshot.read(spark, corpusPath)
     val centroids = centroids0.localCheckpoint()
-    // one token rides all THREE component commits — see
-    // [[IndexDelta.requireCoherent]]
-    val token = IndexDelta.newBuildToken()
     val trainSrc =
       if (!residual) corpus
       else assignResidual(
@@ -143,63 +131,42 @@ object IvfPqIndex {
           .offset(nlist).limit(ksub),
         centroids, residual = true)
     // the book collect must precede the cells write (the encoder
-    // consumes the literal book); the three component WRITES are then
-    // independent — overlap them (guide §2.6)
+    // consumes the literal book); the three component writes are then
+    // independent
     val book = SimilarityOps.pqCollectBook(trainSrc, m, dsub, ksub)
-    graft.pipeline.Par.all(Seq(
-      () => Snapshot.createOrReplaceWithMeta(centroids,
-        centroidsDir(indexDir), keepVersions = 1,
-        IndexDelta.BuildTokenFile, token),
-      () => Snapshot.createOrReplaceWithMeta(
-        SimilarityOps.pqBookFrame(spark, book),
-        codebookDir(indexDir), keepVersions = 1,
-        IndexDelta.BuildTokenFile, token),
-      () => Snapshot.createOrReplacePartitioned(
+    Family.commitBuild(indexDir, Seq(
+      IndexDelta.component(centroidsDir(indexDir))(centroids),
+      IndexDelta.component(codebookDir(indexDir))(
+        SimilarityOps.pqBookFrame(spark, book)),
+      IndexDelta.component(cellsDir(indexDir), "centroid_id")(
         assignAndEncode(spark, corpus, centroids, book, m, dsub,
-          residual),
-        cellsDir(indexDir), Seq("centroid_id"), keepVersions = 1,
-        metaName = Some(IndexDelta.BuildTokenFile), metaContent = token)))
-    IndexDelta.writeMeta(indexDir, MetaFile, Meta(version,
-      Snapshot.currentVersion(cellsDir(indexDir)).getOrElse(0L),
-      nlist, m, dsub, ksub, residual))
+          residual))))(token =>
+      Meta(version, Snapshot.currentVersion(cellsDir(indexDir))
+        .getOrElse(0L), nlist, m, dsub, ksub, residual, token))
     // row count from the freshly written (sidecar-free) cells
     // fragments' parquet footers — no read+count job (r19)
     Snapshot.parquetFooterRowCount(cellsDir(indexDir))
   }
 
-  /** Assign + encode the commit-window change set as a MOR sidecar —
-    * O(window delta); deleted corpus keys propagate as a key-scoped
-    * equality delete on the codes table in the same commit; a crashed
-    * partial refresh replays as a self-healing upsert.
-    * @return newly indexed vectors */
+  /** Assign + encode the commit-window change set as a MOR sidecar
+    * ([[IndexDelta.Family.refreshTable]]) — O(window delta); deleted
+    * corpus keys propagate as a key-scoped equality delete on the
+    * codes table in the same commit. @return newly indexed vectors */
   def refresh(spark: SparkSession, corpusPath: String,
-              indexDir: String, compactAfterCommits: Int = 64): Long = {
-    val im = meta(indexDir).getOrElse(throw new IllegalStateException(
-      s"no IVF-PQ index at $indexDir (build first)"))
-    val version = corpusVersionOf(corpusPath)
-    if (version == im.corpusVersion) return 0L
-    val n = IndexDelta.applyRefresh(spark, corpusPath,
-        cellsDir(indexDir), im.cellsVersion, im.corpusVersion, version,
-        "IVF-PQ index", compactAfterCommits = compactAfterCommits) { delta =>
-      val centroids = Snapshot.read(spark, centroidsDir(indexDir))
-      val book = Snapshot.read(spark, codebookDir(indexDir))
-        .select("sub", "code", "c_sub").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
-        .toSeq.sortBy(t => (t._1, t._2))
-      assignAndEncode(spark, delta, centroids, book,
+              indexDir: String, compactAfterCommits: Int = 64): Long =
+    Family.refreshTable(spark, corpusPath, indexDir, cellsDir(indexDir),
+        compactAfterCommits)(_.cellsVersion,
+        (im, v, tv) => im.copy(corpusVersion = v, cellsVersion = tv)) {
+      (im, delta) => assignAndEncode(spark, delta,
+        Snapshot.read(spark, centroidsDir(indexDir)),
+        IndexDelta.readBook(spark, codebookDir(indexDir)),
         im.m, im.dsub, im.residual)
     }
-    IndexDelta.writeMeta(indexDir, MetaFile,
-      im.copy(corpusVersion = version, cellsVersion =
-        Snapshot.currentVersion(cellsDir(indexDir)).getOrElse(0L)))
-    n
-  }
 
-  /** Per-cell code counts — the drift/skew probe (see
-    * [[IvfIndex.cellSizes]]). */
+  /** Per-cell code counts — the drift/skew probe
+    * ([[IndexDelta.cellSizes]]). */
   def cellSizes(spark: SparkSession, indexDir: String): DataFrame =
-    cellsRead(spark, indexDir).groupBy("centroid_id")
-      .agg(count(lit(1)).as("n"))
+    IndexDelta.cellSizes(spark, cellsDir(indexDir))
 
   /** Drift maintenance — [[IvfIndex.rebalance]]'s IVFADC twin:
     * re-cluster AND retrain the PQ book against the live corpus when
@@ -208,9 +175,8 @@ object IvfPqIndex {
   def rebalance(spark: SparkSession, corpusPath: String,
                 indexDir: String,
                 threshold: Double): (Boolean, Long, Long) = {
-    val im = meta(indexDir).getOrElse(throw new IllegalStateException(
-      s"no IVF-PQ index at $indexDir (build first)"))
-    IvfIndex.driftRebalance(spark, corpusPath,
+    val (im, _) = Family.open(indexDir, corpusPath, read = false)
+    IndexDelta.driftRebalance(spark, corpusPath,
       cellSizes(spark, indexDir), threshold, im.nlist)(centroids =>
       buildWith(spark, corpusPath, indexDir, centroids,
         im.nlist, im.m, im.dsub, im.ksub, im.residual))
@@ -224,17 +190,7 @@ object IvfPqIndex {
   def search(spark: SparkSession, corpusPath: String, indexDir: String,
              queries: DataFrame, k: Int, nprobe: Int, shortlist: Int,
              excludeSelf: Boolean = true): DataFrame = {
-    val im = meta(indexDir).getOrElse(throw new IllegalStateException(
-      s"no IVF-PQ index at $indexDir (build first)"))
-    val version = corpusVersionOf(corpusPath)
-    if (version != im.corpusVersion)
-      throw new IllegalStateException(
-        s"IVF-PQ index at $indexDir is STALE: it indexes corpus " +
-          s"version ${im.corpusVersion} but the live corpus is " +
-          s"v$version — run IvfPqIndex.refresh or rebuild")
-    IndexDelta.requireCoherent(indexDir,
-      Seq(centroidsDir(indexDir), codebookDir(indexDir),
-        cellsDir(indexDir)), "IVF-PQ index")
+    val (im, _) = Family.open(indexDir, corpusPath, read = true)
     val centroids = Snapshot.read(spark, centroidsDir(indexDir))
       .localCheckpoint()
     // per-(query, probed cell) rows; the residual arm also carries the
@@ -242,25 +198,16 @@ object IvfPqIndex {
     // q·x ≈ q·c_cell + Σ_s q_s·book(code_s)) — nprobe broadcast-side
     // rows per query, quantized to the same exact BIGINT micros as the
     // table lookups so the sum stays order-free
-    val qcells0 = SimilarityOps.assignCentroids(
-        queries.select(col("query_id").as("vec_id"),
-          col("q_embedding").as("embedding")), centroids, nprobe)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_embedding"), col("centroid_id"))
-    val qcells =
-      (if (!im.residual) qcells0.withColumn("qc_micros", lit(0L))
-       else qcells0
-         .join(broadcast(centroids), "centroid_id")
-         .withColumn("qc_micros",
-           round(SimilarityOps.dot(col("q_embedding"),
-             col("c_embedding")) * lit(1000000.0)).cast("long"))
-         .drop("c_embedding"))
-        .localCheckpoint()
-    // centroid_id inherits the corpus vec_id's type — cast before the
-    // driver read so an INT-keyed corpus cannot ClassCastException
-    // (the cellsRead side already pins long for the same reason)
-    val probes = qcells.select(col("centroid_id").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSeq
+    val (qcells, cells) = IndexDelta.probeCells(spark,
+        cellsDir(indexDir), queries, centroids, nprobe) { qcells0 =>
+      if (!im.residual) qcells0.withColumn("qc_micros", lit(0L))
+      else qcells0
+        .join(broadcast(centroids), "centroid_id")
+        .withColumn("qc_micros",
+          round(SimilarityOps.dot(col("q_embedding"),
+            col("c_embedding")) * lit(1000000.0)).cast("long"))
+        .drop("c_embedding")
+    }
     // per-query partial inner products against the broadcast codebook
     // (the full query slices in BOTH arms: for residual codes the
     // lookup approximates q_s·r_s, the residual's contribution)
@@ -271,9 +218,8 @@ object IvfPqIndex {
           slice(col("q_embedding"), col("sub") * im.dsub + 1,
             lit(im.dsub)), col("c_sub")) * lit(1000000.0)).cast("long")
           .as("pdot_micros"))
-    // fragment-pruned codes scan, scoped to each query's OWN probes
-    val exploded = cellsRead(spark, indexDir)
-      .filter(col("centroid_id").isin(probes: _*))
+    // the fragment-pruned codes scan, scoped to each query's OWN probes
+    val exploded = cells
       .join(broadcast(qcells
           .select("query_id", "centroid_id", "qc_micros")),
         "centroid_id")
@@ -292,18 +238,6 @@ object IvfPqIndex {
     val short = cand.withColumn("_rn", row_number().over(ws))
       .filter(col("_rn") <= shortlist)
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score_micros").desc, col("neighbor_id"))
-    short
-      .join(Snapshot.read(spark, corpusPath)
-        .select(col("vec_id").as("neighbor_id"), col("embedding")),
-        "neighbor_id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(SimilarityOps.dot(col("q_embedding"), col("embedding"))
-          * lit(1000000.0)).cast("long").as("score_micros"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "score_micros")
+    IndexDelta.rerank(spark, corpusPath, short, queries, k)
   }
 }

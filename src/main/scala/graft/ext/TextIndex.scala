@@ -28,17 +28,12 @@ import org.apache.spark.sql.functions._
   * for DELETE maintenance: subtracting a removed doc's length from the
   * corpus stats is a fragment-pruned lookup, never a postings scan.
   *
-  * Lifecycle contract (the family's shared discipline):
-  *  - [[build]] tokenizes the corpus AS OF the build and stamps the
-  *    corpus snapshot version the postings describe.
-  *  - [[refresh]] discovers its delta from the corpus's COMMIT WINDOW
-  *    ([[IndexDelta.changesSince]]): fast-append windows hand it
-  *    exactly the appended sidecar rows — O(appended docs), zero
-  *    corpus reads at any corpus size; a delete-carrying window
+  * The lifecycle (build token, open step, change discovery, crash
+  * replay) is [[IndexDelta]]'s; what is text-specific:
+  *  - [[refresh]] commits to TWO MOR tables: a delete-carrying window
   *    PROPAGATES as a doc-keyed equality delete on postings AND
   *    doclens (df and the corpus stats shift with it — BM25 scores of
-  *    the surviving docs change correctly, TextIndexSpec pins it); a
-  *    copy-on-write rebase falls back to the exact [[Snapshot.diff]].
+  *    the surviving docs change correctly, TextIndexSpec pins it).
   *    The 1-row stats table maintains by SIGNED INCREMENT (appended
   *    count/length from the delta itself, removed length from the
   *    bucket-pruned doclens lookup) — never recomputed from the
@@ -49,8 +44,7 @@ import org.apache.spark.sql.functions._
   *    the one honest O(doc-count) read, on the rare path only.
   *  - [[search]] scores the BM25 formula ([[TextOps.bm25Rank]] — the
   *    SAME code path as the derive-per-query operator, so results are
-  *    bit-identical by construction) over the pruned postings and
-  *    REFUSES a stale index (corpus moved past the indexed version).
+  *    bit-identical by construction) over the pruned postings.
   *
   * Corpus contract: a versioned snapshot table with `doc_id` (BIGINT,
   * unique) and `text` (whitespace-tokenized) columns — the
@@ -67,24 +61,19 @@ object TextIndex {
     * the stored schema). */
   final case class Meta(corpusVersion: Long, postingsVersion: Long,
                         doclensVersion: Long, termBuckets: Int,
-                        docBuckets: Int, positional: Boolean)
+                        docBuckets: Int, positional: Boolean,
+                        buildToken: String) extends IndexDelta.Stamp
 
   def postingsDir(indexDir: String): String = s"$indexDir/postings"
   def doclensDir(indexDir: String): String = s"$indexDir/doclens"
   def statsDir(indexDir: String): String = s"$indexDir/stats"
-  private val MetaFile = "_text_meta"
 
-  def meta(indexDir: String): Option[Meta] =
-    IndexDelta.readMeta(indexDir, MetaFile, "text", 6)
-      .map(p => Meta(p(0).toLong, p(1).toLong, p(2).toLong, p(3).toInt,
-        p(4).toInt, p(5) == "1"))
+  private val Family = new IndexDelta.Family[Meta]("text", "TextIndex",
+    "_text_meta", 7, p => Meta(p(0).toLong, p(1).toLong, p(2).toLong,
+      p(3).toInt, p(4).toInt, p(5) == "1", p(6)),
+    d => Seq(postingsDir(d), doclensDir(d), statsDir(d)))
 
-  private def corpusVersionOf(corpusPath: String): Long =
-    Snapshot.currentVersion(corpusPath).getOrElse(
-      throw new IllegalStateException(
-        s"text index requires a versioned corpus snapshot at " +
-          s"$corpusPath — the staleness contract pins index to " +
-          "corpus version"))
+  def meta(indexDir: String): Option[Meta] = Family.meta(indexDir)
 
   /** md5-derived term bucket — the same engine-portable coin as the
     * hidden `bucket()` partition transform, so an external engine
@@ -108,6 +97,23 @@ object TextIndex {
                           indexDir: String): DataFrame =
     Snapshot.read(spark, doclensDir(indexDir))
       .withColumn("doc_bucket", col("doc_bucket").cast("long"))
+
+  /** The distinct queried `term`s of `terms` (checkpointed) and the
+    * postings scan pruned to their buckets — the bucket ids are one
+    * tiny driver read, bounded by the query-term count, that turns
+    * the scan into a fragment-pruned read at plan time. Exact: a
+    * term's whole posting list lives in its bucket.
+    * @return (queried terms, pruned postings) */
+  private def queriedPostings(spark: SparkSession, indexDir: String,
+                              im: Meta, terms: DataFrame)
+      : (DataFrame, DataFrame) = {
+    val qt = terms.select("term").distinct().localCheckpoint()
+    val buckets = qt
+      .select(termBucket(col("term"), im.termBuckets).as("b"))
+      .distinct().collect().map(_.getLong(0)).toSeq
+    (qt, postingsRead(spark, indexDir)
+      .filter(col("term_bucket").isin(buckets: _*)))
+  }
 
   /** (term_bucket, term, doc_id, tf, dl) — the [[TextOps.bm25TopK]]
     * tf frame with the bucket layout column; a POSITIONAL index adds
@@ -150,26 +156,6 @@ object TextIndex {
     Snapshot.currentVersion(postingsDir(indexDir)).getOrElse(0L),
     Snapshot.currentVersion(doclensDir(indexDir)).getOrElse(0L))
 
-  /** The READ-side twin of refresh's crash detector: a rebuild that
-    * died after all three component swaps but BEFORE the meta write
-    * leaves coherent build tokens and (at an unchanged corpus
-    * version) a non-stale index — but the meta may describe the OLD
-    * bucket geometry, so a search would map query terms with the old
-    * bucket count against new-layout postings: silently incomplete
-    * results. The component versions the meta recorded are the
-    * tiebreaker — reads refuse anything the meta did not stamp. */
-  private def requireComponentsStamped(indexDir: String,
-                                       im: Meta): Unit = {
-    val (pv, dv) = componentVersions(indexDir)
-    if (pv != im.postingsVersion || dv != im.doclensVersion)
-      throw new IllegalStateException(
-        s"text index at $indexDir is MID-REBUILD (a rebuild or " +
-          "refresh died before its meta write): component versions " +
-          s"($pv, $dv) do not match the recorded " +
-          s"(${im.postingsVersion}, ${im.doclensVersion}) — run " +
-          "TextIndex.refresh (if the corpus moved) or rebuild")
-  }
-
   /** Build (or rebuild) the index: tokenize the live corpus into the
     * bucket-partitioned postings + doclens + stats, stamp the corpus
     * version. @return docs indexed */
@@ -178,36 +164,25 @@ object TextIndex {
             positional: Boolean = false): Long = {
     require(termBuckets > 0 && docBuckets > 0,
       s"bucket counts must be positive: $termBuckets/$docBuckets")
-    val version = corpusVersionOf(corpusPath)
+    val version = Family.corpusVersionOf(corpusPath)
     // tokenize+explode+partial-agg is the build's CPU-heavy map stage
     // and a small corpus snapshot arrives in 1-3 splits — r20
     // per-job trace: the postings exchange's map stage ran 1.39 s on ONE
     // task of 32. Widen when the size estimate says the scan is
     // narrow; a big corpus passes through untouched (guide §2.5).
     val corpus = Spread.widen(Snapshot.read(spark, corpusPath))
-    // one token rides every component commit — a reader caught between
-    // the swaps of a rebuild raises instead of scoring new postings
-    // against old stats
-    val token = IndexDelta.newBuildToken()
-    // the two component writes are independent tables — overlap them
-    // (guide §2.6); a crash between them was already a recoverable
-    // state (requireComponentsStamped / the refresh crash detector)
-    graft.pipeline.Par.both(
-      Snapshot.createOrReplacePartitioned(
-        postingsOf(corpus, termBuckets, positional),
-        postingsDir(indexDir),
-        Seq("term_bucket"), keepVersions = 1,
-        metaName = Some(IndexDelta.BuildTokenFile), metaContent = token),
-      Snapshot.createOrReplacePartitioned(
-        doclensOf(corpus, docBuckets), doclensDir(indexDir),
-        Seq("doc_bucket"), keepVersions = 1,
-        metaName = Some(IndexDelta.BuildTokenFile), metaContent = token))
-    Snapshot.createOrReplaceWithMeta(
-      statsFrom(doclensRead(spark, indexDir)), statsDir(indexDir),
-      keepVersions = 1, IndexDelta.BuildTokenFile, token)
-    val (pv, dv) = componentVersions(indexDir)
-    IndexDelta.writeMeta(indexDir, MetaFile,
-      Meta(version, pv, dv, termBuckets, docBuckets, positional))
+    // postings and doclens are independent tables written together;
+    // stats aggregate the freshly written doclens
+    Family.commitBuild(indexDir,
+      Seq(IndexDelta.component(postingsDir(indexDir), "term_bucket")(
+          postingsOf(corpus, termBuckets, positional)),
+        IndexDelta.component(doclensDir(indexDir), "doc_bucket")(
+          doclensOf(corpus, docBuckets))),
+      Seq(IndexDelta.component(statsDir(indexDir))(
+        statsFrom(doclensRead(spark, indexDir))))) { token =>
+      val (pv, dv) = componentVersions(indexDir)
+      Meta(version, pv, dv, termBuckets, docBuckets, positional, token)
+    }
     // the doc count was already aggregated into the 1-row stats
     // table — re-scanning doclens for the return value would double
     // the build's doclens read
@@ -221,9 +196,7 @@ object TextIndex {
     * replay. @return newly indexed docs */
   def refresh(spark: SparkSession, corpusPath: String,
               indexDir: String, compactAfterCommits: Int = 64): Long = {
-    val im = meta(indexDir).getOrElse(throw new IllegalStateException(
-      s"no text index at $indexDir (build first)"))
-    val version = corpusVersionOf(corpusPath)
+    val (im, version) = Family.open(indexDir, corpusPath, read = false)
     if (version == im.corpusVersion) return 0L
     val (pv0, dv0) = componentVersions(indexDir)
     val crashed = pv0 != im.postingsVersion || dv0 != im.doclensVersion
@@ -289,12 +262,9 @@ object TextIndex {
           lit(cur.getLong(0) - remN + added._1).as("n_docs"),
           lit(cur.getLong(1) - remDl + added._2).as("dl_sum"))
       }
-    val token = Snapshot.commitMeta(postingsDir(indexDir),
-      IndexDelta.BuildTokenFile).getOrElse("")
-    Snapshot.createOrReplaceWithMeta(newStats, statsDir(indexDir),
-      keepVersions = 1, IndexDelta.BuildTokenFile, token)
+    IndexDelta.component(statsDir(indexDir))(newStats)(im.buildToken)
     val (pv, dv) = componentVersions(indexDir)
-    IndexDelta.writeMeta(indexDir, MetaFile,
+    Family.writeMeta(indexDir,
       im.copy(corpusVersion = version, postingsVersion = pv,
         doclensVersion = dv))
     w.n
@@ -312,25 +282,9 @@ object TextIndex {
   def search(spark: SparkSession, corpusPath: String, indexDir: String,
              queryTerms: DataFrame, k: Int, k1: Double = 1.2,
              b: Double = 0.75): DataFrame = {
-    val im = meta(indexDir).getOrElse(throw new IllegalStateException(
-      s"no text index at $indexDir (build first)"))
-    val version = corpusVersionOf(corpusPath)
-    if (version != im.corpusVersion)
-      throw new IllegalStateException(
-        s"text index at $indexDir is STALE: it tokenizes corpus " +
-          s"version ${im.corpusVersion} but the live corpus is " +
-          s"v$version — run TextIndex.refresh or rebuild")
-    IndexDelta.requireCoherent(indexDir,
-      Seq(postingsDir(indexDir), doclensDir(indexDir),
-        statsDir(indexDir)), "text index")
-    requireComponentsStamped(indexDir, im)
-    val qt = queryTerms.select("term").distinct().localCheckpoint()
-    val buckets = qt
-      .select(termBucket(col("term"), im.termBuckets).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val tf = postingsRead(spark, indexDir)
-      .filter(col("term_bucket").isin(buckets: _*))
-      .join(broadcast(qt), "term")
+    val (im, _) = Family.open(indexDir, corpusPath, read = true)
+    val (qt, postings) = queriedPostings(spark, indexDir, im, queryTerms)
+    val tf = postings.join(broadcast(qt), "term")
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
     val docFreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = Snapshot.read(spark, statsDir(indexDir))
@@ -351,29 +305,14 @@ object TextIndex {
   def phraseCount(spark: SparkSession, corpusPath: String,
                   indexDir: String,
                   phrases: Seq[(String, String)]): DataFrame = {
-    val im = meta(indexDir).getOrElse(throw new IllegalStateException(
-      s"no text index at $indexDir (build first)"))
+    val (im, _) = Family.open(indexDir, corpusPath, read = true)
     if (!im.positional)
       throw new IllegalStateException(
         s"text index at $indexDir carries no positions — phrase " +
           "search needs TextIndex.build(..., positional = true)")
-    val version = corpusVersionOf(corpusPath)
-    if (version != im.corpusVersion)
-      throw new IllegalStateException(
-        s"text index at $indexDir is STALE: it tokenizes corpus " +
-          s"version ${im.corpusVersion} but the live corpus is " +
-          s"v$version — run TextIndex.refresh or rebuild")
-    IndexDelta.requireCoherent(indexDir,
-      Seq(postingsDir(indexDir), doclensDir(indexDir),
-        statsDir(indexDir)), "text index")
-    requireComponentsStamped(indexDir, im)
     val (pt, pl) = TextOps.phraseFrames(spark, phrases)
-    val qt = pt.select("term").distinct().localCheckpoint()
-    val buckets = qt
-      .select(termBucket(col("term"), im.termBuckets).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val occ = postingsRead(spark, indexDir)
-      .filter(col("term_bucket").isin(buckets: _*))
+    val (qt, postings) = queriedPostings(spark, indexDir, im, pt)
+    val occ = postings
       .join(broadcast(qt), Seq("term"), "left_semi")
       .select(col("doc_id"), col("term"),
         explode(col("positions")).as("pos"))

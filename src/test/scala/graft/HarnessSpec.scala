@@ -78,4 +78,26 @@ class HarnessSpec extends SparkSpec {
     assert(count("resolve(s\"v$v\")") == 1, "one commit-dir builder")
     assert(count("re-based past v") == 1, "one rebase-guard message")
   }
+
+  test("src/main has one persisted-index lifecycle, IndexDelta's: one " +
+    "open step, one build token, one corpus-version guard, and each " +
+    "family's meta file spelled only in its own file") {
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p.getFileName.toString -> Files.readString(p))
+    def sites(s: String) = files.flatMap { case (name, text) =>
+      Seq.fill(text.split(Pattern.quote(s), -1).length - 1)(name)
+    }
+    // (Rollup spells its own "no rollup at … (build first)")
+    Seq("index at $indexDir (build first)", "IndexDelta.newBuildToken(",
+      "def corpusVersionOf")
+      .foreach(s => assert(sites(s) == Seq("IndexDelta.scala"),
+        s"$s at ${sites(s)}"))
+    Seq("\"_pq_meta\"" -> "PqIndex.scala",
+      "\"_ivf_meta\"" -> "IvfIndex.scala",
+      "\"_ivfpq_meta\"" -> "IvfPqIndex.scala",
+      "\"_text_meta\"" -> "TextIndex.scala").foreach { case (s, own) =>
+      assert(sites(s).distinct == Seq(own), s"$s spelled in ${sites(s)}")
+    }
+  }
 }
