@@ -2,9 +2,12 @@ package graft.ext
 
 import graft.pipeline.{FsCommit, Par, Snapshot}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.graft.PruningBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The persisted-index lifecycle, one definition for the four index
   * families ([[PqIndex]], [[IvfIndex]], [[IvfPqIndex]], [[TextIndex]])
@@ -246,7 +249,8 @@ private[graft] object IndexDelta {
       case Snapshot.CommitWindow.FastAppends(dirs) =>
         Changes(
           if (dirs.isEmpty) Snapshot.read(spark, corpusPath).limit(0)
-          else dirs.map(spark.read.parquet(_)).reduce(_ unionByName _),
+          else dirs.map(PruningBridge.scan(spark, _))
+            .reduce(_ unionByName _),
           None)
       case Snapshot.CommitWindow.CarriesDeletes(_) =>
         val (net, dels) =
@@ -354,27 +358,66 @@ private[graft] object IndexDelta {
       .agg(count(lit(1)).as("n"))
 
   /** Probe `nprobe` cells per query: the (query_id, q_embedding,
-    * centroid_id) rows — widened by `extend` — are checkpointed, and
-    * their distinct cell ids (bounded by nlist, one tiny driver read)
-    * turn the cells scan into a fragment-pruned read: a
-    * `centroid_id IN (…)` filter that drops whole cell fragments at
-    * plan time (IvfIndexSpec pins the PartitionFilters).
+    * centroid_id) rows are ranked on the driver ([[nearestCells]]) and
+    * widened by `extend`; their distinct cell ids — bounded by nlist
+    * and known at plan time — turn the cells scan into a
+    * fragment-pruned read: a `centroid_id IN (…)` filter that drops
+    * whole cell fragments at plan time (IvfIndexSpec pins the
+    * PartitionFilters).
     * @return (per-(query, probed cell) rows, pruned cells scan) */
   def probeCells(spark: SparkSession, cellsDir: String,
                  queries: DataFrame, centroids: DataFrame, nprobe: Int)
                 (extend: DataFrame => DataFrame): (DataFrame, DataFrame) = {
-    val qcells = extend(SimilarityOps.assignCentroids(
-        queries.select(col("query_id").as("vec_id"),
-          col("q_embedding").as("embedding")), centroids, nprobe)
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("q_embedding"), col("centroid_id")))
-      .localCheckpoint()
-    // centroid_id inherits the corpus vec_id's type — cast before the
-    // driver read so an INT-keyed corpus cannot ClassCastException
-    val probes = qcells.select(col("centroid_id").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    (qcells, cellsRead(spark, cellsDir)
+    val (qcells, probes) = nearestCells(spark, queries, centroids, nprobe)
+    (extend(qcells), cellsRead(spark, cellsDir)
       .filter(col("centroid_id").isin(probes: _*)))
+  }
+
+  /** [[SimilarityOps.assignCentroids]] of the queries, computed on the
+    * driver: the queries and the nlist centroids are collected (a
+    * local query frame costs no job), each query_id's (query,
+    * centroid) pairs rank by `vec_dot`'s arithmetic (per-element
+    * double casts, in-order sum; null past a length mismatch) as
+    * (dot desc nulls last, centroid_id asc), and the first `nprobe`
+    * survive.
+    * @param queries (query_id, q_embedding)
+    * @return (local (query_id, q_embedding, centroid_id) frame, its
+    *         distinct centroid ids as LONG) */
+  private[graft] def nearestCells(spark: SparkSession, queries: DataFrame,
+                                  centroids: DataFrame, nprobe: Int)
+      : (DataFrame, Seq[Long]) = {
+    val q = queries.select("query_id", "q_embedding")
+    val c = centroids.select("centroid_id", "c_embedding")
+    def vec(v: Any): Array[Double] = v match {
+      case null => null
+      case s: scala.collection.Seq[_] => s.map {
+        case null => 0.0
+        case x => x.asInstanceOf[Number].doubleValue
+      }.toArray
+    }
+    val cs = c.collect().map(r => (r.get(0), vec(r.get(1))))
+    def dot(a: Array[Double], b: Array[Double]): Option[Double] =
+      if (a == null || b == null || a.length != b.length) None
+      else Some(a.indices.foldLeft(0.0)((acc, i) => acc + a(i) * b(i)))
+    def id(v: Any): Long = v.asInstanceOf[Number].longValue
+    def before(x: (Row, Any, Option[Double]),
+               y: (Row, Any, Option[Double])): Boolean = {
+      val byDot = (x._3, y._3) match {
+        case (Some(a), Some(b)) => SQLOrderingUtil.compareDoubles(b, a)
+        case (a, b) => a.isEmpty.compare(b.isEmpty)
+      }
+      byDot < 0 || (byDot == 0 && id(x._2) < id(y._2))
+    }
+    val picked = q.collect().groupBy(_.get(0)).values.toSeq.flatMap { g =>
+      g.flatMap { r =>
+        val e = vec(r.get(1))
+        cs.map { case (cid, ce) => (r, cid, dot(e, ce)) }
+      }.sortWith(before).take(nprobe)
+    }
+    (spark.createDataFrame(
+      picked.map { case (r, cid, _) => Row(r.get(0), r.get(1), cid) }.asJava,
+      q.schema.add(c.schema("centroid_id"))),
+      picked.map(p => id(p._2)).distinct)
   }
 
   /** The drift gate both IVF-family rebalances share: measure the

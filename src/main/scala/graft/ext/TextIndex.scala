@@ -98,21 +98,25 @@ object TextIndex {
     Snapshot.read(spark, doclensDir(indexDir))
       .withColumn("doc_bucket", col("doc_bucket").cast("long"))
 
-  /** The distinct queried `term`s of `terms` (checkpointed) and the
-    * postings scan pruned to their buckets — the bucket ids are one
-    * tiny driver read, bounded by the query-term count, that turns
-    * the scan into a fragment-pruned read at plan time. Exact: a
-    * term's whole posting list lives in its bucket.
-    * @return (queried terms, pruned postings) */
+  /** The postings of the queried `term`s of `terms`, pruned on the
+    * driver: the terms are collected (a local query frame costs no
+    * job) and their buckets are the same [[termBucket]] column over a
+    * local relation, which the optimizer folds on the driver — no
+    * job, and the postings' own hash by construction. The scan then
+    * filters on literal bucket and term lists: the buckets drop whole
+    * fragments at plan time, the terms keep only the queried posting
+    * lists. Exact: a term's whole posting list lives in its bucket. */
   private def queriedPostings(spark: SparkSession, indexDir: String,
-                              im: Meta, terms: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val qt = terms.select("term").distinct().localCheckpoint()
-    val buckets = qt
-      .select(termBucket(col("term"), im.termBuckets).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    (qt, postingsRead(spark, indexDir)
-      .filter(col("term_bucket").isin(buckets: _*)))
+                              im: Meta, terms: DataFrame): DataFrame = {
+    import spark.implicits._
+    val qt = terms.select("term").collect().map(_.getString(0))
+      .filter(_ != null).distinct.toSeq
+    val buckets = qt.toDF("term")
+      .select(termBucket(col("term"), im.termBuckets))
+      .collect().map(_.getLong(0)).distinct.toSeq
+    postingsRead(spark, indexDir)
+      .filter(col("term_bucket").isin(buckets: _*) &&
+        col("term").isin(qt: _*))
   }
 
   /** (term_bucket, term, doc_id, tf, dl) — the [[TextOps.bm25TopK]]
@@ -271,8 +275,8 @@ object TextIndex {
   }
 
   /** BM25 top-k from the PERSISTED index: query terms map to their
-    * buckets (one tiny driver read, bounded by the query-term count),
-    * the postings scan prunes to those fragments at plan time, df
+    * buckets on the driver, without a job ([[queriedPostings]]), the
+    * postings scan prunes to those fragments at plan time, df
     * aggregates over the pruned postings (exact — a term's whole
     * posting list lives in its bucket), and [[TextOps.bm25Rank]]
     * scores identically to the derive-per-query operator. Raises when
@@ -283,8 +287,7 @@ object TextIndex {
              queryTerms: DataFrame, k: Int, k1: Double = 1.2,
              b: Double = 0.75): DataFrame = {
     val (im, _) = Family.open(indexDir, corpusPath, read = true)
-    val (qt, postings) = queriedPostings(spark, indexDir, im, queryTerms)
-    val tf = postings.join(broadcast(qt), "term")
+    val tf = queriedPostings(spark, indexDir, im, queryTerms)
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
     val docFreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = Snapshot.read(spark, statsDir(indexDir))
@@ -311,9 +314,7 @@ object TextIndex {
         s"text index at $indexDir carries no positions — phrase " +
           "search needs TextIndex.build(..., positional = true)")
     val (pt, pl) = TextOps.phraseFrames(spark, phrases)
-    val (qt, postings) = queriedPostings(spark, indexDir, im, pt)
-    val occ = postings
-      .join(broadcast(qt), Seq("term"), "left_semi")
+    val occ = queriedPostings(spark, indexDir, im, pt)
       .select(col("doc_id"), col("term"),
         explode(col("positions")).as("pos"))
     TextOps.phraseHits(occ, pt, pl)

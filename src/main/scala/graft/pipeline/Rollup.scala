@@ -243,6 +243,12 @@ object Rollup {
     }
   }
 
+  /** The rollup's open step: its meta, or "build first"; and the
+    * live source version it must be checked against. */
+  private def open(rollupDir: String, srcPath: String): (Meta, Long) =
+    (meta(rollupDir).getOrElse(throw new IllegalStateException(
+      s"no rollup at $rollupDir (build first)")), srcVersionOf(srcPath))
+
   private def srcVersionOf(srcPath: String): Long =
     Snapshot.currentVersion(srcPath).getOrElse(
       throw new IllegalStateException(
@@ -605,9 +611,7 @@ object Rollup {
                            rollupDir: String,
                            compactAfterCommits: Int): Long =
     suppressRewrite {
-    val m = meta(rollupDir).getOrElse(throw new IllegalStateException(
-      s"no rollup at $rollupDir (build first)"))
-    val version = srcVersionOf(srcPath)
+    val (m, version) = open(rollupDir, srcPath)
     // every window is BOUNDED by the versions captured here — a
     // commit landing after the capture waits for the next refresh
     val dimUntil = m.dims.map(d =>
@@ -1416,9 +1420,7 @@ object Rollup {
     * this engine follows. */
   def read(spark: SparkSession, srcPath: String,
            rollupDir: String): DataFrame = {
-    val m = meta(rollupDir).getOrElse(throw new IllegalStateException(
-      s"no rollup at $rollupDir (build first)"))
-    val version = srcVersionOf(srcPath)
+    val (m, version) = open(rollupDir, srcPath)
     if (version != m.srcVersion)
       throw new IllegalStateException(
         s"rollup at $rollupDir is STALE: it aggregates source version " +
@@ -1461,8 +1463,7 @@ object Rollup {
   def readServe(spark: SparkSession, srcPath: String,
                 rollupDir: String,
                 maxStalenessCommits: Int = 16): DataFrame = {
-    val m = meta(rollupDir).getOrElse(throw new IllegalStateException(
-      s"no rollup at $rollupDir (build first)"))
+    val (m, _) = open(rollupDir, srcPath)
     if (isFresh(rollupDir, srcPath))
       return read(spark, srcPath, rollupDir)
     compensated(spark, srcPath, rollupDir, maxStalenessCommits,

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, regexp_replace}
+import org.apache.spark.sql.graft.PruningBridge
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import FsCommit.deleteRecursively
 
@@ -321,7 +322,7 @@ object Snapshot {
       // row. Files are grouped by schema (a table whose identifier
       // fields changed mid-history stacks both kinds); anti-join
       // removals commute, so group order is free.
-      pendingDeletes.map(spark.read.parquet(_))
+      pendingDeletes.map(PruningBridge.scan(spark, _))
         .groupBy(_.columns.sorted.toSeq).values.foreach { group =>
           val del = group.reduce(_ unionByName _)
           val cond = del.columns.toSeq
@@ -343,7 +344,7 @@ object Snapshot {
     }
     flush()
     if (posDirs.nonEmpty) {
-      val pos = posDirs.map(spark.read.parquet(_))
+      val pos = posDirs.map(PruningBridge.scan(spark, _))
         .reduce(_ unionByName _)
       df = df.join(pos,
         df(LineageFile) === pos("file_path") &&
@@ -472,7 +473,7 @@ object Snapshot {
       case Some((n, cols)) =>
         org.apache.spark.sql.graft.BucketedBridge.read(spark, dir, n, cols)
       case None =>
-        org.apache.spark.sql.graft.PruningBridge.read(spark, dir)
+        PruningBridge.read(spark, dir)
     }
     // hidden partitioning: derived transform fields (c_bucket, ts_day)
     // exist only as directory fragments — reads drop them so the
@@ -481,7 +482,7 @@ object Snapshot {
     val hidden = hiddenFieldNames(dir).filter(df.columns.contains)
     if (hidden.nonEmpty) df = df.drop(hidden: _*)
     applySidecars(spark, dir, upTo, df, withLineage,
-      a => Some(spark.read.parquet(a)))
+      a => Some(PruningBridge.scan(spark, a)))
   }
 
   /** The live state with ([[LineageFile]], [[LineagePos]]) columns —
@@ -1407,7 +1408,7 @@ object Snapshot {
     import org.apache.spark.sql.functions.{col, lit}
     val basePlan = ScanPruning.pruneDir(spark, path, ranges)
     var base =
-      if (basePlan.kept.isEmpty) spark.read.parquet(path).limit(0)
+      if (basePlan.kept.isEmpty) PruningBridge.scan(spark, path).limit(0)
       else spark.read.option("basePath", path)
         .parquet(basePlan.kept: _*)
     val hidden = hiddenFieldNames(path).filter(base.columns.contains)
@@ -1572,7 +1573,7 @@ object Snapshot {
     val root = Paths.get(path)
     val staged = matched.map { case (d, _) =>
       (root.relativize(d).toString,
-        spark.read.parquet(d.toString).coalesce(targetFiles)
+        PruningBridge.scan(spark, d.toString).coalesce(targetFiles)
           .localCheckpoint())
     }
     swapIn(path, keepVersions, Some(base), operation = "replace") { tmp =>
@@ -1655,9 +1656,9 @@ object Snapshot {
       // what matters; the one op allowed to lie about the past)
       if (underSpec)
         writeUnderCurrentSpec(
-          spark.read.parquet(dir).filter(keep), dir, tmp)
+          PruningBridge.scan(spark, dir).filter(keep), dir, tmp)
       else
-        spark.read.parquet(dir).filter(keep)
+        PruningBridge.scan(spark, dir).filter(keep)
           .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       // EVERY top-level marker file is COPIED with its mtime (the
       // commit instants TIMESTAMP AS OF travel reads) — version and
@@ -1693,27 +1694,28 @@ object Snapshot {
       // every identical instance, exactly what equality deletes remove).
       val commits = morCommits(dir)
       lazy val rawLineage: DataFrame = {
-        var base = spark.read.parquet(dir)
+        var base = PruningBridge.scan(spark, dir)
         // derived hidden-partitioning fields would otherwise leak into
         // the converted equality rows and break the sidecar schema
         val hidden = hiddenFieldNames(dir).filter(base.columns.contains)
         if (hidden.nonEmpty) base = base.drop(hidden: _*)
         commits.flatMap(_.appends).foldLeft(withLineageCols(base, dir)) {
           (df, a) =>
-            df.unionByName(withLineageCols(spark.read.parquet(a), dir))
+            df.unionByName(
+              withLineageCols(PruningBridge.scan(spark, a), dir))
         }
       }
       commits.foreach { c =>
         val dstV = morCommitDir(tmp.toString, c.version)
         Files.createDirectories(dstV)
         val converted = c.posDeletes.map { d =>
-          val pos = spark.read.parquet(d)
+          val pos = PruningBridge.scan(spark, d)
           rawLineage.join(pos,
             col(LineageFile) === pos("file_path") &&
               col(LineagePos) === pos("pos"), "left_semi")
             .drop(LineageFile, LineagePos).distinct()
         }
-        val eq = c.deletes.map(spark.read.parquet(_))
+        val eq = c.deletes.map(PruningBridge.scan(spark, _))
         // an equality file projected to IDENTIFIER FIELDS has fewer
         // columns than the converted full rows — project converted
         // rows down to ITS schema (valid under the same key-identity
@@ -1741,7 +1743,7 @@ object Snapshot {
             .parquet(dstV.resolve(Deletes).toString)
         }
         c.appends.foreach(a =>
-          spark.read.parquet(a).filter(keep)
+          PruningBridge.scan(spark, a).filter(keep)
             .write.mode(SaveMode.Overwrite)
             .parquet(dstV.resolve(Appends).toString))
         if (Files.exists(c.marker))
@@ -1950,7 +1952,8 @@ object Snapshot {
     def sidecars(kind: MorCommit => Option[String])
         : Seq[(Long, String, DataFrame)] =
       commits.flatMap(c =>
-        kind(c).map(d => (c.version, d, spark.read.parquet(d))))
+        kind(c).map(d =>
+          (c.version, d, PruningBridge.scan(spark, d))))
 
     /** The window's position pairs, each tagged with its commit
       * ([[VersionTag]]) — every commit's pairs resolve in ONE pass
@@ -1985,7 +1988,8 @@ object Snapshot {
       if (files.isEmpty) extra.foldLeft(empty)((df, c) =>
         df.withColumn(c, lit(null).cast(pairs.schema(c).dataType)))
       else {
-        val rows = spark.read.parquet(files.map(f => s"$dir/$f"): _*)
+        val rows =
+          PruningBridge.scan(spark, files.map(f => s"$dir/$f"): _*)
         val pc = pairs.distinct()
         withLineageCols(rows, dir)
           .join(pc, col(LineageFile) === pc("file_path") &&
@@ -2602,7 +2606,7 @@ object Snapshot {
       throw new java.util.NoSuchElementException(
         s"no such branch: '$name' at $path " +
           s"(branches=${branches(path).mkString(",")})")
-    spark.read.parquet(dir.toString)
+    PruningBridge.scan(spark, dir.toString)
   }
 
   /** The staged branch's directory (for plan matching — e.g.

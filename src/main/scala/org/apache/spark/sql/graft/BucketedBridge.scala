@@ -40,7 +40,7 @@ object BucketedBridge {
     * bucket partitioning are independent layers. */
   def read(spark: SparkSession, dir: String, numBuckets: Int,
            cols: Seq[String]): DataFrame = {
-    val probe = spark.read.parquet(dir)
+    val probe = PruningBridge.scan(spark, dir)
     val index = new InMemoryFileIndex(spark, Seq(new Path(dir)),
       Map.empty, None)
     val partSchema = index.partitionSpec().partitionColumns

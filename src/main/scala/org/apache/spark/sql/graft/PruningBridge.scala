@@ -1,12 +1,17 @@
 package org.apache.spark.sql.graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources._
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.HadoopFSUtils
 
 import graft.pipeline.ScanPruning
 
@@ -28,13 +33,14 @@ import graft.pipeline.ScanPruning
 object PruningBridge {
 
   /** DataFrame over a snapshot dir that plans through the stats-
-    * pruning index when a valid manifest exists; byte-identical to
-    * `spark.read.parquet(dir)` otherwise (and in results, always). */
+    * pruning index when a valid manifest exists, else the plain
+    * [[scan]]; equal in schema and results to Spark's own parquet
+    * read of `dir` either way, and planned without a Spark job. */
   def read(spark: SparkSession, dir: String): DataFrame =
     ScanPruning.manifestForSkipping(spark, dir) match {
-      case None => spark.read.parquet(dir)
+      case None => scan(spark, dir)
       case Some(stats) =>
-        val probe = spark.read.parquet(dir)
+        val probe = scan(spark, dir)
         val index = new StatsPruningFileIndex(spark, dir, stats)
         val partSchema = index.partitionSpec().partitionColumns
         val partNames = partSchema.fieldNames.toSet
@@ -44,6 +50,65 @@ object PruningBridge {
           None, new ParquetFileFormat, Map.empty)(spark)
         PlanBridge.ofRows(spark, LogicalRelation(rel))
     }
+
+  /** The parquet read of `paths` (dirs or files), planned without
+    * Spark's schema-inference job. Spark's inference reads ONE footer
+    * when schema merging is off: a summary file if any, else the first
+    * data file by path. That footer is read here on the driver through
+    * Spark's own `readSchemaFromFooter` and the session's converter,
+    * and the scan plans with the resulting schema, so Hive partition
+    * columns are still discovered and typed by Spark. Spark infers
+    * the schema itself where it would not read one footer — schema
+    * merging on, or no data file (its own error then) — and where the
+    * layout is neither flat nor Hive-partitioned, or a partition
+    * column is also stored in the file, which inference and a given
+    * schema place differently. */
+  def scan(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sessionState.conf
+    val hadoop = spark.sessionState.newHadoopConf()
+    // each file with the k=v fragment keys between its root and it;
+    // None below a plain directory, whose files Spark does not read
+    def leaves(fs: FileSystem, s: FileStatus, keys: Option[Seq[String]])
+        : Seq[(FileStatus, Option[Seq[String]])] =
+      if (!s.isDirectory) Seq(s -> keys)
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => HadoopFSUtils.shouldFilterOutPathName(
+          c.getPath.getName))
+        .flatMap { c =>
+          val name = c.getPath.getName
+          leaves(fs, c,
+            if (!c.isDirectory) keys
+            else if (name.contains('=')) keys.map(_ :+ name.takeWhile(_ != '='))
+            else None)
+        }
+    val listed = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(hadoop)
+      if (fs.exists(path)) leaves(fs, fs.getFileStatus(path), Some(Nil))
+      else Nil
+    }.sortBy(_._1.getPath.toString)
+    val files = listed.map(_._1)
+    val summaries = Seq("_common_metadata", "_metadata")
+    val footerFile = summaries
+      .flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .filterNot(_ => conf.isParquetSchemaMergingEnabled)
+    def lower(n: String) = n.toLowerCase(java.util.Locale.ROOT)
+    val schema = footerFile.map { f =>
+      val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, hadoop),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS))
+      ParquetFileFormat.readSchemaFromFooter(footer,
+        new ParquetToSparkSchemaConverter(conf))
+    }.filter { s =>
+      val stored = s.fieldNames.map(lower).toSet
+      listed.forall(_._2.exists(_.forall(k => !stored(lower(k)))))
+    }
+    schema match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
 
   /** Inclusive [[ScanPruning.ColumnRange]]s implied by a scan's pushed
     * data filters (already conjunctive). Strict comparisons widen to

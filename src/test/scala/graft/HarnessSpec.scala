@@ -88,16 +88,32 @@ class HarnessSpec extends SparkSpec {
     def sites(s: String) = files.flatMap { case (name, text) =>
       Seq.fill(text.split(Pattern.quote(s), -1).length - 1)(name)
     }
-    // (Rollup spells its own "no rollup at … (build first)")
     Seq("index at $indexDir (build first)", "IndexDelta.newBuildToken(",
       "def corpusVersionOf")
       .foreach(s => assert(sites(s) == Seq("IndexDelta.scala"),
         s"$s at ${sites(s)}"))
+    val rollupOpen = "no rollup at $rollupDir (build first)"
+    assert(sites(rollupOpen) == Seq("Rollup.scala"),
+      s"$rollupOpen at ${sites(rollupOpen)}")
     Seq("\"_pq_meta\"" -> "PqIndex.scala",
       "\"_ivf_meta\"" -> "IvfIndex.scala",
       "\"_ivfpq_meta\"" -> "IvfPqIndex.scala",
       "\"_text_meta\"" -> "TextIndex.scala").foreach { case (s, own) =>
       assert(sites(s).distinct == Seq(own), s"$s spelled in ${sites(s)}")
     }
+  }
+
+  test("the table layer and the index lifecycle scan parquet through " +
+    "one driver-side helper: Spark's own inference only as its fallback") {
+    val read = "spark.read.parquet("
+    def text(f: String) = Files.readString(Paths.get(s"src/main/scala/$f"))
+    def count(t: String) = t.split(Pattern.quote(read), -1).length - 1
+    Seq("graft/pipeline/Snapshot.scala", "graft/ext/IndexDelta.scala")
+      .foreach(f => assert(count(text(f)) == 0, s"$read in $f"))
+    val bridge = text("org/apache/spark/sql/graft/PruningBridge.scala")
+    val at = bridge.indexOf("def scan(")
+    val helper = bridge.slice(at, bridge.indexOf("\n  /**", at))
+    assert(at >= 0 && count(bridge) == 1 && count(helper) == 1,
+      s"$read outside PruningBridge.scan's fallback")
   }
 }
