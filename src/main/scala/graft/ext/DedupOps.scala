@@ -11,13 +11,25 @@ import org.apache.spark.sql.functions._
   *  - near-dup NEVER does an all-pairs join — candidates come from a
   *    band-bucket equi-join (LSH), so the shuffle key is (band, bucket)
   *    and only colliding documents meet; the exact Jaccard check runs on
-  *    candidate pairs only, with shingle sets re-joined by id so the
-  *    band shuffle carries ids, not arrays;
+  *    candidate pairs only;
+  *  - shingle-set arrays cross only BROADCAST joins: a shuffle carries
+  *    ids and band keys, and the sets are re-joined by id after it;
+  *  - a side small enough for the driver lives there:
+  *    [[decontaminate]] fetches a driver-sized corpus side once, under
+  *    the shared [[org.apache.spark.sql.graft.DriverFetch]] bound, and
+  *    holds it as a local relation, so only the other side is scanned,
+  *    once, and nothing of either side is shuffled;
+  *  - every kernel runs once per input side: a computed array is
+  *    exploded with `explode_outer`, because an inner `explode` makes
+  *    the optimizer infer a `size(array) > 0` filter, push it below the
+  *    projection and evaluate the whole kernel twice;
   *  - SimHash reduces a document to one 32-bit signature; its bit-prefix
   *    buckets drive the same banded-join pattern.
   *
-  * Everything is built-in expressions (md5/sha2, array lambdas) —
-  * deterministic, codegen-friendly, mirrored in DuckDB oracle SQL.
+  * Built-in expressions plus the native kernels of `graft.functions`
+  * (word shingles, md5 prefixes, MinHash and SimHash signatures), each
+  * bit-identical to a composable twin — deterministic, mirrored in
+  * DuckDB oracle SQL.
   */
 object DedupOps {
 
@@ -92,12 +104,21 @@ object DedupOps {
 
   /** 32-bit base hash per shingle (first 8 md5 hex digits). */
   private def baseHashes(shingleCol: Column): Column =
-    transform(shingleCol,
-      x => conv(substring(md5(x), 1, 8), 16, 10).cast("long"))
+    TextOps.md5Prefixes(shingleCol)
 
   /** Distinct word-shingle set for a document. */
   def shingleSet(text: Column, shingleSize: Int = 3): Column =
     array_distinct(TextOps.shingles(text, shingleSize))
+
+  /** One row per distinct shingle of each document's text, as column
+    * `sh`; a null text gives no row. The set is never empty otherwise,
+    * so `explode_outer` emits exactly `explode`'s rows without the
+    * inferred filter that would shingle every text twice. */
+  private def explodeShingles(docs: DataFrame, cols: Seq[Column],
+                              text: Column, shingleSize: Int): DataFrame =
+    docs.select(cols :+ explode_outer(shingleSet(text, shingleSize))
+        .as("sh"): _*)
+      .filter(col("sh").isNotNull)
 
   /** All `NumHashes` affine minima in ONE array pass — the native
     * codegen'd [[graft.functions.MinHashSignature]] (bit-identical to
@@ -143,7 +164,7 @@ object DedupOps {
       struct(lit(b).as("band"), md5(concat_ws("|", cols: _*)).as("band_key"))
     }
     signed
-      .withColumn("_bk", explode(array(bandKeys: _*)))
+      .withColumn("_bk", explode_outer(array(bandKeys: _*)))
       .select(col(idCol), col("_bk.band").as("band"),
         col("_bk.band_key").as("band_key"))
   }
@@ -316,19 +337,43 @@ object DedupOps {
     * bit-identical to [[bandedSignatures]]'s (same md5 over the same
     * minhash slice strings), just built without re-shingling. */
   private def bandedFromShingled(shingled: DataFrame, idCol: String,
-                                 shCol: String): DataFrame = {
-    val signed = shingled
+                                 shCol: String): DataFrame =
+    withBandKeys(shingled, shCol)
+      .select(col(idCol) +: explodeBands(col("_bk")): _*)
+
+  /** `df` plus `_bk`, the `Bands` LSH band keys of the shingle set in
+    * `shCol` as array<string> (band b at index b): md5 over each band's
+    * minhash slice. The signature is bound in its own projection, so
+    * the kernel runs once per row and not once per band element. */
+  private def withBandKeys(df: DataFrame, shCol: String): DataFrame = {
+    val signed = df
       .withColumn("_sig", signatureExpr(baseHashes(col(shCol))))
-    val bandKeys = (0 until Bands).map { b =>
+    val keys = (0 until Bands).map { b =>
       val cols = (b * RowsPerBand until (b + 1) * RowsPerBand)
         .map(i => element_at(col("_sig"), i + 1).cast("string"))
-      struct(lit(b).as("band"),
-        md5(concat_ws("|", cols: _*)).as("band_key"))
+      md5(concat_ws("|", cols: _*))
     }
-    signed
-      .withColumn("_bk", explode(array(bandKeys: _*)))
-      .select(col(idCol), col("_bk.band").as("band"),
-        col("_bk.band_key").as("band_key"))
+    signed.withColumn("_bk", array(keys: _*)).drop("_sig")
+  }
+
+  /** (band, band_key) rows of a band-key array. It always holds `Bands`
+    * keys, so `explode_outer` emits exactly `explode`'s rows, without
+    * the inferred `size > 0` filter that re-signs every document. */
+  private def explodeBands(bk: Column): Seq[Column] =
+    Seq(posexplode_outer(bk).as(Seq("band", "band_key")))
+
+  /** One signed row per document of `docs`: the `keep` columns, the
+    * distinct shingle set `_sh` and the band keys `_bk`. */
+  private def signedDocs(docs: DataFrame, keep: Seq[String],
+                         textCol: String, shingleSize: Int): DataFrame =
+    withBandKeys(docs.select(keep.map(col) :+
+      shingleSet(col(textCol), shingleSize).as("_sh"): _*), "_sh")
+
+  private def jaccardAtLeast(a: Column, b: Column,
+                             minJaccard: Double): Column = {
+    val inter = size(array_intersect(a, b))
+    val union = size(a) + size(b) - inter
+    inter.cast("double") / union.cast("double") >= minJaccard
   }
 
   /** X2e — DECONTAMINATION: drop from `corpus` every document that is
@@ -336,65 +381,169 @@ object DedupOps {
     * hygiene pass that keeps benchmark/eval text out of a training set.
     * Asymmetric X2: banded MinHash candidates ACROSS the two relations
     * (corpus bands × blocklist bands on (band, band_key) — never
-    * all-pairs), exact-Jaccard verify against the blocklist shingle
-    * sets, then one LEFT ANTI join removes contaminated ids.
+    * all-pairs), then an exact-Jaccard verify of each candidate pair.
+    * Every plan below uses the same shingle sets, band keys and Jaccard
+    * expression; they differ only in join strategy and in where the
+    * rows live, so their outputs are identical (asserted in
+    * DedupOpsSpec).
     *
-    * Scale: with the default `broadcastBlocklist = true` (right when
-    * the blocklist is tiny next to a 100-TB corpus — a benchmark
-    * suite vs a web crawl) its banded signatures and shingle sets
-    * broadcast; the corpus is signed in one pass and only
-    * (id, band_key) pairs and ids cross shuffles — the anti-join is
-    * the single corpus-keyed exchange. When the blocklist is itself a
-    * corpus (eval-suite unions running to many GB), pass
-    * `broadcastBlocklist = false`: the candidate and verify joins
-    * become ordinary shuffle joins on (band, band_key) / bid — same
-    * output, proven by DedupOpsSpec — and the blocklist side is
-    * materialized like the corpus side so its signature pipeline runs
-    * once.
+    * Where the rows live:
+    *  - a corpus side within the driver bound (an arriving shard, an
+    *    eval split) is signed in ONE distributed pass inside the
+    *    bounded [[org.apache.spark.sql.graft.DriverFetch]] and held on
+    *    the driver as a local relation. The blocklist is then streamed
+    *    once: signed, its bands exploded and broadcast-joined to the
+    *    local bands, which carry their shingle sets, and the Jaccard
+    *    verify runs at the join. The contaminated ids — a subset of
+    *    the held side — come back through a partition-level distinct,
+    *    and the held corpus minus them is returned without a job
+    *    (null-id rows are kept, as a `left_anti` join keeps them).
+    *    This is the incremental-ingest shape: a small arriving side
+    *    against an archive read once, whatever `broadcastBlocklist`
+    *    says;
+    *  - otherwise, with the default `broadcastBlocklist = true` (a
+    *    benchmark suite against a web crawl), the blocklist's bands
+    *    broadcast with their shingle sets and the corpus streams past
+    *    them once; only contaminated ids reach the anti-join's
+    *    exchange;
+    *  - otherwise, with `broadcastBlocklist = false` (eval-suite unions
+    *    running to many GB), each side is signed into ONE materialized
+    *    (id, shingle set, band keys) frame; the candidate join shuffles
+    *    (band, band_key, id) rows, and the shingle sets are re-joined
+    *    by id after it, so no array crosses a shuffle.
+    *
+    * @param materialize how to pin the twice-consumed signed frames of
+    *   the `broadcastBlocklist = false` plan; the other two plans
+    *   consume each side once and never call it.
     */
   def decontaminate(corpus: DataFrame, blocklist: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text",
                     shingleSize: Int = 3, minJaccard: Double = 0.5,
                     broadcastBlocklist: Boolean = true,
                     materialize: DataFrame => DataFrame =
-                      _.localCheckpoint()): DataFrame = {
-    // hint for the blocklist side of each join: broadcast when small,
-    // plain shuffle-join (plus materialization, since the bands and
-    // sets frames are each join inputs built from the same signature
-    // pipeline) when the blocklist is corpus-sized
-    val side: DataFrame => DataFrame =
-      if (broadcastBlocklist) broadcast else materialize
-    // each side shingles ONCE (r20, guide §1.2): the shingle sets feed
-    // both the band pipeline and the exact verify — r19 re-shingled
-    // the corpus (and, on the non-broadcast path, the blocklist) on
-    // each of the two paths
+                      _.localCheckpoint()): DataFrame =
+    decontaminateBounded(corpus, blocklist, idCol, textCol, shingleSize,
+      minJaccard, broadcastBlocklist, materialize,
+      org.apache.spark.sql.graft.DriverFetch.MaxRows,
+      org.apache.spark.sql.graft.DriverFetch.MaxBytes)
+
+  /** [[decontaminate]] with the driver bound as a parameter — the test
+    * hook that forces the distributed plans (bound 0). */
+  private[ext] def decontaminateBounded(
+      corpus: DataFrame, blocklist: DataFrame, idCol: String,
+      textCol: String, shingleSize: Int, minJaccard: Double,
+      broadcastBlocklist: Boolean, materialize: DataFrame => DataFrame,
+      maxRows: Int, maxBytes: Long): DataFrame = {
+    // the corpus is spread to full parallelism before it is signed — a
+    // small parquet arrives in few splits and would sign on few cores
     val spread = Spread.widen(corpus)
-    val corpusShingled = materialize(spread.select(col(idCol),
-      shingleSet(col(textCol), shingleSize).as("sh")))
-    val corpusBands = materialize(
-      bandedFromShingled(corpusShingled, idCol, "sh"))
-    val blockShingled0 = blocklist.select(col(idCol),
-      shingleSet(col(textCol), shingleSize).as("sh"))
-    val blockShingled =
-      if (broadcastBlocklist) blockShingled0
-      else materialize(blockShingled0)
-    val blockBands = bandedFromShingled(blockShingled, idCol, "sh")
-    val cand = corpusBands.as("c")
-      .join(side(blockBands.as("b")), Seq("band", "band_key"))
-      .select(col(s"c.$idCol").as("cid"), col(s"b.$idCol").as("bid"))
-      .dropDuplicates("cid", "bid")
-    val corpusSets = corpusShingled.select(col(idCol).as("cid"),
-      col("sh").as("sh_c"))
-    val blockSets = blockShingled.select(col(idCol).as("bid"),
-      col("sh").as("sh_b"))
-    val inter = size(array_intersect(col("sh_c"), col("sh_b")))
-    val union = size(col("sh_c")) + size(col("sh_b")) - inter
-    val contaminated = cand
-      .join(corpusSets, "cid")
-      .join(side(blockSets), "bid")
-      .filter(inter.cast("double") / union.cast("double") >= minJaccard)
-      .select(col("cid").as(idCol)).distinct()
-    corpus.join(contaminated, Seq(idCol), "left_anti")
+    val heldSig = signedDocs(spread, corpus.columns.toIndexedSeq, textCol,
+      shingleSize)
+    val held =
+      if (!heldIdType(corpus.schema(idCol).dataType)) None
+      else org.apache.spark.sql.graft.DriverFetch.rows(heldSig, maxRows,
+        maxBytes)
+    val blockSig = signedDocs(blocklist, Seq(idCol), textCol, shingleSize)
+    held match {
+      case Some(rows) =>
+        decontaminateHeld(corpus.schema, heldSig.schema, rows, blockSig,
+          idCol, minJaccard)
+      case None if broadcastBlocklist =>
+        val contaminated = broadcastHits(
+            signedDocs(spread, Seq(idCol), textCol, shingleSize), blockSig,
+            idCol, minJaccard, broadcastCorpus = false)
+          .select(col("cid").as(idCol)).distinct()
+        corpus.join(contaminated, Seq(idCol), "left_anti")
+      case None =>
+        val corpusSig = materialize(signedDocs(spread, Seq(idCol),
+          textCol, shingleSize))
+        val blockSide = materialize(blockSig)
+        val cand = corpusSig
+          .select(col(idCol).as("cid") +: explodeBands(col("_bk")): _*)
+          .join(blockSide.select(col(idCol).as("bid") +:
+            explodeBands(col("_bk")): _*), Seq("band", "band_key"))
+          .select("cid", "bid")
+          .dropDuplicates("cid", "bid")
+        val contaminated = cand
+          .join(corpusSig.select(col(idCol).as("cid"),
+            col("_sh").as("sh_c")), "cid")
+          .join(blockSide.select(col(idCol).as("bid"),
+            col("_sh").as("sh_b")), "bid")
+          .filter(jaccardAtLeast(col("sh_c"), col("sh_b"), minJaccard))
+          .select(col("cid").as(idCol)).distinct()
+        corpus.join(contaminated, Seq(idCol), "left_anti")
+    }
+  }
+
+  /** Corpus ids `cid` (with repeats) of the verified candidate pairs of
+    * two signed frames, whose band rows carry their shingle sets into
+    * ONE band join that broadcasts the corpus side when
+    * `broadcastCorpus`, else the blocklist side. */
+  private def broadcastHits(corpusSig: DataFrame, blockSig: DataFrame,
+                            idCol: String, minJaccard: Double,
+                            broadcastCorpus: Boolean): DataFrame = {
+    def bands(sig: DataFrame, id: String, sh: String) =
+      sig.select(col(idCol).as(id) +: col("_sh").as(sh) +:
+        explodeBands(col("_bk")): _*)
+    val c = bands(corpusSig, "cid", "sh_c")
+    val b = bands(blockSig, "bid", "sh_b")
+    val joined =
+      if (broadcastCorpus) b.join(broadcast(c), Seq("band", "band_key"))
+      else c.join(broadcast(b), Seq("band", "band_key"))
+    joined.filter(jaccardAtLeast(col("sh_c"), col("sh_b"), minJaccard))
+      .select("cid")
+  }
+
+  /** Id types whose driver-side equality is the join's: integral,
+    * binary-collated strings, dates and timestamps. Any other id type
+    * takes the distributed plans. */
+  private def heldIdType(t: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    t match {
+      case ByteType | ShortType | IntegerType | LongType | DateType |
+           TimestampType | TimestampNTZType => true
+      case st: StringType => st == StringType
+      case _ => false
+    }
+  }
+
+  /** The held plan of [[decontaminate]]: `rows` (schema `heldSchema`)
+    * are the corpus's rows (schema `schema`), each followed by its
+    * shingle set and band keys. The blocklist streams past them once;
+    * the held rows minus the contaminated ids are returned as a local
+    * relation. */
+  private def decontaminateHeld(
+      schema: org.apache.spark.sql.types.StructType,
+      heldSchema: org.apache.spark.sql.types.StructType,
+      rows: Array[org.apache.spark.sql.catalyst.InternalRow],
+      blockSig: DataFrame, idCol: String, minJaccard: Double): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      UnsafeProjection}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes
+    import org.apache.spark.sql.graft.PlanBridge
+    val spark = blockSig.sparkSession
+    val heldSig = PlanBridge.ofRows(spark,
+      LocalRelation(toAttributes(heldSchema), rows.toSeq))
+    val hits = broadcastHits(heldSig, blockSig, idCol, minJaccard,
+      broadcastCorpus = true)
+    val idAt = schema.fieldIndex(idCol)
+    val idType = schema(idAt).dataType
+    val contaminated: Set[Any] = hits.queryExecution.toRdd
+      .mapPartitions { it =>
+        val seen = scala.collection.mutable.HashSet.empty[Any]
+        it.foreach(r => if (!r.isNullAt(0))
+          seen += InternalRow.copyValue(r.get(0, idType)))
+        seen.iterator
+      }.collect().toSet
+    val project = UnsafeProjection.create(schema.fields.toIndexedSeq
+      .zipWithIndex.map { case (f, i) =>
+        BoundReference(i, f.dataType, f.nullable) })
+    val kept = rows.iterator
+      .filter(r => r.isNullAt(idAt) || !contaminated(r.get(idAt, idType)))
+      .map(r => project(r).copy()).toIndexedSeq
+    PlanBridge.ofRows(spark, LocalRelation(toAttributes(schema), kept))
   }
 
   /** X2j — EXACT n-gram contamination scrub: drop every corpus
@@ -450,11 +599,11 @@ object DedupOps {
     // is broadcast, the hits count partial-aggregates on cid before
     // its shuffle); on the shuffle path it rides the h-keyed exchange
     // — the honest price of exactness.
-    val corpusSh = corpus.select(col(idCol).as("cid"),
-        explode(shingleSet(col(textCol), shingleSize)).as("sh"))
+    val corpusSh = explodeShingles(corpus, Seq(col(idCol).as("cid")),
+        col(textCol), shingleSize)
       .select(col("cid"), hashFn(col("sh")).as("h"), col("sh"))
-    val blockSh = blocklist
-      .select(explode(shingleSet(col(textCol), shingleSize)).as("sh_b"))
+    val blockSh = explodeShingles(blocklist, Nil, col(textCol), shingleSize)
+      .select(col("sh").as("sh_b"))
       .distinct()
       .select(hashFn(col("sh_b")).as("h"), col("sh_b"))
     // shingle sets are per-doc distinct and blocklist shingles are
@@ -498,9 +647,9 @@ object DedupOps {
     // times — on a cluster this is the durable inverted-index table an
     // exact-Jaccard pipeline wants anyway (pass a write-then-read
     // materializer, as with [[nearDuplicates]]).
-    val posting = materialize(spread
-      .select(col(idCol).as("id"),
-        explode(shingleSet(col(textCol), shingleSize)).as("shingle")))
+    val posting = materialize(explodeShingles(spread,
+        Seq(col(idCol).as("id")), col(textCol), shingleSize)
+      .select(col("id"), col("sh").as("shingle")))
     ngramJaccardFromPosting(posting, minJaccard, maxDf)
   }
 
@@ -690,10 +839,9 @@ object DedupOps {
   def ngramJaccardAudit(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text", shingleSize: Int = 3,
                         maxDf: Int = 50): DataFrame =
-    postingCapAudit(docs
-      .select(col(idCol).as("id"),
-        explode(shingleSet(col(textCol), shingleSize)).as("shingle")),
-      "shingle", maxDf)
+    postingCapAudit(explodeShingles(docs, Seq(col(idCol).as("id")),
+        col(textCol), shingleSize)
+      .select(col("id"), col("sh").as("shingle")), "shingle", maxDf)
 
   /** SimHash bit width: 32 (8 md5 hex digits × 4 bits). */
   val SimHashBits = 32

@@ -8,9 +8,10 @@ import org.apache.spark.sql.types._
   * tokenization, word counts, tf-idf, n-gram language ID, quality
   * scoring, token counting, document fingerprinting.
   *
-  * All scalar work is built-in Catalyst expressions (whole-stage
-  * codegen); the only shuffles are the groupBy/join aggregations that
-  * genuinely need them. Everything is deterministic and mirrored 1:1 in
+  * All scalar work is built-in Catalyst expressions or the native
+  * kernels of `graft.functions` (whole-stage codegen); the only
+  * shuffles are the groupBy/join aggregations that genuinely need
+  * them. Everything is deterministic and mirrored 1:1 in
   * DuckDB oracle SQL (`graft.queries.ExtQueries`).
   *
   * Cross-engine float discipline: scores are built from integer counts
@@ -462,18 +463,42 @@ object TextOps {
     sha2(trim(lower(text)), 256)
 
   /** Word n-gram shingles (the MinHash input): contiguous `n`-token
-    * windows joined by ' '. Array built-ins only — no UDF. */
-  def shingles(text: Column, n: Int): Column = {
+    * windows of [[tokens]] joined by ' ', and a text of fewer than `n`
+    * tokens as itself. The native one-pass
+    * [[graft.functions.WordShingles]] — linear in the text, where
+    * [[shinglesFold]] re-splits it once per window; bit-identical to
+    * it, asserted in TextOpsSpec. */
+  def shingles(text: Column, n: Int): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      graft.functions.WordShingles(
+        org.apache.spark.sql.graft.ColumnBridge.expression(text), n))
+
+  /** The composable reference form of [[shingles]]: array built-ins
+    * only, the twin the native expression is tested against. */
+  def shinglesFold(text: Column, n: Int): Column = {
     val toks = tokens(text)
     when(size(toks) < n, array(concat_ws(" ", toks)))
       .otherwise(transform(sequence(lit(0), size(toks) - n),
         i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
   }
 
+  /** 32-bit md5 prefix of every element of a string array, as
+    * array<long>: the native [[graft.functions.Md5Prefix]], one digest
+    * per element; bit-identical to [[md5PrefixesFold]]. */
+  def md5Prefixes(strings: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      graft.functions.Md5Prefix(
+        org.apache.spark.sql.graft.ColumnBridge.expression(strings)))
+
+  /** The composable reference form of [[md5Prefixes]]: the first 8
+    * hex digits of each md5, parsed as an unsigned 32-bit value. */
+  def md5PrefixesFold(strings: Column): Column =
+    transform(strings,
+      s => conv(substring(md5(s), 1, 8), 16, 10).cast("long"))
+
   /** 32-bit rolling hash per `k`-gram (md5 prefix), as array<long>. */
   def kgramHashes(text: Column, k: Int = 3): Column =
-    transform(shingles(text, k),
-      s => conv(substring(md5(s), 1, 8), 16, 10).cast("long"))
+    md5Prefixes(shingles(text, k))
 
   /** Native one-pass winnowing (monotonic-deque sliding minimum,
     * O(n) vs the composable form's O(n·w) interpreted lambdas) —

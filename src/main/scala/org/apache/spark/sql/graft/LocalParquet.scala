@@ -27,54 +27,49 @@ import org.apache.spark.sql.types.StructType
   * SCALE GUARDS (this must never collapse a real table write to the
   * driver): [[tryWrite]] first consults the optimizer's size
   * estimate and bails to the caller's distributed write above
-  * `GateBytes`; under it, the rows are fetched with ONE unbounded
-  * `executeCollect`, and the tiny path is abandoned after the collect
-  * when the rows exceed `MaxRows` or their bytes exceed 4 × the
-  * gate. The estimate gate is therefore the only bound on what the
-  * collect pulls to the driver: an estimate that lies low is not
-  * caught until the rows are already in driver memory. Every byte is
+  * `GateBytes`; under it, the rows are fetched through
+  * [[DriverFetch.rows]], which checks the rows themselves against the
+  * shared driver bound (65,536 rows, 64 MB) and cancels its one job
+  * once they pass it. An estimate that lies low therefore costs at
+  * most the bound in driver memory, never the frame. Every byte is
   * still computed from the inputs on every call — this changes WHERE
   * the parquet encoder runs, never what is written.
   */
 object LocalParquet {
 
-  private val MaxRows = 65536
   private val GateBytes = 16L * 1024 * 1024
 
   /** Write `df` as one driver-written parquet part file under `dir`
     * when it is provably tiny; return false (writing nothing) when
-    * the size estimate or the post-collect cap says otherwise — the
+    * the size estimate or the fetch's bound says otherwise — the
     * caller then runs its normal distributed write.
     *
-    * The fetch is ONE `executeCollect` job, not an `executeTake`
-    * ramp: take's incremental partition scan (1 → 4 → 16 …) re-runs
-    * the frame's derivation once per round — measured costlier than
-    * the write job it was meant to replace on multi-source MOR
-    * frames. The plan-size gate is what bounds the collect (scans
+    * The fetch is ONE job, not an `executeTake` ramp: take's
+    * incremental partition scan (1 → 4 → 16 …) re-runs the frame's
+    * derivation once per round — measured costlier than the write job
+    * it was meant to replace on multi-source MOR frames. The plan-size
+    * gate keeps a large input from even starting the fetch (scans
     * estimate as file bytes, aggregates proportional to their child,
-    * so a 100-TB input never reaches it); the row/byte caps after
-    * the collect are the backstop for a badly lying estimate, at the
-    * price of re-running the frame distributed. */
+    * so a 100-TB input never reaches it); the fetch's bound is the
+    * backstop for a badly lying estimate, at the price of re-running
+    * the frame distributed. */
   def tryWrite(df: DataFrame, dir: Path): Boolean = {
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes > GateBytes)
       return false
-    val rows = df.queryExecution.executedPlan.executeCollect()
-    if (rows.length > MaxRows) return false
-    var bytes = 0L
-    rows.foreach {
-      case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
-        bytes += u.getSizeInBytes
-      case _ => bytes += 64
+    DriverFetch.rows(df) match {
+      case Some(rows) => write(df, rows, dir); true
+      case None => false
     }
-    if (bytes > 4 * GateBytes) return false
-    write(df, rows, dir)
-    true
   }
 
+  /** Writes `rows` as the only part file of `dir`: whatever `dir`
+    * held is removed first, as the distributed write's Overwrite
+    * does. */
   private def write(df: DataFrame, rows: Array[InternalRow],
                     dir: Path): Unit = {
     val spark = df.sparkSession
     val schema = df.schema
+    graft.pipeline.FsCommit.deleteRecursively(dir)
     Files.createDirectories(dir)
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val factory = new ParquetFileFormat()

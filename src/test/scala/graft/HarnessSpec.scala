@@ -103,6 +103,22 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("src/main fetches rows to the driver by executeCollect only " +
+    "inside the bounded fetch") {
+    val call = "executeCollect("
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p.getFileName.toString -> Files.readString(p))
+    def count(t: String) = t.split(Pattern.quote(call), -1).length - 1
+    val hits = files.filter(f => count(f._2) > 0).map(_._1)
+    assert(hits == Seq("DriverFetch.scala"), s"$call in $hits")
+    val fetch = files.find(_._1 == "DriverFetch.scala").get._2
+    val at = fetch.indexOf("def rows(")
+    val body = fetch.slice(at, fetch.indexOf("\n  private def", at))
+    assert(at >= 0 && count(body) == count(fetch),
+      s"$call outside DriverFetch.rows")
+  }
+
   test("the table layer and the index lifecycle scan parquet through " +
     "one driver-side helper: Spark's own inference only as its fallback") {
     val read = "spark.read.parquet("

@@ -1,7 +1,11 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JobCount
+import scala.jdk.CollectionConverters._
 
 class DedupOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -180,6 +184,184 @@ class DedupOpsSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(viaBroadcast.nonEmpty)
     assert(viaShuffle == viaBroadcast)
+    // the fixture corpus fits the driver bound, so both calls above
+    // held it locally; bound 0 forces each distributed plan
+    for (bcast <- Seq(true, false)) {
+      val distributed = DedupOps.decontaminateBounded(corpus, block,
+        "doc_id", "text", 3, 0.4, bcast, _.localCheckpoint(), 0, 0L)
+      assert(!distributed.queryExecution.optimizedPlan
+        .isInstanceOf[LocalRelation], s"broadcast=$bcast")
+      assert(distributed.select("doc_id").as[Long].collect().sorted.toSeq
+        == viaBroadcast, s"broadcast=$bcast")
+    }
+  }
+
+  /** `n` seeded documents over a small vocabulary, so near twins and
+    * shared shingles are common. */
+  private def seededTexts(seed: Long, n: Int): IndexedSeq[String] = {
+    val r = new scala.util.Random(seed)
+    val vocab = IndexedSeq.tabulate(40)(i => s"w$i")
+    IndexedSeq.fill(n)(Seq.fill(8 + r.nextInt(20))(vocab(r.nextInt(40)))
+      .mkString(" "))
+  }
+
+  private def perturb(t: String, r: scala.util.Random): String = {
+    val ws = t.split(" ")
+    ws(r.nextInt(ws.length)) = "zz" + r.nextInt(5)
+    ws.mkString(" ")
+  }
+
+  private val docSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("doc_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("text",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("tag",
+      org.apache.spark.sql.types.StringType)))
+
+  /** An RDD-backed frame, like an arriving shard: its optimizer
+    * estimate is unknown, so only the fetch's row count decides. */
+  private def rddFrame(rows: Seq[(java.lang.Long, String, String)])
+  : org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (i, t, g) => org.apache.spark.sql.Row(i, t, g) }, 3),
+      docSchema)
+
+  test("decontaminate's held plan equals both distributed plans on " +
+    "seeded corpora: copies, twins, null and empty text, null, " +
+    "duplicate and shared ids") {
+    def id(i: Long): java.lang.Long = i
+    val noId: java.lang.Long = null
+    for (seed <- 1L to 3L) {
+      val r = new scala.util.Random(seed)
+      val blockTexts = seededTexts(seed * 31, 12)
+      val block = rddFrame(blockTexts.zipWithIndex.map { case (t, i) =>
+        (id(500L + i), t, "b")
+      } ++ Seq((noId, blockTexts(0), "b"), (id(501L), null, "b"),
+        (id(502L), "", "b")))
+      val plain = seededTexts(seed * 31 + 7, 30)
+      val corpusRows = plain.zipWithIndex.map { case (t, i) =>
+          (id(i.toLong), t, s"plain$i")
+        } ++ Seq(
+          (id(100L), blockTexts(1), "copy"),
+          (id(101L), perturb(blockTexts(2), r), "twin"),
+          (id(102L), perturb(blockTexts(3), r), "twin"),
+          (id(103L), null, "null text"),
+          (id(104L), "", "empty text"),
+          (noId, blockTexts(4), "null id, copy"),
+          (noId, plain(0), "null id"),
+          (id(105L), blockTexts(5), "dup id, copy"),
+          (id(105L), plain(1), "dup id"),
+          (id(500L), plain(2), "id shared with the blocklist"),
+          (id(501L), blockTexts(6), "shared id, copy"))
+      val corpus = rddFrame(corpusRows)
+      def rowsOf(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      for (bcast <- Seq(true, false)) {
+        val held = DedupOps.decontaminate(corpus, block,
+          broadcastBlocklist = bcast)
+        assert(held.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+        val distributed = DedupOps.decontaminateBounded(corpus, block,
+          "doc_id", "text", 3, 0.5, bcast, _.localCheckpoint(), 0, 0L)
+        val kept = rowsOf(held)
+        assert(kept == rowsOf(distributed), s"seed=$seed broadcast=$bcast")
+        val tags = held.select("tag").as[String].collect().toSet
+        // a null id never matches, as in a left_anti join; one
+        // contaminated row of an id takes its duplicates with it
+        assert(Set("null id, copy", "null id", "null text",
+          "id shared with the blocklist").subsetOf(tags), s"$seed: $tags")
+        assert((tags intersect Set("copy", "dup id, copy", "dup id",
+          "shared id, copy", "empty text")).isEmpty, s"$seed: $tags")
+      }
+    }
+  }
+
+  /** The optimized plans the block produced, captured by a rule at the
+    * end of the session optimizer's batches. */
+  private def optimizedPlans(body: => Any): Seq[LogicalPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val capture = new Rule[LogicalPlan] {
+      def apply(p: LogicalPlan): LogicalPlan = { seen.add(p); p }
+    }
+    val before = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = before :+ capture
+    try body finally spark.experimental.extraOptimizations = before
+    seen.asScala.toSeq
+  }
+
+  /** Per plan, the input relations of each operator evaluating
+    * `kernel`, once per occurrence: a repeat is one side's kernel
+    * evaluated twice. */
+  private def kernelSides(plans: Seq[LogicalPlan],
+                          kernel: Class[_]): Seq[Seq[Seq[LogicalPlan]]] =
+    plans.map(_.collect { case node =>
+      val hits = node.expressions.map(_.collect {
+        case e if kernel.isInstance(e) => e }.size).sum
+      Seq.fill(hits)(node.collectLeaves())
+    }.flatten)
+
+  test("the shingle and MinHash kernels run once per input side in " +
+    "every plan of decontaminate, nearDuplicates, exactContamination " +
+    "and ngramJaccardPairs (no inferred explode filter re-runs them)") {
+    val dir = java.nio.file.Files.createTempDirectory("dedup-pin").toString
+    rddFrame(seededTexts(21, 400).zipWithIndex.map { case (t, i) =>
+      (java.lang.Long.valueOf(i.toLong), t, "c") }).drop("tag")
+      .write.parquet(s"$dir/c")
+    val corpus = spark.read.parquet(s"$dir/c")
+    // a second scan, so each side has its own input relation
+    val block = spark.read.parquet(s"$dir/c").filter(col("doc_id") % 10 === 0)
+    val shard = rddFrame(corpus.limit(40).collect().toSeq.map(row =>
+      (java.lang.Long.valueOf(row.getLong(0)), row.getString(1), "s")))
+      .drop("tag")
+    val ops: Seq[(String, () => Any, Boolean)] = Seq(
+      ("decontaminate held", () => DedupOps.decontaminate(shard, corpus,
+        broadcastBlocklist = false).collect(), true),
+      ("decontaminate broadcast", () => DedupOps.decontaminateBounded(
+        corpus, block, "doc_id", "text", 3, 0.5, true, _.localCheckpoint(),
+        0, 0L).collect(), true),
+      ("decontaminate shuffle", () => DedupOps.decontaminateBounded(
+        corpus, block, "doc_id", "text", 3, 0.5, false,
+        _.localCheckpoint(), 0, 0L).collect(), true),
+      ("nearDuplicates", () => DedupOps.nearDuplicates(corpus).collect(),
+        true),
+      ("exactContamination", () => DedupOps.exactContamination(corpus,
+        block, broadcastBlocklist = false).collect(), false),
+      ("ngramJaccardPairs", () => DedupOps.ngramJaccardPairs(corpus,
+        maxDf = 1000).collect(), false))
+    for ((name, op, signs) <- ops) {
+      val plans = optimizedPlans(op())
+      val kernels = classOf[graft.functions.WordShingles] +:
+        (if (signs) Seq(classOf[graft.functions.MinHashSignature]) else Nil)
+      for (k <- kernels) {
+        val sides = kernelSides(plans, k)
+        assert(sides.exists(_.nonEmpty), s"$name: no ${k.getSimpleName}")
+        sides.foreach(s => assert(s.distinct.size == s.size,
+          s"$name: ${k.getSimpleName} evaluated twice for one side"))
+      }
+    }
+  }
+
+  test("a 300-document RDD shard decontaminated against a parquet " +
+    "corpus launches at most 4 jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("dedup-jobs").toString
+    val texts = seededTexts(11, 1200)
+    rddFrame(texts.zipWithIndex.map { case (t, i) =>
+      (java.lang.Long.valueOf(i.toLong), t, "c") }).drop("tag")
+      .write.parquet(s"$dir/c")
+    val corpus = spark.read.parquet(s"$dir/c")
+    val r = new scala.util.Random(12)
+    val shard = rddFrame((0 until 300).map { j =>
+      val t = if (j % 10 == 0) perturb(texts(r.nextInt(texts.size)), r)
+        else seededTexts(1000L + j, 1).head
+      (java.lang.Long.valueOf(100000L + j), t, "s")
+    }).drop("tag")
+    val (kept, jobs) = JobCount.of(spark)(
+      DedupOps.decontaminate(shard, corpus, broadcastBlocklist = false)
+        .select("doc_id").as[Long].collect())
+    assert(kept.length < 300)
+    // the same spec measured 14 jobs when the corpus was shingled,
+    // checkpointed, banded and shuffle-joined against the shard
+    assert(jobs <= 4, s"$jobs jobs")
   }
 
   test("incrementalExactDedup drops archive duplicates, keeps new " +
@@ -266,6 +448,32 @@ class DedupOpsSpec extends SparkSpec {
       .as[(Seq[Option[Long]], Seq[Option[Long]])].head()
     assert(empty._1 == empty._2)
     assert(empty._1 == Seq.fill(DedupOps.NumHashes)(None))
+    // signatures and LSH band keys over the native shingle and md5
+    // kernels equal the all-composable pipeline
+    def keys(sig: org.apache.spark.sql.Column) =
+      (0 until DedupOps.Bands).map { b =>
+        md5(concat_ws("|", (b * DedupOps.RowsPerBand until
+          (b + 1) * DedupOps.RowsPerBand)
+          .map(i => element_at(sig, i + 1).cast("string")): _*))
+      }
+    val fold = docs
+      .withColumn("_b", TextOps.md5PrefixesFold(
+        array_distinct(TextOps.shinglesFold(col("text"), 3))))
+      .withColumn("_sig", DedupOps.signatureFold(col("_b")))
+      .select(col("doc_id") +: col("_sig") +: keys(col("_sig")): _*)
+      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    val native = docs
+      .withColumn("_sig", DedupOps.signatureExpr(TextOps.md5Prefixes(
+        DedupOps.shingleSet(col("text")))))
+      .select(col("doc_id") +: col("_sig") +: keys(col("_sig")): _*)
+      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    assert(fold.nonEmpty && native == fold)
+    val banded = DedupOps.bandedSignatures(docs)
+      .select("doc_id", "band", "band_key").as[(Long, Int, String)]
+      .collect().toSet
+    assert(banded == fold.toSeq.flatMap { case (id, v) =>
+      v.tail.zipWithIndex.map { case (k, b) => (id, b, k.toString) }
+    }.toSet)
   }
 
   test("native simhash_sig is bit-identical to the 32-aggregate " +

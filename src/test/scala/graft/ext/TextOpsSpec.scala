@@ -17,6 +17,74 @@ class TextOpsSpec extends SparkSpec {
     assert(short == Seq("a b"))
   }
 
+  /** Seeded texts of 1-40 words over ASCII and multibyte words, with
+    * runs of one to three spaces between them. */
+  private def seededTexts(seed: Long, n: Int): Seq[String] = {
+    val r = new scala.util.Random(seed)
+    val words = IndexedSeq("a", "bb", "ccc", "héllo", "wörld", "日本語",
+      "テキスト", "😀", "x1", "the", "quick", "fox")
+    Seq.fill(n)(Seq.fill(1 + r.nextInt(40))(words(r.nextInt(words.size)))
+      .mkString(" " * (1 + r.nextInt(3))))
+  }
+
+  test("native word shingles are bit-identical to the split/slice " +
+    "form for n = 1…5, on seeded texts and on edge texts") {
+    val edges = Seq("", "a", "a b", "a b c d e f", "a  b", "  a b  ",
+      " ", "a b ", " a b", "héllo wörld ünïcode 日本語 テキスト 😀 x",
+      "x  y   z    w", null)
+    val texts = edges.map(Option(_)).toDF("text")
+      .union(seededTexts(5, 300).toDF("text"))
+    for (n <- 1 to 5) {
+      val both = texts
+        .select(col("text"), TextOps.shingles(col("text"), n).as("native"),
+          TextOps.shinglesFold(col("text"), n).as("fold"))
+        .as[(Option[String], Option[Seq[String]], Option[Seq[String]])]
+        .collect()
+      assert(both.length > edges.length)
+      both.foreach { case (t, native, fold) =>
+        assert(native == fold, s"n=$n text=$t")
+      }
+      // the driver-side (interpreted) evaluation agrees with the
+      // whole-stage (generated) one
+      val interpreted = edges.map(t => graft.functions.WordShingles(
+          org.apache.spark.sql.catalyst.expressions.Literal(
+            org.apache.spark.unsafe.types.UTF8String.fromString(t),
+            org.apache.spark.sql.types.StringType), n).eval())
+        .map(a => Option(a).map(_.asInstanceOf[
+          org.apache.spark.sql.catalyst.util.ArrayData]
+          .toSeq[org.apache.spark.unsafe.types.UTF8String](
+            org.apache.spark.sql.types.StringType).map(_.toString)))
+      assert(interpreted == both.take(edges.length).map(_._3).toSeq, s"n=$n")
+    }
+    // the edges the composable form defines: fewer than n tokens is the
+    // text itself, empty tokens are tokens, null stays null
+    val sh = one("a  b").select(TextOps.shingles(col("text"), 2))
+      .head().getSeq[String](0)
+    assert(sh == Seq("a ", " b"))
+    assert(one("a b").select(TextOps.shingles(col("text"), 3))
+      .head().getSeq[String](0) == Seq("a b"))
+  }
+
+  test("native md5 prefixes are bit-identical to conv(substring(md5(x), " +
+    "1, 8), 16, 10), null elements included") {
+    val arrays = Seq(Some(Seq(Some("a"), None, Some(""), Some("héllo"))),
+      Some(Seq.empty[Option[String]]), None,
+      Some(Seq(Some("the quick brown"), Some("quick brown fox"))))
+      .toDF("xs")
+      .union(seededTexts(6, 300).toDF("text")
+        .select(TextOps.shinglesFold(col("text"), 3).as("xs")))
+    val both = arrays
+      .select(TextOps.md5Prefixes(col("xs")).as("native"),
+        TextOps.md5PrefixesFold(col("xs")).as("fold"))
+      .as[(Option[Seq[Option[Long]]], Option[Seq[Option[Long]]])].collect()
+    assert(both.length > 4)
+    both.foreach { case (n, f) => assert(n == f) }
+    assert(both.head._1.get(1).isEmpty && both(2)._1.isEmpty)
+    // every prefix is an unsigned 32-bit value
+    assert(both.flatMap(_._1.toSeq.flatten.flatten)
+      .forall(h => h >= 0L && h < (1L << 32)))
+  }
+
   test("regex token count: words, numbers, symbols") {
     val n = one("ab 12 c-d").select(
       TextOps.regexTokenCount(col("text"))).head().getInt(0)

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.LocalParquet
+import scala.jdk.CollectionConverters._
 
 /** The driver-side tiny-write path (r20) must be indistinguishable
   * on disk from `df.write.parquet`: same rows, same read-back schema
@@ -56,6 +57,55 @@ class LocalParquetSpec extends SparkSpec {
     try assert(!s.iterator().hasNext ||
       Files.list(dir).count() == 0)
     finally s.close()
+  }
+
+  test("a frame whose estimate lies low is refused by the fetch's " +
+    "bound in one job that holds at most the bound") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.graft.{DriverFetch, JobCount}
+    // one input row exploded to 10^6: the optimizer estimates the
+    // frame at one row's bytes, far under the 16 MB gate
+    val lying = spark.range(1)
+      .select(explode(sequence(col("id"), col("id") + 999999L)).as("id"))
+    assert(lying.queryExecution.optimizedPlan.stats.sizeInBytes < 1024)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => results.add(m.resultSize))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val dir = Files.createTempDirectory("lp-lying")
+      val (wrote, jobs) = JobCount.of(spark)(LocalParquet.tryWrite(lying, dir))
+      assert(!wrote && jobs == 1)
+      assert(Files.list(dir).count() == 0)
+      // the one task stopped one row past the bound: its result is the
+      // bound's rows (16 bytes each, plus a 4-byte length) and the
+      // task's metrics, not 10^6 rows (JobCount drained the listener bus)
+      val held = results.asScala.max
+      assert(held < (DriverFetch.MaxRows + 1) * 20L + 65536, s"$held bytes")
+      // across partitions: the driver cancels once the sum passes the
+      // bound, before every partition has run
+      results.clear()
+      val (rows, jobs2) = JobCount.of(spark)(DriverFetch.rows(
+        spark.range(0, 100000, 1, 50).toDF("id"), maxRows = 5000))
+      assert(rows.isEmpty && jobs2 == 1)
+      assert(results.size < 50, s"${results.size} of 50 tasks ran")
+      // under the bound, the rows come back whole
+      assert(DriverFetch.rows(spark.range(0, 4000, 1, 7).toDF("id"),
+        maxRows = 5000).get.map(_.getLong(0)).sorted.toSeq == (0L until 4000L))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("the tiny write replaces what its directory held") {
+    val dir = Files.createTempDirectory("lp-replace")
+    Files.write(dir.resolve("part-stale.parquet"), Array[Byte](1, 2, 3))
+    assert(LocalParquet.tryWrite(Seq((1L, "a")).toDF("k", "v"), dir))
+    val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+      .filterNot(_.startsWith(".")).toSeq
+    assert(names.size == 1 && !names.contains("part-stale.parquet"), names)
+    assert(spark.read.parquet(dir.toString).as[(Long, String)].collect()
+      .toSeq == Seq((1L, "a")))
   }
 
   test("a snapshot table written through the tiny path serves reads, " +
